@@ -65,7 +65,8 @@ object SparkEntry {
     registries.iterator.map(_.queries).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. Every key has a twin (RegistrySpec checks
+    * that the two key sets match). */
   lazy val oracleSql: Map[String, String] =
     registries.iterator.map(_.oracleSql).reduce(_ ++ _)
 }

@@ -3,7 +3,7 @@ package graft.api
 import graft.analyze.{Analyzer, Html}
 import graft.index.{IndexWriter, InvertedIndex}
 import graft.io.TableIO
-import graft.query.{BooleanQuery, QueryFrontend, Search}
+import graft.query.{Bm25, BooleanQuery, QueryFrontend, Search, Wand}
 import graft.stats.Stats
 import graft.streaming.IncrementalIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -157,7 +157,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
       indexed = true
       sinceCheckpoint = 0
       persistedDir = None // any previously attached snapshot is superseded
-      cache.clear() // a rebuilt index invalidates every cached response
+      invalidateResponses() // a rebuilt index invalidates every cached response
       true
     } finally inFlight.set(false)
   }
@@ -248,7 +248,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
           // with its frozen stats until the next mutation
           persistedDir = Some(tableDir)
           persistedCfg = cfg
-          cache.clear()
+          invalidateResponses()
         }
         true
       } finally {
@@ -338,13 +338,24 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
       IncrementalIndex.compactState(store, spark)
     invalidateTables()
     persistedDir = None // the compressed snapshot no longer matches the LSM
-    cache.clear() // cached responses may cite the replaced/deleted doc
+    invalidateResponses() // cached responses may cite the replaced/deleted doc
     true
   }
 
   // 60s TTL result cache (reference: SearchServiceImpl.outdated)
   private val cache = new java.util.concurrent.ConcurrentHashMap[(String, Option[String], Int, Int, String), (Long, SearchResponse)]()
   val cacheTtlMs = 60000L
+  /** bumped by every mutation, under the engine lock: a search caches its
+    * response only if the generation it snapshotted is still current */
+  private var generation = 0L
+  /** test seam: runs between computing a search response and caching it */
+  @volatile private[graft] var beforeCachePut: () => Unit = () => ()
+
+  /** every mutation calls this under the engine lock */
+  private def invalidateResponses(): Unit = {
+    generation += 1
+    cache.clear()
+  }
 
   /** `lang` picks the query-analysis branch (stoplist/normalizer — "ru"
     * routes through the Cyrillic chain) and must match how the corpus was
@@ -382,13 +393,13 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
   def setAuthorityPrior(prior: DataFrame, beta: Double = 0.5): Unit = synchronized {
     authorityPrior.foreach(_._1.unpersist())
     authorityPrior = Some((prior.select(col("doc_id"), col("pr")).cache(), beta))
-    cache.clear()
+    invalidateResponses()
   }
 
   def clearAuthorityPrior(): Unit = synchronized {
     authorityPrior.foreach(_._1.unpersist())
     authorityPrior = None
-    cache.clear()
+    invalidateResponses()
   }
 
   /** Restore a persisted prior (the `prior` aux artifact written by
@@ -404,8 +415,17 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     val now = System.currentTimeMillis()
     val hit = cache.get(key)
     if (hit != null && now - hit._1 < cacheTtlMs) return hit._2
-    val resp = doSearch(query, site, offset, limit, lang)
-    cache.put(key, (now, resp))
+    // one coherent snapshot: corpus and tables are reassigned together by
+    // mutators (under the same lock), so reading them under it prevents a
+    // concurrent indexPage from pairing new corpus content with old
+    // postings mid-search
+    val (corpus, t, pDir, prior, gen) =
+      synchronized { (this.corpus, tables, persistedDir, authorityPrior, generation) }
+    val resp = doSearch(corpus, t, pDir, prior, query, site, offset, limit, lang)
+    beforeCachePut()
+    // a mutation since the snapshot has made this response stale: it still
+    // answers this call, but it must not outlive the mutation in the cache
+    synchronized { if (generation == gen) cache.put(key, (now, resp)) }
     resp
   }
 
@@ -436,12 +456,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     val total = Search.conjunctive(t.postings, kept).count()
     val top = Search.bm25TopKAfter(t.postings, t.docStats, dfs, t.nDocs,
       t.avgDl, limit, afterScore, afterDoc)
-    val items = Search.decorate(corpus, top, dfs.keySet).collect().map { r =>
-      SearchItem(r.getAs[String]("repo"), r.getAs[String]("repo"),
-        r.getAs[String]("path"), r.getAs[String]("title"),
-        r.getAs[String]("snippet"), r.getAs[Double]("score"))
-    }
-    SearchResponse(result = true, total, items.toSeq, null)
+    SearchResponse(result = true, total, items(corpus, top, dfs.keySet), null)
   }
 
   /** Boolean-tree search (AND/OR/NOT, [[graft.query.BooleanQuery]]) —
@@ -483,21 +498,13 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     val total = BooleanQuery.matches(t.postings, q).count()
     if (total == 0) return SearchResponse(result = true, 0, Nil, null)
     val top = BooleanQuery.topK(t.postings, t.docStats, dfs, t.nDocs, t.avgDl, q, limit)
-    val items = Search.decorate(corpus, top, dfs.keySet).collect().map { r =>
-      SearchItem(r.getAs[String]("repo"), r.getAs[String]("repo"),
-        r.getAs[String]("path"), r.getAs[String]("title"),
-        r.getAs[String]("snippet"), r.getAs[Double]("score"))
-    }
-    SearchResponse(result = true, total, items.toSeq, null)
+    SearchResponse(result = true, total, items(corpus, top, dfs.keySet), null)
   }
 
-  private def doSearch(query: String, site: Option[String],
-                       offset: Int, limit: Int, lang: String): SearchResponse = {
-    // one coherent snapshot: corpus and tables are reassigned together by
-    // mutators (under the same lock), so reading them under it prevents a
-    // concurrent indexPage from pairing new corpus content with old
-    // postings mid-search
-    val (corpus, t, pDir) = synchronized { (this.corpus, tables, persistedDir) }
+  private def doSearch(corpus: DataFrame, t: InvertedIndex.Tables, pDir: Option[String],
+                       prior: Option[(DataFrame, Double)], query: String,
+                       site: Option[String], offset: Int, limit: Int,
+                       lang: String): SearchResponse = {
     // BOTH sides analyze through the same per-lang lexicon (reference
     // lemmatizes query and index alike: SearcherPage.java:39,
     // IndexingServiceImpl.java:144-155)
@@ -521,62 +528,83 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
         corpus.filter(col("repo") === r).select("doc_id"), Seq("doc_id"), "left_semi")
       case None => t.postings
     }
-    // FULL result-set size before pagination — the reference's response
-    // count is resultSearch.size(), not the page length
-    // (SearchServiceImpl.java:90); a UI pager needs the total
-    val total = Search.conjunctive(scoped, kept).count()
-    if (total == 0) return SearchResponse(result = true, 0, Nil, null)
-    // reference quirk (SearchServiceImpl.java:101-118): an offset at or
-    // past the end of the result list clamps to the LAST element rather
-    // than returning an empty page. Dataset.offset takes an Int; clamp so
-    // a >2^31-row match count can't become a negative offset.
-    val (effOffset, effLimit) =
-      if (offset > 0 && offset >= total)
-        (math.min(total - 1, Int.MaxValue.toLong - 1).toInt, 1)
-      else (offset, limit)
     // rank tier: a committed compressed snapshot (startIndexingPersisted,
     // not yet invalidated by a mutation) serves global queries through the
     // block-max WAND path with the snapshot's FROZEN stats (_meta.json) —
     // rank-identical to the DataFrame aggregate by construction (shared
     // formula + tie-breaks; asserted in SearchEngineSpec). Site-scoped
     // queries stay on the DataFrame path (shards are not repo-scoped).
-    val prior = authorityPrior
-    val top = pDir match {
-      case Some(dir) if site.isEmpty =>
-        val meta = TableIO.readMeta(dir).get
-        val idfs = dfs.map { case (tm, d) => tm -> graft.query.Bm25.idfS(d, meta.nDocs) }
-        def wandTopK(k: Int) = graft.query.Wand.topK(
-          IndexWriter.readForTerms(spark, dir, kept, persistedCfg),
-          idfs, meta.avgDl, k)
-        prior match {
-          case Some((p, beta)) =>
+    val wandShards = pDir.filter(_ => site.isEmpty).map { dir =>
+      val meta = TableIO.readMeta(dir).get
+      val idfs = dfs.map { case (tm, d) => tm -> Bm25.idfS(d, meta.nDocs) }
+      (IndexWriter.readForTerms(spark, dir, kept, persistedCfg), idfs, meta.avgDl)
+    }
+    // `count` is the FULL result-set size before pagination — the
+    // reference's response count is resultSearch.size(), not the page
+    // length (SearchServiceImpl.java:90); a UI pager needs the total
+    val (total, top) = prior match {
+      case None =>
+        // ONE ranking action: the count + top-k kernel returns the total
+        // and the best offset + limit rows together. All of them are kept
+        // whenever the offset clamp fires, so the last row is present.
+        val ranked = wandShards match {
+          case Some((shards, idfs, avgDl)) =>
+            Wand.countTopK(shards, idfs, avgDl, saturatedAdd(offset, limit))
+          case None =>
+            Search.countTopK(Search.conjunctiveScores(scoped, t.docStats, dfs, t.nDocs, t.avgDl),
+              saturatedAdd(offset, limit))
+        }
+        val (o, l) = clampPage(offset, limit, ranked.count)
+        // decorate only the ≤ limit winners, as a small local frame
+        import spark.implicits._
+        val page = ranked.ranked.iterator.drop(o).take(l).zipWithIndex
+          .map { case (h, i) => (o + i + 1, h.docId, h.score) }.toSeq
+        (ranked.count, page.toDF("rank", "doc_id", "score"))
+      case Some((p, beta)) =>
+        val total = Search.conjunctive(scoped, kept).count()
+        val (o, l) = clampPage(offset, limit, total)
+        val top = wandShards match {
+          case Some((shards, idfs, avgDl)) =>
             // two-stage ranking: WAND retrieves C candidates by pure BM25
             // (an upper bound of the blended score, Search.rerankWithPrior
             // doc), the prior reranks those C rows only
-            val c = math.max(8 * (effOffset + effLimit), 64)
-            Search.rerankWithPrior(wandTopK(c), p, beta, effLimit, effOffset)
+            val c = math.max(math.min(8L * saturatedAdd(o, l), Int.MaxValue.toLong).toInt, 64)
+            Search.rerankWithPrior(Wand.topK(shards, idfs, avgDl, c), p, beta, l, o)
           case None =>
-            wandTopK(effOffset + effLimit).filter(col("rank") > effOffset)
-        }
-      case _ =>
-        prior match {
-          case Some((p, beta)) =>
             Search.blendTopK(scoped, t.docStats, dfs, t.nDocs, t.avgDl, p,
-                effOffset + effLimit, beta)
-              .filter(col("rank") > effOffset)
+                saturatedAdd(o, l), beta)
+              .filter(col("rank") > o)
               .withColumnRenamed("blend", "score")
-          case None =>
-            Search.bm25TopK(scoped, t.docStats, dfs, t.nDocs, t.avgDl, effLimit, effOffset)
         }
+        (total, top)
     }
-    val rows = Search.decorate(corpus, top, dfs.keySet).collect()
-    val items = rows.map { r =>
-      SearchItem(r.getAs[String]("repo"), r.getAs[String]("repo"),
-        r.getAs[String]("path"), r.getAs[String]("title"),
-        r.getAs[String]("snippet"), r.getAs[Double]("score"))
-    }
-    SearchResponse(result = true, total, items.toSeq, null)
+    if (total == 0) return SearchResponse(result = true, 0, Nil, null)
+    SearchResponse(result = true, total, items(corpus, top, dfs.keySet), null)
   }
+
+  /** the decorated page of `top` (rank, doc_id, score), in rank order: the
+    * ≤ k rows are sorted here, on the driver, not by a distributed sort */
+  private def items(corpus: DataFrame, top: DataFrame, terms: Set[String]): Seq[SearchItem] =
+    Search.decorateUnsorted(corpus, top, terms).collect()
+      .sortBy(_.getAs[Number]("rank").longValue)
+      .map { r =>
+        SearchItem(r.getAs[String]("repo"), r.getAs[String]("repo"),
+          r.getAs[String]("path"), r.getAs[String]("title"),
+          r.getAs[String]("snippet"), r.getAs[Double]("score"))
+      }.toSeq
+
+  /** offset + limit clamped to [0, Int.MaxValue]: the heap size a page
+    * needs, known before the match count */
+  private def saturatedAdd(offset: Int, limit: Int): Int =
+    math.max(0L, math.min(offset.toLong + limit, Int.MaxValue.toLong)).toInt
+
+  /** reference quirk (SearchServiceImpl.java:101-118): an offset at or past
+    * the end of the result list clamps to the LAST element rather than
+    * returning an empty page; the page offset stays below Int.MaxValue so
+    * a >2^31-row match count can't overflow it */
+  private def clampPage(offset: Int, limit: Int, total: Long): (Int, Int) =
+    if (offset > 0 && offset >= total) (math.min(total - 1, Int.MaxValue.toLong - 1).toInt, 1)
+    else (offset, limit)
 
   /** per-repo (repo, pages, lemmas) rows + the ALL total, computed from
     * STORE tables only (docs log + signed per-repo df deltas) — a status
@@ -628,7 +656,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
       lastErr = null
       indexed = true
       sinceCheckpoint = 0
-      cache.clear()
+      invalidateResponses()
     }
 }
 

@@ -2,7 +2,7 @@ package graft.index
 
 import graft.io.TableIO
 import graft.query.Bm25
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One encoded posting run: the postings of `term` restricted to docId
@@ -491,7 +491,8 @@ object IndexWriter {
                    cfg: Config = Config()): Dataset[ShardPosting] = {
     import spark.implicits._
     val buckets = terms.map(bucketOf(_, cfg.nBuckets)).distinct
-    spark.read.parquet(s"$tableDir/data")
+    // the schema is known: no footer-reading inference job per query
+    spark.read.schema(Encoders.product[ShardPosting].schema).parquet(s"$tableDir/data")
       .filter(col("bucket").isin(buckets.map(x => x: Any): _*))
       .filter(col("term").isin(terms.map(x => x: Any): _*))
       .select("term", "shard", "bucket", "numDocs", "maxTfNorm", "bytes")

@@ -39,11 +39,11 @@ object Search {
 
   /** Shared conjunctive BM25 candidate scoring: one IN-filtered postings
     * scan → docStats join → hash aggregate → n_terms = |q| conjunction.
-    * Returns (doc_id, score). Used by bm25TopK and blendTopK so the
-    * candidate semantics cannot diverge. */
-  private def conjunctiveScores(postings: DataFrame, docStats: DataFrame,
-                                dfs: Map[String, Long], nDocs: Long,
-                                avgDl: Double): DataFrame = {
+    * Returns (doc_id, score). Used by bm25TopK, blendTopK and the facade's
+    * count + top-k pass so the candidate semantics cannot diverge. */
+  def conjunctiveScores(postings: DataFrame, docStats: DataFrame,
+                        dfs: Map[String, Long], nDocs: Long,
+                        avgDl: Double): DataFrame = {
     val terms = dfs.keys.toSeq.sorted
     val dfCol = dfs.foldLeft(lit(0L)) { case (acc, (t, d)) =>
       when(col("term") === t, lit(d)).otherwise(acc)
@@ -66,6 +66,67 @@ object Search {
                               offset: Int = 0): DataFrame =
     scored.orderBy(sort: _*).offset(offset).limit(k)
       .withColumn("rank", row_number().over(Window.orderBy(sort: _*)) + offset)
+
+  /** One ranked (doc_id, score) row of the count + top-k kernel. */
+  final case class Scored(docId: Long, score: Double)
+
+  /** The rank order of [[rankTopK]] (score desc, doc_id asc) as a
+    * comparator: greater = ranks better. */
+  private object RankOrder extends java.util.Comparator[Scored] with Serializable {
+    def compare(a: Scored, b: Scored): Int =
+      if (a.score > b.score) 1
+      else if (a.score < b.score) -1
+      else java.lang.Long.compare(b.docId, a.docId)
+  }
+
+  /** The count + top-k kernel both serve tiers rank through: counts every
+    * candidate offered and keeps the best `k` in the rank order of
+    * [[rankTopK]]. The heap root is the worst kept row. Storage grows with
+    * the rows kept and is never pre-sized to `k`, so a saturated `k` costs
+    * only what the candidate set holds. Partials merge with [[merge]]. */
+  final class TopK(val k: Int) extends Serializable {
+    require(k >= 0, s"k must be >= 0, got $k")
+    /** candidates counted so far, kept or not */
+    var count = 0L
+    private val heap = new java.util.PriorityQueue[Scored](RankOrder)
+
+    /** true once `k` rows are kept: a candidate must then beat [[theta]] */
+    def full: Boolean = heap.size >= k
+    /** the score a candidate must reach to enter; +∞ when k = 0 */
+    def theta: Double =
+      if (!full) Double.NegativeInfinity
+      else if (k == 0) Double.PositiveInfinity
+      else heap.peek.score
+
+    /** count one candidate and keep it if it ranks in the best `k` */
+    def offer(docId: Long, score: Double): Unit = { count += 1; keep(docId, score) }
+
+    /** keep a row, without counting it, if it ranks in the best `k` */
+    def keep(docId: Long, score: Double): Unit =
+      if (heap.size < k) heap.add(Scored(docId, score))
+      else if (k > 0 && RankOrder.compare(Scored(docId, score), heap.peek) > 0) {
+        heap.poll(); heap.add(Scored(docId, score))
+      }
+
+    def merge(o: TopK): TopK = {
+      count += o.count
+      o.heap.forEach(s => keep(s.docId, s.score))
+      this
+    }
+
+    /** the kept rows, best first */
+    def ranked: Array[Scored] =
+      heap.toArray(new Array[Scored](0)).sortWith((a, b) => RankOrder.compare(a, b) > 0)
+  }
+
+  /** `(count, best k)` of a (doc_id, score) relation in ONE action: a
+    * [[TopK]] per partition, merged with treeAggregate. The count comes
+    * back in the action's result, so a retried task cannot add to it. */
+  def countTopK(scored: DataFrame, k: Int): TopK =
+    scored.select(col("doc_id"), col("score")).rdd
+      .treeAggregate(new TopK(k))(
+        (acc, r) => { acc.offer(r.getLong(0), r.getDouble(1)); acc },
+        (a, b) => a.merge(b))
 
   /** BM25-scored conjunctive top-k: (rank, doc_id, score).
     * dfs: term -> df (from the driver-side plan — terms are few, so df
@@ -740,7 +801,14 @@ object Search {
     * identity text + path-as-title — both branches are codegen'd Columns
     * evaluated on the final k rows only. */
   def decorate(corpus: DataFrame, top: DataFrame, terms: Set[String],
-               htmlAware: Boolean = true): DataFrame = {
+               htmlAware: Boolean = true): DataFrame =
+    decorateUnsorted(corpus, top, terms, htmlAware).orderBy("rank")
+
+  /** [[decorate]] without its final sort by rank, for a caller that
+    * collects the ≤ k rows and orders them itself: a distributed sort of k
+    * rows costs a range-sampling job and a shuffle. */
+  def decorateUnsorted(corpus: DataFrame, top: DataFrame, terms: Set[String],
+                       htmlAware: Boolean = true): DataFrame = {
     val snip = Snippets.makeSnippetUdf(terms)
     val title =
       if (htmlAware) graft.analyze.Html.titleOf(col("content"), col("path"))
@@ -751,7 +819,6 @@ object Search {
       .withColumn("title", title)
       .withColumn("snippet", snip(snipSrc, col("lang")))
       .select("rank", "doc_id", "repo", "path", "title", "snippet", "score")
-      .orderBy("rank")
   }
 
   /** Authority-blended ranking: BM25 relevance × a query-independent static

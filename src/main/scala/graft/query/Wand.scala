@@ -1,8 +1,7 @@
 package graft.query
 
-import graft.index.{IndexWriter, PostingCodec, ShardPosting}
-import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
+import graft.index.{PostingCodec, ShardPosting}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Conjunctive BM25 top-k over the compressed sharded index with block-max
@@ -25,8 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Wand {
 
-  case class Hit(shard: Int, docId: Long, score: Double)
-
   /** Exact conjunctive top-k per shard. `idfs` must be keyed by every query
     * term; `avgDl` must be the value the index was encoded with; returns
     * (rank, doc_id, score) global top-k, ties docId asc. */
@@ -34,66 +31,83 @@ object Wand {
     val spark = shards.sparkSession
     import spark.implicits._
     val idfB = spark.sparkContext.broadcast(idfs)
-    val nTerms = idfs.size
-    val hits = shards.groupByKey(_.shard).flatMapGroups { (shard, it) =>
-      val blobs = it.toArray
-      if (blobs.length < nTerms) Iterator.empty // some term absent from shard => no conjunction
-      else {
-        val idf = idfB.value
-        // rarest-first: fewest docs drives the intersection
-        val ordered = blobs.sortBy(_.numDocs)
-        val cursors = ordered.map(b => (idf(b.term), new PostingCodec.Cursor(new PostingCodec.Decoded(b.bytes))))
-        // top-k heap: root = current worst of the best k
-        implicit val ord: Ordering[Hit] = Ordering.by(h => (-h.score, h.docId))
-        val heap = new scala.collection.mutable.PriorityQueue[Hit]()(ord)
-        var theta = Double.NegativeInfinity
-        val lead = cursors(0)._2
-        while (!lead.exhausted && !cursors.exists(_._2.exhausted)) {
-          val cand = lead.docId
-          var aligned = true
-          var i = 1
-          while (aligned && i < cursors.length) {
-            val c = cursors(i)._2
-            c.skipTo(cand)
-            if (c.exhausted) { aligned = false }
-            else if (c.docId != cand) {
-              // candidate dead; restart from the larger docId
-              if (c.docId > cand) lead.skipTo(c.docId)
-              aligned = false
-            }
-            i += 1
-          }
-          if (aligned) {
-            // block-max θ check before exact scoring
-            var ub = 0.0
-            var j = 0
-            while (j < cursors.length) { ub += cursors(j)._1 * cursors(j)._2.blockMaxTfNorm; j += 1 }
-            // `>= theta` (not `>`) so equal-score smaller-docId candidates
-            // still get scored and can win the tie-break
-            if (heap.size < k || ub >= theta) {
-              var score = 0.0
-              j = 0
-              while (j < cursors.length) {
-                val (w, c) = cursors(j)
-                score += w * Bm25.tfNormS(c.tf, c.dl, avgDl)
-                j += 1
-              }
-              val h = Hit(shard, cand, score)
-              if (heap.size < k) { heap.enqueue(h); if (heap.size == k) theta = heap.head.score }
-              else if (score > theta || (score == theta && cand < heap.head.docId)) {
-                heap.dequeue(); heap.enqueue(h); theta = heap.head.score
-              }
-            }
-            lead.next()
-          }
-        }
-        heap.iterator.map(h => (h.docId, h.score))
-      }
+    val hits = shards.groupByKey(_.shard).flatMapGroups { (_, it) =>
+      intersectShard(it.toArray, idfB.value, avgDl, k).ranked.iterator.map(h => (h.docId, h.score))
     }.toDF("doc_id", "score")
-    val top = hits.orderBy(desc("score"), asc("doc_id")).limit(k)
-    top.withColumn("rank", row_number().over(Window.orderBy(desc("score"), asc("doc_id"))))
-      .select(col("rank"), col("doc_id"), col("score"))
+    ranked(hits, k)
   }
+
+  /** The full conjunctive match count AND the global top-k in ONE action:
+    * each shard's [[intersectShard]] partial is merged with treeAggregate,
+    * so the count comes back in the action's result. Same candidates,
+    * scores and rank order as [[topK]]. */
+  def countTopK(shards: Dataset[ShardPosting], idfs: Map[String, Double],
+                avgDl: Double, k: Int): Search.TopK = {
+    val spark = shards.sparkSession
+    import spark.implicits._
+    val idfB = spark.sparkContext.broadcast(idfs)
+    shards.groupByKey(_.shard)
+      .mapGroups((_, it) => intersectShard(it.toArray, idfB.value, avgDl, k))(
+        Encoders.javaSerialization[Search.TopK])
+      .rdd.treeAggregate(new Search.TopK(k))((a, b) => a.merge(b), (a, b) => a.merge(b))
+  }
+
+  /** The conjunctive intersection of one shard's blobs: `count` is every
+    * aligned candidate, taken BEFORE the block-max θ check — θ only skips
+    * scoring, never alignment, so the count is exact; the kept rows are the
+    * shard's best `k`. */
+  private def intersectShard(blobs: Array[ShardPosting], idf: Map[String, Double],
+                             avgDl: Double, k: Int): Search.TopK = {
+    val acc = new Search.TopK(k)
+    // some term absent from shard => no conjunction
+    if (blobs.length < idf.size) return acc
+    // rarest-first: fewest docs drives the intersection
+    val ordered = blobs.sortBy(_.numDocs)
+    val cursors = ordered.map(b => (idf(b.term), new PostingCodec.Cursor(new PostingCodec.Decoded(b.bytes))))
+    val lead = cursors(0)._2
+    while (!lead.exhausted && !cursors.exists(_._2.exhausted)) {
+      val cand = lead.docId
+      var aligned = true
+      var i = 1
+      while (aligned && i < cursors.length) {
+        val c = cursors(i)._2
+        c.skipTo(cand)
+        if (c.exhausted) { aligned = false }
+        else if (c.docId != cand) {
+          // candidate dead; restart from the larger docId
+          if (c.docId > cand) lead.skipTo(c.docId)
+          aligned = false
+        }
+        i += 1
+      }
+      if (aligned) {
+        acc.count += 1
+        // block-max θ check before exact scoring
+        var ub = 0.0
+        var j = 0
+        while (j < cursors.length) { ub += cursors(j)._1 * cursors(j)._2.blockMaxTfNorm; j += 1 }
+        // `>= theta` (not `>`) so equal-score smaller-docId candidates
+        // still get scored and can win the tie-break
+        if (!acc.full || ub >= acc.theta) {
+          var score = 0.0
+          j = 0
+          while (j < cursors.length) {
+            val (w, c) = cursors(j)
+            score += w * Bm25.tfNormS(c.tf, c.dl, avgDl)
+            j += 1
+          }
+          acc.keep(cand, score)
+        }
+        lead.next()
+      }
+    }
+    acc
+  }
+
+  /** global merge of the per-shard top-k lists: TakeOrdered + rank stamp */
+  private def ranked(hits: DataFrame, k: Int): DataFrame =
+    Search.rankTopK(hits, k, Seq(desc("score"), asc("doc_id")))
+      .select(col("rank"), col("doc_id"), col("score"))
 
   /** Classic DISJUNCTIVE block-max WAND (Broder et al. 2003 + block-max
     * refinement, Ding & Suel 2011): OR-semantics top-k — any doc containing
@@ -114,7 +128,7 @@ object Wand {
     val spark = shards.sparkSession
     import spark.implicits._
     val idfB = spark.sparkContext.broadcast(idfs)
-    val hits = shards.groupByKey(_.shard).flatMapGroups { (shard, it) =>
+    val hits = shards.groupByKey(_.shard).flatMapGroups { (_, it) =>
       val idf = idfB.value
       final class C(val w: Double, val cur: PostingCodec.Cursor, val termUB: Double)
       val cursors = scala.collection.mutable.ArrayBuffer.from(
@@ -122,9 +136,7 @@ object Wand {
           val dec = new PostingCodec.Decoded(b.bytes)
           new C(idf(b.term), new PostingCodec.Cursor(dec), idf(b.term) * dec.maxTfNorm)
         }.filter(!_.cur.exhausted))
-      implicit val ord: Ordering[Hit] = Ordering.by(h => (-h.score, h.docId))
-      val heap = new scala.collection.mutable.PriorityQueue[Hit]()(ord)
-      var theta = Double.NegativeInfinity
+      val top = new Search.TopK(k)
       while (cursors.nonEmpty) {
         val sorted = cursors.sortInPlace()(Ordering.by(_.cur.docId))
         // pivot: first index where the prefix UB could reach theta
@@ -133,7 +145,7 @@ object Wand {
         var i = 0
         while (pivot < 0 && i < sorted.length) {
           acc += sorted(i).termUB
-          if (heap.size < k || acc >= theta) pivot = i
+          if (!top.full || acc >= top.theta) pivot = i
           i += 1
         }
         if (pivot < 0) {
@@ -150,7 +162,7 @@ object Wand {
             var bmUB = 0.0
             var j = 0
             while (j <= pivot) { bmUB += sorted(j).w * sorted(j).cur.blockMaxTfNorm; j += 1 }
-            if (heap.size < k || bmUB >= theta) {
+            if (!top.full || bmUB >= top.theta) {
               var score = 0.0
               j = 0
               while (j < sorted.length && sorted(j).cur.docId == pivotDoc) {
@@ -158,11 +170,7 @@ object Wand {
                 score += c.w * Bm25.tfNormS(c.cur.tf, c.cur.dl, avgDl)
                 j += 1
               }
-              val h = Hit(shard, pivotDoc, score)
-              if (heap.size < k) { heap.enqueue(h); if (heap.size == k) theta = heap.head.score }
-              else if (score > theta || (score == theta && pivotDoc < heap.head.docId)) {
-                heap.dequeue(); heap.enqueue(h); theta = heap.head.score
-              }
+              top.keep(pivotDoc, score)
             }
             // advance every cursor sitting on pivotDoc
             var j2 = 0
@@ -176,11 +184,9 @@ object Wand {
           cursors.filterInPlace(!_.cur.exhausted)
         }
       }
-      heap.iterator.map(h => (h.docId, h.score))
+      top.ranked.iterator.map(h => (h.docId, h.score))
     }.toDF("doc_id", "score")
-    val top = hits.orderBy(desc("score"), asc("doc_id")).limit(k)
-    top.withColumn("rank", row_number().over(Window.orderBy(desc("score"), asc("doc_id"))))
-      .select(col("rank"), col("doc_id"), col("score"))
+    ranked(hits, k)
   }
 
   /** Disjunctive BM25 top-k via MaxScore pruning (Turtle & Flood 1995,
@@ -210,7 +216,7 @@ object Wand {
     val spark = shards.sparkSession
     import spark.implicits._
     val idfB = spark.sparkContext.broadcast(idfs)
-    val hits = shards.groupByKey(_.shard).flatMapGroups { (shard, it) =>
+    val hits = shards.groupByKey(_.shard).flatMapGroups { (_, it) =>
       val idf = idfB.value
       final class C(val w: Double, val cur: PostingCodec.Cursor, val termUB: Double)
       // static MaxScore layout: ascending term upper bound
@@ -219,9 +225,7 @@ object Wand {
         new C(idf(b.term), new PostingCodec.Cursor(dec), idf(b.term) * dec.maxTfNorm)
       }.filter(!_.cur.exhausted).sortBy(_.termUB)
       val live = Array.fill(cs.length)(true)
-      implicit val ord: Ordering[Hit] = Ordering.by(h => (-h.score, h.docId))
-      val heap = new scala.collection.mutable.PriorityQueue[Hit]()(ord)
-      var theta = Double.NegativeInfinity
+      val top = new Search.TopK(k)
       val prefixUB = new Array[Double](cs.length + 1)
       var done = cs.isEmpty
       while (!done) {
@@ -232,8 +236,8 @@ object Wand {
         }
         // largest prefix whose total bound is STRICTLY below θ is non-essential
         var firstEss = 0
-        if (heap.size == k)
-          while (firstEss < cs.length && prefixUB(firstEss + 1) < theta) firstEss += 1
+        if (top.full)
+          while (firstEss < cs.length && prefixUB(firstEss + 1) < top.theta) firstEss += 1
         // candidate: min docId across live essential cursors
         var cand = Long.MaxValue
         i = firstEss
@@ -256,10 +260,10 @@ object Wand {
           // probe non-essential lists in descending-UB order, early exit
           // the moment even full credit for the unprobed rest can't reach θ
           var j = firstEss - 1
-          var viable = heap.size < k || score + prefixUB(firstEss) >= theta
+          var viable = !top.full || score + prefixUB(firstEss) >= top.theta
           while (viable && j >= 0) {
             if (live(j)) {
-              if (heap.size == k && score + prefixUB(j + 1) < theta) viable = false
+              if (top.full && score + prefixUB(j + 1) < top.theta) viable = false
               else {
                 val c = cs(j)
                 c.cur.skipTo(cand)
@@ -270,13 +274,7 @@ object Wand {
             }
             j -= 1
           }
-          if (viable) {
-            val h = Hit(shard, cand, score)
-            if (heap.size < k) { heap.enqueue(h); if (heap.size == k) theta = heap.head.score }
-            else if (score > theta || (score == theta && cand < heap.head.docId)) {
-              heap.dequeue(); heap.enqueue(h); theta = heap.head.score
-            }
-          }
+          if (viable) top.keep(cand, score)
           i = firstEss
           while (i < cs.length) {
             if (live(i) && cs(i).cur.docId == cand) {
@@ -287,10 +285,8 @@ object Wand {
           }
         }
       }
-      heap.iterator.map(h => (h.docId, h.score))
+      top.ranked.iterator.map(h => (h.docId, h.score))
     }.toDF("doc_id", "score")
-    val top = hits.orderBy(desc("score"), asc("doc_id")).limit(k)
-    top.withColumn("rank", row_number().over(Window.orderBy(desc("score"), asc("doc_id"))))
-      .select(col("rank"), col("doc_id"), col("score"))
+    ranked(hits, k)
   }
 }

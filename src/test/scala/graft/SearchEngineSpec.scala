@@ -17,6 +17,49 @@ class SearchEngineSpec extends AnyFunSuite {
   }
   lazy val engine = freshEngine()
 
+  /** an engine serving global queries from a committed snapshot (WAND tier) */
+  lazy val persistedEngine: SearchEngine = {
+    val cfg = graft.index.IndexWriter.Config(docsPerShard = 64, nBuckets = 8)
+    val dir = java.nio.file.Files.createTempDirectory("graft-api-persisted").toString
+    val e = new SearchEngine(spark, Corpus.fromDocuments(spark, "/root/testdata/sf0.001"))
+    assert(e.startIndexingPersisted(dir, 1L, cfg, groupSize = 4))
+    assert(e.servesFromPersisted)
+    e
+  }
+
+  /** drain the listener bus (package-private in Scala, public in bytecode) */
+  private def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE).invoke(bus, Long.box(60000L))
+  }
+
+  /** `body`'s result and the number of Spark jobs it started */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    drainListenerBus()
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val v = body
+      drainListenerBus()
+      (v, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** the separate conjunctive count the facade's ranking pass replaces */
+  def conjunctiveCount(e: SearchEngine, q: String, site: Option[String] = None): Long = {
+    import org.apache.spark.sql.functions.col
+    val t = e.tables
+    val kept = graft.query.QueryFrontend.plan(t.termStats, "en", q).terms.map(_.term)
+    val scoped = site.fold(t.postings)(r => t.postings.join(
+      e.corpus.filter(col("repo") === r).select("doc_id"), Seq("doc_id"), "left_semi"))
+    graft.query.Search.conjunctive(scoped, kept).count()
+  }
+
   test("search returns decorated, ranked items") {
     val r = engine.search("spark join", limit = 5)
     // count = TOTAL matches (reference resultSearch.size()); data = the page
@@ -532,5 +575,75 @@ class SearchEngineSpec extends AnyFunSuite {
     val e = new SearchEngine(spark, c)
     assert(e.startIndexingPersisted(dir, 1L, cfg, groupSize = 4))
     assert(e.statistics().pages == 0)
+  }
+
+  test("one ranking job per search: jobs pinned on both tiers; count ≡ Search.conjunctive") {
+    val pe = persistedEngine
+    // warm both tiers so the counts below are steady-state jobs
+    pe.search("hash join", limit = 10)
+    pe.search("hash join", site = Some("src3"), limit = 10)
+    val (global, gJobs) = jobsOf(pe.search("spark join", offset = 10, limit = 10))
+    val (site, sJobs) = jobsOf(pe.search("spark join", site = Some("src3"), limit = 10))
+    val (missing, mJobs) = jobsOf(pe.search("spark warpdrive", limit = 10))
+    assert(global.result && global.data.length == 10 && site.result && site.data.nonEmpty)
+    assert(!missing.result)
+    // 10 global and 12 site-scoped jobs while the count ran as its own pass
+    assert(gJobs <= 5, s"global (WAND tier) search ran $gJobs jobs")
+    assert(sJobs <= 7, s"site-scoped (DataFrame tier) search ran $sJobs jobs")
+    assert(mJobs <= 1, s"missing-term search ran $mJobs jobs")
+    // the kernel's count is the full conjunctive match count: WAND page 2
+    assert(global.count == conjunctiveCount(pe, "spark join"))
+    // WAND offset-past-end clamp: the count stays the total, the page is
+    // the last ranked row
+    val all = pe.search("dup spark", limit = 1000)
+    val past = pe.search("dup spark", offset = 5000, limit = 10)
+    assert(past.count == conjunctiveCount(pe, "dup spark") && past.count == all.count)
+    assert(past.data.map(_.uri) == Seq(all.data.last.uri))
+    // zero-match site-scoped query: the rarest term, searched in a site
+    // none of its docs belong to
+    import org.apache.spark.sql.functions.{col, collect_set, size}
+    val sites = pe.corpus.select("doc_id", "repo")
+    val rare = pe.tables.postings.join(sites, "doc_id").groupBy("term")
+      .agg(collect_set(col("repo")).as("repos"))
+      .orderBy(size(col("repos")), col("term")).head()
+    val other = (sites.select("repo").distinct().collect().map(_.getString(0)).toSet --
+      rare.getSeq[String](1)).min
+    val (zero, zJobs) = jobsOf(pe.search(rare.getString(0), site = Some(other)))
+    assert(zero.result && zero.count == 0 && zero.data.isEmpty)
+    assert(conjunctiveCount(pe, rare.getString(0), Some(other)) == 0)
+    assert(zJobs <= 4, s"zero-match site-scoped search ran $zJobs jobs")
+  }
+
+  test("offset = Int.MaxValue clamps to the last result on both tiers, no overflow") {
+    for ((tier, e) <- Seq("WAND" -> persistedEngine, "DataFrame" -> engine)) {
+      val all = e.search("dup spark", limit = 1000)
+      assert(all.result && all.count == all.data.length && all.count > 1)
+      val past = e.search("dup spark", offset = Int.MaxValue, limit = 20)
+      assert(past.result && past.count == all.count, s"$tier: $past")
+      assert(past.data.map(_.uri) == Seq(all.data.last.uri), s"$tier: clamp row")
+      // offset + limit past Int.MaxValue saturates: every row after offset 1
+      val rest = e.search("dup spark", offset = 1, limit = Int.MaxValue)
+      assert(rest.count == all.count)
+      assert(rest.data.map(_.uri) == all.data.drop(1).map(_.uri), s"$tier: saturated page")
+    }
+  }
+
+  test("a mutation between computing a response and caching it is never served from the cache") {
+    import spark.implicits._
+    val e = freshEngine()
+    val q = "dup"
+    val doc = Seq((9001L, "src0", "doc/9001", "0" * 40, "en", "dup racemarker"))
+      .toDF("doc_id", "repo", "path", "commit", "lang", "content")
+    // force the interleaving: the upsert lands after the search computed
+    // its response on the old snapshot, before that response is cached
+    e.beforeCachePut = () => {
+      e.beforeCachePut = () => ()
+      assert(e.indexPage(doc))
+    }
+    val stale = e.search(q, limit = 1000)
+    assert(!stale.data.exists(_.uri == "doc/9001"))
+    val fresh = e.search(q, limit = 1000)
+    assert(fresh.count == stale.count + 1, "a response computed before the upsert was cached")
+    assert(fresh.data.exists(_.uri == "doc/9001"))
   }
 }
