@@ -4,6 +4,10 @@ import graft.index.InvertedIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Streaming ingestion surface. The reference has no streaming (SURVEY.md
   * §2.10) — its analog is the long-running crawl job with cooperative stop
@@ -27,6 +31,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * or a running sum of signed deltas (term_stats — the old-minus-replaced-
   * plus-new shape of SURVEY.md §2.5 A2). `compact` folds all batches into a
   * fresh base so read fan-in stays bounded.
+  *
+  * Per-table READ cost is one parquet scan over all committed batch dirs
+  * with a known schema — O(1) Spark jobs in log depth, so a live-table
+  * rebuild or a replaced-doc point-read starts as many jobs at depth 2 as
+  * at depth 10 (pinned in StreamingSpec). Past 32 dirs Spark lists them
+  * with one parallel-listing job, which is still one at any depth.
   *
   * Crash contract: all four tables are written BEFORE the pointer moves, so
   * a torn batch is invisible; a replay after a crash recomputes the same
@@ -96,14 +106,49 @@ object IncrementalIndex {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
 
-    /** union of committed batch dirs for `name`, tagged with `_b` */
+    /** union of committed batch dirs for `name`, tagged with `_b`: ONE
+      * parquet scan over the explicit list of committed dirs, with `_b` read
+      * off the `batch=<id>` partition column. The schema is known up front
+      * (fixed shape, or one parquet footer for `docs`), so no
+      * schema-inference job runs: a read costs O(1) Spark jobs in log
+      * depth. The table root is never listed — torn dirs above the pointer
+      * and compacted-away dirs below `base` stay invisible. */
     def readUnion(spark: SparkSession, name: String,
                   before: Long = Long.MaxValue): Option[DataFrame] = {
-      val bs = batches(name, before)
-      if (bs.isEmpty) None
-      else Some(bs.map(b => spark.read.parquet(s"$dir/$name/batch=$b")
-        .withColumn("_b", lit(b))).reduce(_ unionByName _))
+      val paths = batches(name, before).map(b => s"$dir/$name/batch=$b")
+      if (paths.isEmpty) None
+      else Some(spark.read.schema(tableSchemas.getOrElse(name, footerSchema(spark, paths.last)))
+        .option("basePath", s"$dir/$name").parquet(paths: _*)
+        .withColumn("_b", col("batch").cast("long")).drop("batch"))
     }
+  }
+
+  /** schemas of the fixed-shape log tables; `docs` carries the corpus's own */
+  private val tableSchemas: Map[String, StructType] = Map(
+    "postings" -> "doc_id BIGINT, term STRING, tf BIGINT",
+    "doc_ids" -> "doc_id BIGINT",
+    "term_stats" -> "term STRING, ddf BIGINT",
+    "doc_stats" -> "doc_id BIGINT, dl BIGINT",
+    "term_stats_repo" -> "repo STRING, term STRING, ddf BIGINT"
+  ).map { case (t, ddl) => t -> StructType.fromDDL(ddl) }
+
+  /** the Spark schema one batch dir was written with, read from a single
+    * parquet footer in this JVM (no Spark job) */
+  private def footerSchema(spark: SparkSession, batchDir: String): StructType = {
+    val ls = java.nio.file.Files.list(java.nio.file.Paths.get(batchDir))
+    val part = try ls.filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith("part-") && n.endsWith(".parquet")
+    }.findFirst() finally ls.close()
+    require(part.isPresent, s"no parquet part file in $batchDir")
+    val in = HadoopInputFile.fromPath(new Path(part.get.toUri),
+      spark.sparkContext.hadoopConfiguration)
+    val reader = ParquetFileReader.open(in)
+    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")
+    finally reader.close()
+    require(json != null, s"$batchDir was not written by Spark (no row schema in its footer)")
+    DataType.fromJson(json).asInstanceOf[StructType]
   }
 
   /** last-writer-wins mask: keep rows of `df` (carrying `_b`) whose doc_id

@@ -1,5 +1,6 @@
 package graft
 
+import graft.SparkTestSession.jobsOf
 import graft.api.SearchEngine
 import graft.corpus.Corpus
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,29 +26,6 @@ class SearchEngineSpec extends AnyFunSuite {
     assert(e.startIndexingPersisted(dir, 1L, cfg, groupSize = 4))
     assert(e.servesFromPersisted)
     e
-  }
-
-  /** drain the listener bus (package-private in Scala, public in bytecode) */
-  private def drainListenerBus(): Unit = {
-    val sc = spark.sparkContext
-    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-    bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE).invoke(bus, Long.box(60000L))
-  }
-
-  /** `body`'s result and the number of Spark jobs it started */
-  def jobsOf[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    drainListenerBus()
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val v = body
-      drainListenerBus()
-      (v, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   /** the separate conjunctive count the facade's ranking pass replaces */
@@ -612,6 +590,57 @@ class SearchEngineSpec extends AnyFunSuite {
     assert(zero.result && zero.count == 0 && zero.data.isEmpty)
     assert(conjunctiveCount(pe, rare.getString(0), Some(other)) == 0)
     assert(zJobs <= 4, s"zero-match site-scoped search ran $zJobs jobs")
+  }
+
+  test("a replacement indexPage runs as many jobs at LSM depth 3 as at depth 9") {
+    import spark.implicits._
+    val e = freshEngine()
+    def depth = e.store.pointer.map { case (latest, base, _) => latest - base + 1 }.get
+    // upsert k replaces doc k and leaves the log k + 1 batches deep
+    val jobsAt = (1L to 8L).map { id =>
+      val doc = Seq((id, "src0", s"doc/$id", "0" * 40, "en", s"depthmarker$id spark join"))
+        .toDF("doc_id", "repo", "path", "commit", "lang", "content")
+      val (ok, jobs) = jobsOf(e.indexPage(doc))
+      assert(ok)
+      depth -> jobs
+    }.toMap
+    assert(jobsAt.keySet == (2L to 9L).toSet)
+    assert(jobsAt(3L) == jobsAt(9L), s"indexPage jobs by depth: ${jobsAt.toSeq.sorted}")
+    val r = e.search("depthmarker8", limit = 5)
+    assert(r.result && r.count == 1 && r.data.head.uri == "doc/8")
+  }
+
+  test("attach serves a state dir laid out by hand: batch=<id> dirs + a two-field pointer") {
+    import org.apache.spark.sql.functions.{col, count, lit, sum}
+    import java.nio.file.{Files, Paths}
+    // the on-disk contract written without ParquetStateStore: two disjoint
+    // batches of every table, the legacy "<latest> <base>" pointer
+    val corpus = engine.corpus
+    val stateDir = Files.createTempDirectory("graft-handlaid").toString
+    val run = s"$stateDir/run-1"
+    for (b <- 0 to 1) {
+      val half = corpus.filter(col("doc_id") % 2 === b)
+      val post = graft.index.InvertedIndex.tokensByLang(
+          half.withColumn("content", graft.analyze.Html.textOf(col("content"))), Map.empty)
+        .groupBy("doc_id", "repo", "term").agg(count(lit(1)).as("tf"))
+      def lay(name: String, df: org.apache.spark.sql.DataFrame): Unit =
+        df.write.parquet(s"$run/$name/batch=$b")
+      lay("postings", post.select("doc_id", "term", "tf"))
+      lay("doc_ids", half.select("doc_id"))
+      lay("term_stats", post.groupBy("term").agg(count(lit(1)).as("ddf")))
+      lay("doc_stats", post.groupBy("doc_id").agg(sum("tf").as("dl")))
+      lay("docs", half)
+      lay("term_stats_repo", post.groupBy("repo", "term").agg(count(lit(1)).as("ddf")))
+    }
+    Files.writeString(Paths.get(s"$run/_committed"), "1 0")
+    val e = SearchEngine.attach(spark, stateDir)
+    assert(e.corpus.columns.toSeq == corpus.columns.toSeq)
+    val (want, got) = (engine.search("spark join", limit = 10), e.search("spark join", limit = 10))
+    assert(got.result && got.count == want.count)
+    assert(got.data.map(i => (i.uri, i.title, i.snippet, i.relevance)) ==
+      want.data.map(i => (i.uri, i.title, i.snippet, i.relevance)))
+    val (sw, sg) = (engine.statistics(), e.statistics())
+    assert(sg.pages == 500 && sg.pages == sw.pages && sg.lemmas == sw.lemmas)
   }
 
   test("offset = Int.MaxValue clamps to the last result on both tiers, no overflow") {

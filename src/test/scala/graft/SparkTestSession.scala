@@ -16,4 +16,27 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** drain the listener bus (package-private in Scala, public in bytecode) */
+  private def drainListenerBus(): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE).invoke(bus, Long.box(60000L))
+  }
+
+  /** `body`'s result and the number of Spark jobs it started */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    drainListenerBus()
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val v = body
+      drainListenerBus()
+      (v, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }

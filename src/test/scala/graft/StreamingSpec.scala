@@ -1,11 +1,12 @@
 package graft
 
+import graft.SparkTestSession.jobsOf
 import graft.streaming.IncrementalIndex
 import graft.streaming.IncrementalIndex.ParquetStateStore
 import graft.index.InvertedIndex
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** Incremental/streaming ingestion over the LSM-style batch log: merge
   * semantics (idempotent re-index, no df drift), per-batch cost shape
@@ -121,6 +122,64 @@ class StreamingSpec extends AnyFunSuite {
     // and further merges keep working on top of the new base
     IncrementalIndex.upsertDoc(store, docsDf((1L, "r", "en", "delta")))
     assert(dfMap(store) == Map("beta" -> 1L, "delta" -> 1L))
+  }
+
+  /** a store whose log is `depth` batches deep, every batch carrying raw docs */
+  def storeAtDepth(depth: Int): ParquetStateStore = {
+    val store = new ParquetStateStore(Files.createTempDirectory("graft-stream").toString)
+    for (b <- 0 until depth) {
+      val batch = docsDf((b.toLong, s"r${b % 2}", "en", s"alpha beta term$b"),
+        (b + 1L, "r0", "en", "alpha gamma"))
+      IncrementalIndex.mergeBatch(store, batch, rawDocs = Some(batch))
+    }
+    store
+  }
+
+  test("an LSM table read starts as many Spark jobs at depth 2 as at depth 10") {
+    // build + count of each live table: one scan per table, whatever the
+    // number of committed batch dirs behind it
+    def readJobs(store: ParquetStateStore): Map[String, Int] = Map(
+      "postings" -> jobsOf(IncrementalIndex.readPostings(store, spark).get.count())._2,
+      "term_stats" -> jobsOf(IncrementalIndex.readTermStats(store, spark).get.count())._2,
+      "doc_stats" -> jobsOf(IncrementalIndex.readDocStats(store, spark).get.count())._2,
+      "docs" -> jobsOf(IncrementalIndex.readDocs(store, spark).get.count())._2)
+    val (shallow, deep) = (storeAtDepth(2), storeAtDepth(10))
+    assert(shallow.batches("postings").size == 2 && deep.batches("postings").size == 10)
+    val (js, jd) = (readJobs(shallow), readJobs(deep))
+    assert(js == jd, s"jobs per read grew with log depth: depth 2 $js, depth 10 $jd")
+    // and the deep store still reconstructs the right tables
+    assert(IncrementalIndex.readDocs(deep, spark).get.count() == 11)
+    assert(dfMap(deep)("alpha") == 11L && dfMap(deep)("gamma") == 1L)
+  }
+
+  test("reads skip compacted-away and torn dirs; docs keep the corpus columns") {
+    val store = new ParquetStateStore(Files.createTempDirectory("graft-stream").toString)
+    val b0 = docsDf((0L, "r0", "en", "alpha beta"), (1L, "r1", "en", "gamma"))
+    val b1 = docsDf((0L, "r1", "en", "beta beta"))
+    IncrementalIndex.mergeBatch(store, b0, rawDocs = Some(b0))
+    IncrementalIndex.mergeBatch(store, b1, rawDocs = Some(b1))
+    val (p0, d0) = (postSet(store), dfMap(store))
+    IncrementalIndex.compactState(store, spark)
+    // the folded batches stay on disk below the new base ...
+    val tables = Seq("postings", "doc_ids", "term_stats", "doc_stats", "docs", "term_stats_repo")
+    for (t <- tables; b <- Seq(0L, 1L))
+      assert(Files.exists(Paths.get(s"${store.dir}/$t/batch=$b")), s"$t/batch=$b")
+    // ... and a torn dir with a foreign schema sits above the pointer
+    docsDf((9L, "r0", "en", "orphan")).write.parquet(s"${store.dir}/postings/batch=99")
+    // every table reads exactly the base; a leaked signed term_stats delta
+    // would also show as a doubled df
+    for (t <- tables)
+      assert(store.readUnion(spark, t).get.select("_b").distinct()
+        .collect().map(_.getLong(0)).toSeq == Seq(2L), t)
+    assert(postSet(store) == p0 && dfMap(store) == d0)
+    // the docs log reads back with the corpus's own columns, nothing added
+    val docs = IncrementalIndex.readDocs(store, spark).get
+    assert(docs.columns.toSeq == b0.columns.toSeq)
+    assert(docs.collect().map(r => (r.getLong(0), r.getString(1), r.getString(3))).toSet ==
+      Set((0L, "r1", "beta beta"), (1L, "r1", "gamma")))
+    val repoDf = IncrementalIndex.readTermStatsRepo(store, spark).get
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(repoDf == Map(("r1", "beta") -> 1L, ("r1", "gamma") -> 1L))
   }
 
   test("stream ids never collide with compaction/upsert batches (separate id spaces)") {

@@ -11,7 +11,9 @@ for i in $(seq 1 "$ATTEMPTS"); do
   tag="${PREFIX}${i}"
   echo "=== attempt $tag $(date +%H:%M:%S) ==="
   bash tools/bench_refire.sh "$tag" "$MIN" 3600 >> "tools/bench_refire_${tag}.log" 2>&1
-  tot=$(grep -oE '"value":[0-9.]+' "tools/bench_${tag}.json" 2>/dev/null | head -1 | cut -d: -f2)
+  # the bench's top-level "value" field (the total), parsed as JSON
+  tot=$(python3 -c 'import json,sys; print(json.load(open(sys.argv[1]))["value"])' \
+    "tools/bench_${tag}.json" 2>/dev/null)
   echo "attempt $tag: total=${tot:-none}"
   if awk -v t="${tot:-99999}" -v m="$TARGET" 'BEGIN{exit !(t<=m)}'; then
     echo "CLEAN bench landed: $tag (total ${tot}s)"
