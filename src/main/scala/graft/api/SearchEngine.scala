@@ -6,6 +6,7 @@ import graft.io.TableIO
 import graft.query.{Bm25, BooleanQuery, QueryFrontend, Search, Wand}
 import graft.stats.Stats
 import graft.streaming.IncrementalIndex
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -78,8 +79,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
   private var sinceCheckpoint = 0
   /** committed compressed index servable via the WAND path; cleared by any
     * mutation (the persisted snapshot is stale once the live LSM moves) */
-  @volatile private var persistedDir: Option[String] = None
-  private var persistedCfg: IndexWriter.Config = IndexWriter.Config()
+  @volatile private var persisted: Option[SearchEngine.Persisted] = None
   /** query-independent authority prior (doc_id, pr) + blend β; when set,
     * every search blends it into the ranking (Search.blendScores). Survives
     * corpus mutations by design: docs absent from the prior take pr = 0
@@ -107,16 +107,61 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     df.withColumn("content", Html.textOf(col("content")))
 
   // ---- lazily reconstructed live tables (invalidated per mutation) -----
-  private var live: Option[InvertedIndex.Tables] = None
+  /** The query-independent serve state of one index generation: the live
+    * tables, the driver-side term → df dictionary collected once from
+    * their cached term stats, and the per-repo doc-id sets that
+    * site-scoped WAND queries admit through. Built on first use, dropped
+    * together by [[invalidateTables]]. A search holds it (`acquire` /
+    * `release`) so a mutation never destroys a site set under a running
+    * ranking job: the last holder destroys them instead. */
+  private final class Pinned(val tables: InvertedIndex.Tables, corpus: DataFrame) {
+    lazy val dictionary: Map[String, Long] =
+      tables.termStats.select("term", "df").collect()
+        .iterator.map(r => r.getString(0) -> r.getLong(1)).toMap
+    /** repo → its ascending doc ids, broadcast; None for a repo with no docs */
+    private val sites =
+      new java.util.concurrent.ConcurrentHashMap[String, Option[Broadcast[Array[Long]]]]()
+    private var users = 0
+    private var retired = false
+
+    /** only a holder calls this, so no set is built after the last release */
+    def siteDocs(repo: String): Option[Broadcast[Array[Long]]] =
+      sites.computeIfAbsent(repo, r => {
+        val ids = corpus.filter(col("repo") === r).select("doc_id").collect().map(_.getLong(0))
+        if (ids.isEmpty) None
+        else {
+          val b = spark.sparkContext.broadcast(ids.sorted)
+          siteSets.add(b)
+          Some(b)
+        }
+      })
+
+    def acquire(): Unit = synchronized { users += 1 }
+    def release(): Unit = synchronized { users -= 1; if (retired && users == 0) dropSites() }
+    def retire(): Unit = synchronized {
+      tables.postings.unpersist(); tables.termStats.unpersist(); tables.docStats.unpersist()
+      retired = true
+      if (users == 0) dropSites()
+    }
+    private def dropSites(): Unit = {
+      sites.values.forEach(_.foreach { b => siteSets.remove(b); b.destroy() })
+      sites.clear()
+    }
+  }
+  private var live: Option[Pinned] = None
+  /** every site-set broadcast not yet destroyed */
+  private val siteSets = java.util.concurrent.ConcurrentHashMap.newKeySet[Broadcast[Array[Long]]]()
+  private[graft] def liveSiteSets: Set[Broadcast[Array[Long]]] = {
+    import scala.jdk.CollectionConverters._
+    siteSets.asScala.toSet
+  }
 
   private def invalidateTables(): Unit = {
-    live.foreach { t =>
-      t.postings.unpersist(); t.termStats.unpersist(); t.docStats.unpersist(): Unit
-    }
+    live.foreach(_.retire())
     live = None
   }
 
-  private[graft] def tables: InvertedIndex.Tables = synchronized {
+  private def pinned: Pinned = synchronized {
     live.getOrElse {
       val p = IncrementalIndex.readPostings(store, spark).get
         .persist(StorageLevel.MEMORY_AND_DISK_SER)
@@ -125,11 +170,13 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
       val nDocs = corpus.count() // checkpointed blocks — no source rescan
       val avgRow = ds.agg(avg(col("dl"))).head()
       val avgDl = if (avgRow.isNullAt(0)) 0.0 else avgRow.getDouble(0)
-      val t = InvertedIndex.Tables(p, ts, ds, nDocs, avgDl)
-      live = Some(t)
-      t
+      val pin = new Pinned(InvertedIndex.Tables(p, ts, ds, nDocs, avgDl), corpus)
+      live = Some(pin)
+      pin
     }
   }
+
+  private[graft] def tables: InvertedIndex.Tables = pinned.tables
 
   /** full index build — refuses while one is in flight (reference guard,
     * IndexingServiceImpl.java:58-65; the reference answers the start
@@ -156,7 +203,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
       lastErr = null
       indexed = true
       sinceCheckpoint = 0
-      persistedDir = None // any previously attached snapshot is superseded
+      persisted = None // any previously attached snapshot is superseded
       invalidateResponses() // a rebuilt index invalidates every cached response
       true
     } finally inFlight.set(false)
@@ -245,9 +292,9 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
           indexed = true
           sinceCheckpoint = 0
           // the committed compressed index is queryable via the WAND path
-          // with its frozen stats until the next mutation
-          persistedDir = Some(tableDir)
-          persistedCfg = cfg
+          // with its frozen stats (_meta.json, read once here) until the
+          // next mutation
+          persisted = Some(SearchEngine.Persisted(tableDir, cfg, TableIO.readMeta(tableDir).get))
           invalidateResponses()
         }
         true
@@ -258,10 +305,10 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     } finally inFlight.set(false)
   }
 
-  /** true while search() serves global queries from the committed
+  /** true while search() serves queries from the committed
     * compressed snapshot via block-max WAND; false once a mutation
     * invalidates the snapshot (search falls back to the live LSM tables). */
-  def servesFromPersisted: Boolean = persistedDir.isDefined
+  def servesFromPersisted: Boolean = persisted.isDefined
 
   /** GET /api/stopIndexing: arm the cooperative stop flag. Returns false
     * when no indexing run is in flight (the reference's "Индексация не
@@ -337,7 +384,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     if (store.pointer.exists(p => p._1 - p._2 >= compactEvery))
       IncrementalIndex.compactState(store, spark)
     invalidateTables()
-    persistedDir = None // the compressed snapshot no longer matches the LSM
+    persisted = None // the compressed snapshot no longer matches the LSM
     invalidateResponses() // cached responses may cite the replaced/deleted doc
     true
   }
@@ -350,6 +397,8 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
   private var generation = 0L
   /** test seam: runs between computing a search response and caching it */
   @volatile private[graft] var beforeCachePut: () => Unit = () => ()
+  /** test seam: runs between taking a search's snapshot and searching it */
+  @volatile private[graft] var afterSnapshot: () => Unit = () => ()
 
   /** every mutation calls this under the engine lock */
   private def invalidateResponses(): Unit = {
@@ -419,9 +468,14 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     // mutators (under the same lock), so reading them under it prevents a
     // concurrent indexPage from pairing new corpus content with old
     // postings mid-search
-    val (corpus, t, pDir, prior, gen) =
-      synchronized { (this.corpus, tables, persistedDir, authorityPrior, generation) }
-    val resp = doSearch(corpus, t, pDir, prior, query, site, offset, limit, lang)
+    val (corpus, pin, snap, prior, gen) = synchronized {
+      val pin = pinned
+      pin.acquire()
+      (this.corpus, pin, persisted, authorityPrior, generation)
+    }
+    val resp =
+      try { afterSnapshot(); doSearch(corpus, pin, snap, prior, query, site, offset, limit, lang) }
+      finally pin.release()
     beforeCachePut()
     // a mutation since the snapshot has made this response stale: it still
     // answers this call, but it must not outlive the mutation in the cache
@@ -442,11 +496,12 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
   def searchAfter(query: String, afterScore: Double, afterDoc: Long,
                   limit: Int = 20, lang: String = "en"): SearchResponse = {
     require(indexed, "index not built")
-    val (corpus, t) = synchronized { (this.corpus, tables) }
+    val (corpus, pin) = synchronized { (this.corpus, pinned) }
+    val t = pin.tables
     val lex = lexicons.getOrElse(lang, Analyzer.emptyLexicon)
     if (Analyzer.queryTerms(lang, query, lex).isEmpty)
       return SearchResponse(result = false, 0, Nil, "Empty search query")
-    val plan = QueryFrontend.plan(t.termStats, lang, query, lex)
+    val plan = QueryFrontend.plan(pin.dictionary, lang, query, lex)
     if (plan.missing.nonEmpty)
       return SearchResponse(result = false, 0, Nil,
         s"No data for words: ${plan.missing.mkString(", ")}, ")
@@ -456,7 +511,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     val total = Search.conjunctive(t.postings, kept).count()
     val top = Search.bm25TopKAfter(t.postings, t.docStats, dfs, t.nDocs,
       t.avgDl, limit, afterScore, afterDoc)
-    SearchResponse(result = true, total, items(corpus, top, dfs.keySet), null)
+    SearchResponse(result = true, total, items(corpus, pageOf(top), dfs.keySet), null)
   }
 
   /** Boolean-tree search (AND/OR/NOT, [[graft.query.BooleanQuery]]) —
@@ -468,7 +523,8 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
   def searchBoolean(tree: BooleanQuery.Node, limit: Int = 20,
                     lang: String = "en"): SearchResponse = {
     require(indexed, "index not built")
-    val (corpus, t) = synchronized { (this.corpus, tables) }
+    val (corpus, pin) = synchronized { (this.corpus, pinned) }
+    val t = pin.tables
     val lex = lexicons.getOrElse(lang, Analyzer.emptyLexicon)
     def leaves(n: BooleanQuery.Node): Seq[String] = n match {
       case BooleanQuery.Term(s) => Seq(s)
@@ -490,7 +546,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     }
     val q = analyzed(tree)
     val pos = BooleanQuery.positiveTerms(q).toSeq.sorted
-    val dfs = QueryFrontend.lookupDf(t.termStats, pos.toSet)
+    val dfs = pos.flatMap(tm => pin.dictionary.get(tm).map(tm -> _)).toMap
     val missing = pos.filterNot(dfs.contains)
     if (missing.nonEmpty)
       return SearchResponse(result = false, 0, Nil,
@@ -498,10 +554,10 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     val total = BooleanQuery.matches(t.postings, q).count()
     if (total == 0) return SearchResponse(result = true, 0, Nil, null)
     val top = BooleanQuery.topK(t.postings, t.docStats, dfs, t.nDocs, t.avgDl, q, limit)
-    SearchResponse(result = true, total, items(corpus, top, dfs.keySet), null)
+    SearchResponse(result = true, total, items(corpus, pageOf(top), dfs.keySet), null)
   }
 
-  private def doSearch(corpus: DataFrame, t: InvertedIndex.Tables, pDir: Option[String],
+  private def doSearch(corpus: DataFrame, pin: Pinned, snap: Option[SearchEngine.Persisted],
                        prior: Option[(DataFrame, Double)], query: String,
                        site: Option[String], offset: Int, limit: Int,
                        lang: String): SearchResponse = {
@@ -515,7 +571,8 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     // запрос" / "Нет данных по словам: …" — kept in English here)
     if (qTerms.isEmpty)
       return SearchResponse(result = false, 0, Nil, "Empty search query")
-    val plan = QueryFrontend.plan(t.termStats, lang, query, lex)
+    // df from the generation's dictionary: no Spark job before ranking
+    val plan = QueryFrontend.plan(pin.dictionary, lang, query, lex)
     if (plan.missing.nonEmpty)
       // reference sentinel row lists the missing words (SearcherPage.java:58-79)
       return SearchResponse(result = false, 0, Nil,
@@ -523,75 +580,89 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     if (plan.isEmpty) return SearchResponse(result = true, 0, Nil, null)
     val kept = plan.terms.map(_.term)
     val dfs = plan.terms.map(pt => pt.term -> pt.df).toMap
-    val scoped = site match {
+    val t = pin.tables
+    lazy val scoped = site match {
       case Some(r) => t.postings.join(
         corpus.filter(col("repo") === r).select("doc_id"), Seq("doc_id"), "left_semi")
       case None => t.postings
     }
     // rank tier: a committed compressed snapshot (startIndexingPersisted,
-    // not yet invalidated by a mutation) serves global queries through the
-    // block-max WAND path with the snapshot's FROZEN stats (_meta.json) —
-    // rank-identical to the DataFrame aggregate by construction (shared
-    // formula + tie-breaks; asserted in SearchEngineSpec). Site-scoped
-    // queries stay on the DataFrame path (shards are not repo-scoped).
-    val wandShards = pDir.filter(_ => site.isEmpty).map { dir =>
-      val meta = TableIO.readMeta(dir).get
-      val idfs = dfs.map { case (tm, d) => tm -> Bm25.idfS(d, meta.nDocs) }
-      (IndexWriter.readForTerms(spark, dir, kept, persistedCfg), idfs, meta.avgDl)
+    // not yet invalidated by a mutation) serves every query through the
+    // block-max WAND path with the snapshot's FROZEN stats — rank-identical
+    // to the DataFrame aggregate by construction (shared formula +
+    // tie-breaks; asserted in SearchEngineSpec). A site-scoped query admits
+    // only its repo's docs inside the WAND loop. `rank(k)` is ONE ranking
+    // job returning the full match count and the best k rows.
+    val rank: Int => Search.TopK = snap match {
+      case Some(s) =>
+        val admit = site match {
+          case None => Wand.admitAll
+          case Some(r) => pin.siteDocs(r) match {
+            case Some(ids) => Wand.admitSorted(ids)
+            // an unknown repo, or one with no docs, matches nothing
+            case None => return SearchResponse(result = true, 0, Nil, null)
+          }
+        }
+        val idfs = dfs.map { case (tm, d) => tm -> Bm25.idfS(d, s.meta.nDocs) }
+        k => Wand.countTopK(IndexWriter.readForTerms(spark, s.dir, kept, s.cfg), idfs,
+          s.meta.avgDl, k, admit)
+      case None =>
+        k => Search.countTopK(Search.conjunctiveScores(scoped, t.docStats, dfs, t.nDocs, t.avgDl), k)
     }
     // `count` is the FULL result-set size before pagination — the
     // reference's response count is resultSearch.size(), not the page
     // length (SearchServiceImpl.java:90); a UI pager needs the total
-    val (total, top) = prior match {
-      case None =>
-        // ONE ranking action: the count + top-k kernel returns the total
-        // and the best offset + limit rows together. All of them are kept
-        // whenever the offset clamp fires, so the last row is present.
-        val ranked = wandShards match {
-          case Some((shards, idfs, avgDl)) =>
-            Wand.countTopK(shards, idfs, avgDl, saturatedAdd(offset, limit))
-          case None =>
-            Search.countTopK(Search.conjunctiveScores(scoped, t.docStats, dfs, t.nDocs, t.avgDl),
-              saturatedAdd(offset, limit))
-        }
+    val (total, page) = (prior, snap) match {
+      case (None, _) =>
+        // the best offset + limit rows: all of them are kept whenever the
+        // offset clamp fires, so the last row is present
+        val ranked = rank(saturatedAdd(offset, limit))
         val (o, l) = clampPage(offset, limit, ranked.count)
-        // decorate only the ≤ limit winners, as a small local frame
+        (ranked.count, ranked.ranked.iterator.drop(o).take(l).map(h => (h.docId, h.score)).toSeq)
+      case (Some((p, beta)), Some(_)) =>
+        // two-stage ranking: WAND retrieves C candidates by pure BM25 (an
+        // upper bound of the blended score, Search.rerankWithPrior doc)
+        // with the count, the prior reranks those C rows only. C covers
+        // every match whenever the offset clamp fires.
+        val cands = rank(math.max(math.min(8L * saturatedAdd(offset, limit), Int.MaxValue.toLong).toInt, 64))
+        val (o, l) = clampPage(offset, limit, cands.count)
         import spark.implicits._
-        val page = ranked.ranked.iterator.drop(o).take(l).zipWithIndex
-          .map { case (h, i) => (o + i + 1, h.docId, h.score) }.toSeq
-        (ranked.count, page.toDF("rank", "doc_id", "score"))
-      case Some((p, beta)) =>
+        val candDf = cands.ranked.toSeq.map(h => (h.docId, h.score)).toDF("doc_id", "score")
+        (cands.count, pageOf(Search.rerankWithPrior(candDf, p, beta, l, o)))
+      case (Some((p, beta)), None) =>
         val total = Search.conjunctive(scoped, kept).count()
         val (o, l) = clampPage(offset, limit, total)
-        val top = wandShards match {
-          case Some((shards, idfs, avgDl)) =>
-            // two-stage ranking: WAND retrieves C candidates by pure BM25
-            // (an upper bound of the blended score, Search.rerankWithPrior
-            // doc), the prior reranks those C rows only
-            val c = math.max(math.min(8L * saturatedAdd(o, l), Int.MaxValue.toLong).toInt, 64)
-            Search.rerankWithPrior(Wand.topK(shards, idfs, avgDl, c), p, beta, l, o)
-          case None =>
-            Search.blendTopK(scoped, t.docStats, dfs, t.nDocs, t.avgDl, p,
-                saturatedAdd(o, l), beta)
-              .filter(col("rank") > o)
-              .withColumnRenamed("blend", "score")
-        }
-        (total, top)
+        (total, pageOf(Search.blendTopK(scoped, t.docStats, dfs, t.nDocs, t.avgDl, p,
+            saturatedAdd(o, l), beta)
+          .filter(col("rank") > o)
+          .withColumnRenamed("blend", "score")))
     }
     if (total == 0) return SearchResponse(result = true, 0, Nil, null)
-    SearchResponse(result = true, total, items(corpus, top, dfs.keySet), null)
+    SearchResponse(result = true, total, items(corpus, page, dfs.keySet), null)
   }
 
-  /** the decorated page of `top` (rank, doc_id, score), in rank order: the
-    * ≤ k rows are sorted here, on the driver, not by a distributed sort */
-  private def items(corpus: DataFrame, top: DataFrame, terms: Set[String]): Seq[SearchItem] =
-    Search.decorateUnsorted(corpus, top, terms).collect()
-      .sortBy(_.getAs[Number]("rank").longValue)
-      .map { r =>
-        SearchItem(r.getAs[String]("repo"), r.getAs[String]("repo"),
-          r.getAs[String]("path"), r.getAs[String]("title"),
-          r.getAs[String]("snippet"), r.getAs[Double]("score"))
-      }.toSeq
+  /** the (doc_id, score) rows of a ranked (rank, doc_id, score) frame, in
+    * rank order: the ≤ k rows are sorted here, not by a distributed sort */
+  private def pageOf(top: DataFrame): Seq[(Long, Double)] =
+    top.select(col("rank").cast("long"), col("doc_id"), col("score")).collect()
+      .sortBy(_.getLong(0)).map(r => (r.getLong(1), r.getDouble(2))).toSeq
+
+  /** the decorated `page` ((doc_id, score) in rank order): one filtered
+    * corpus scan computes title and snippet; rank order and score are
+    * attached here, on the driver */
+  private def items(corpus: DataFrame, page: Seq[(Long, Double)], terms: Set[String]): Seq[SearchItem] =
+    if (page.isEmpty) Nil
+    else {
+      val rows = Search.decorateIds(corpus, page.map(_._1), terms).collect()
+        .iterator.map(r => r.getLong(0) -> r).toMap
+      page.flatMap { case (id, score) =>
+        rows.get(id).map { r =>
+          SearchItem(r.getAs[String]("repo"), r.getAs[String]("repo"),
+            r.getAs[String]("path"), r.getAs[String]("title"),
+            r.getAs[String]("snippet"), score)
+        }
+      }
+    }
 
   /** offset + limit clamped to [0, Int.MaxValue]: the heap size a page
     * needs, known before the match count */
@@ -661,6 +732,10 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
 }
 
 object SearchEngine {
+
+  /** a committed compressed snapshot the WAND tier serves, with the
+    * `_meta.json` stats (nDocs, avgDl) it was encoded with */
+  private final case class Persisted(dir: String, cfg: IndexWriter.Config, meta: TableIO.IndexMeta)
 
   /** Reattach to an existing engine state WITHOUT rebuilding: open the
     * newest committed `run-N` LSM store under `stateDir`, restore the

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * SearcherPage.java:37-56), run before any Spark job is submitted:
   *
   *  1. analyze the query string (lemmatize + stop-filter)       [:39]
-  *  2. dictionary probe for df values (one broadcast-side job)   [:196-199]
+  *  2. dictionary probe for df values (one small job, or none    [:196-199]
+  *     against a driver-side dictionary)
   *  3. missing-term short-circuit                                [:41-46,58-79]
   *  4. common-term pruning: drop terms with df > mean + 2σ       [:48,142-154]
   *  5. rarest-first (df asc) ordering                            [:47,201-206]
@@ -324,8 +325,21 @@ object QueryFrontend {
            lexicon: Analyzer.Lexicon = Analyzer.emptyLexicon,
            pruneCoef: Int = 2): Plan = {
     val qTerms = Analyzer.queryTerms(lang, query, lexicon)
+    planTerms(qTerms, lookupDf(termStats, qTerms), pruneCoef)
+  }
+
+  /** [[plan]] against a driver-side term → df dictionary (e.g. one
+    * collected per index snapshot): the probe, the missing-term check and
+    * the common-term prune run with no Spark job. */
+  def plan(dictionary: Map[String, Long], lang: String, query: String,
+           lexicon: Analyzer.Lexicon): Plan = {
+    val qTerms = Analyzer.queryTerms(lang, query, lexicon)
+    planTerms(qTerms, qTerms.iterator.flatMap(t => dictionary.get(t).map(t -> _)).toMap, 2)
+  }
+
+  /** steps 3-5 over the query terms and the df of those the dictionary has */
+  private def planTerms(qTerms: Set[String], dfs: Map[String, Long], pruneCoef: Int): Plan = {
     if (qTerms.isEmpty) return Plan(Nil, Nil, Nil)
-    val dfs = lookupDf(termStats, qTerms)
     val missing = qTerms.diff(dfs.keySet).toSeq.sorted
     if (missing.nonEmpty) return Plan(Nil, missing, Nil) // reference short-circuits (:41-46)
     val infos = dfs.toSeq.map { case (t, d) => TermInfo(t, d) }

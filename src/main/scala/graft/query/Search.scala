@@ -792,9 +792,9 @@ object Search {
 
   /** Result decoration on the final ≤ k rows only (reference
     * SearchServiceImpl.java:101-118): join repo/path, compute title +
-    * highlighted snippet. `top` carries (rank, doc_id, score); shared by the
-    * DataFrame path (search) and the facade's persisted block-max WAND path,
-    * so the two tiers cannot diverge in response shape.
+    * highlighted snippet. `top` carries (rank, doc_id, score). The facade's
+    * [[decorateIds]] builds title and snippet with the same columns, so
+    * the two cannot diverge in response shape.
     *
     * HTML corpora: snippet over the extracted text, title from <title>
     * (reference SearchServiceImpl.java:284-296); code corpora fall back to
@@ -802,23 +802,32 @@ object Search {
     * evaluated on the final k rows only. */
   def decorate(corpus: DataFrame, top: DataFrame, terms: Set[String],
                htmlAware: Boolean = true): DataFrame =
-    decorateUnsorted(corpus, top, terms, htmlAware).orderBy("rank")
+    withTitleSnippet(top.join(corpus.select("doc_id", "repo", "path", "lang", "content"), "doc_id"),
+        terms, htmlAware)
+      .select("rank", "doc_id", "repo", "path", "title", "snippet", "score")
+      .orderBy("rank")
 
-  /** [[decorate]] without its final sort by rank, for a caller that
-    * collects the ≤ k rows and orders them itself: a distributed sort of k
-    * rows costs a range-sampling job and a shuffle. */
-  def decorateUnsorted(corpus: DataFrame, top: DataFrame, terms: Set[String],
-                       htmlAware: Boolean = true): DataFrame = {
+  /** [[decorate]] for a page already ranked on the driver: ONE filtered
+    * corpus scan (`doc_id IN ids`) → (doc_id, repo, path, title, snippet),
+    * unordered. The caller attaches rank and score to the ≤ k rows, so no
+    * join, exchange or distributed sort runs. */
+  def decorateIds(corpus: DataFrame, ids: Seq[Long], terms: Set[String],
+                  htmlAware: Boolean = true): DataFrame =
+    withTitleSnippet(
+        corpus.filter(col("doc_id").isin(ids.map(x => x: Any): _*))
+          .select("doc_id", "repo", "path", "lang", "content"),
+        terms, htmlAware)
+      .select("doc_id", "repo", "path", "title", "snippet")
+
+  /** title + highlighted snippet columns over (content, path, lang) rows */
+  private def withTitleSnippet(rows: DataFrame, terms: Set[String], htmlAware: Boolean): DataFrame = {
     val snip = Snippets.makeSnippetUdf(terms)
     val title =
       if (htmlAware) graft.analyze.Html.titleOf(col("content"), col("path"))
       else col("path")
     val snipSrc =
       if (htmlAware) graft.analyze.Html.textOf(col("content")) else col("content")
-    top.join(corpus.select("doc_id", "repo", "path", "lang", "content"), "doc_id")
-      .withColumn("title", title)
-      .withColumn("snippet", snip(snipSrc, col("lang")))
-      .select("rank", "doc_id", "repo", "path", "title", "snippet", "score")
+    rows.withColumn("title", title).withColumn("snippet", snip(snipSrc, col("lang")))
   }
 
   /** Authority-blended ranking: BM25 relevance × a query-independent static

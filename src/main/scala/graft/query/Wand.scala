@@ -1,7 +1,8 @@
 package graft.query
 
 import graft.index.{PostingCodec, ShardPosting}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Conjunctive BM25 top-k over the compressed sharded index with block-max
@@ -10,9 +11,10 @@ import org.apache.spark.sql.functions._
   *
   * Distribution shape: the query touches |terms| × |shards| blobs; they are
   * grouped by shard (each group = the query's full working set for one
-  * docId range, ≤ |terms| blobs), intersected + scored + top-k'd inside
-  * `mapGroups` with zero further shuffle, then the tiny per-shard top-k
-  * lists (≤ k rows each) meet in a global TakeOrderedAndProject. Adding
+  * docId range, ≤ |terms| blobs), intersected + scored + top-k'd per group
+  * with zero further shuffle, then the tiny per-shard top-k lists (≤ k rows
+  * each) meet in a global TakeOrderedAndProject ([[topK]]) or a
+  * treeAggregate inside the same job ([[countTopK]]). Adding
   * executors splits shards, not terms — scaling is embarrassing in the
   * shard dimension, which is why hot terms don't skew this path.
   *
@@ -32,32 +34,40 @@ object Wand {
     import spark.implicits._
     val idfB = spark.sparkContext.broadcast(idfs)
     val hits = shards.groupByKey(_.shard).flatMapGroups { (_, it) =>
-      intersectShard(it.toArray, idfB.value, avgDl, k).ranked.iterator.map(h => (h.docId, h.score))
+      intersectShard(it.toArray, idfB.value, avgDl, k, admitAll).ranked.iterator.map(h => (h.docId, h.score))
     }.toDF("doc_id", "score")
     ranked(hits, k)
   }
 
-  /** The full conjunctive match count AND the global top-k in ONE action:
-    * each shard's [[intersectShard]] partial is merged with treeAggregate,
-    * so the count comes back in the action's result. Same candidates,
-    * scores and rank order as [[topK]]. */
+  /** The full conjunctive match count AND the global top-k in ONE Spark
+    * job: the query's blobs are grouped by shard inside the job (keyBy →
+    * groupByKey), each shard's [[intersectShard]] partial is merged with
+    * treeAggregate, and the count comes back in the action's result. Only
+    * docs `admit` accepts are counted and ranked. Same candidates, scores
+    * and rank order as [[topK]] when every doc is admitted. */
   def countTopK(shards: Dataset[ShardPosting], idfs: Map[String, Double],
-                avgDl: Double, k: Int): Search.TopK = {
-    val spark = shards.sparkSession
-    import spark.implicits._
-    val idfB = spark.sparkContext.broadcast(idfs)
-    shards.groupByKey(_.shard)
-      .mapGroups((_, it) => intersectShard(it.toArray, idfB.value, avgDl, k))(
-        Encoders.javaSerialization[Search.TopK])
-      .rdd.treeAggregate(new Search.TopK(k))((a, b) => a.merge(b), (a, b) => a.merge(b))
+                avgDl: Double, k: Int, admit: Long => Boolean = admitAll): Search.TopK = {
+    val idfB = shards.sparkSession.sparkContext.broadcast(idfs)
+    shards.rdd.keyBy(_.shard).groupByKey()
+      .map { case (_, it) => intersectShard(it.toArray, idfB.value, avgDl, k, admit) }
+      .treeAggregate(new Search.TopK(k))((a, b) => a.merge(b), (a, b) => a.merge(b))
   }
 
-  /** The conjunctive intersection of one shard's blobs: `count` is every
-    * aligned candidate, taken BEFORE the block-max θ check — θ only skips
-    * scoring, never alignment, so the count is exact; the kept rows are the
-    * shard's best `k`. */
+  /** the admission predicate that accepts every doc */
+  val admitAll: Long => Boolean = _ => true
+
+  /** admits exactly the doc ids in `sortedIds` (ascending), e.g. one
+    * repo's docs for a site-scoped query */
+  def admitSorted(sortedIds: Broadcast[Array[Long]]): Long => Boolean =
+    d => java.util.Arrays.binarySearch(sortedIds.value, d) >= 0
+
+  /** The conjunctive intersection of one shard's blobs. An aligned
+    * candidate is first passed to `admit`; only admitted ones are counted
+    * and reach the block-max θ check, so `count` is the exact admitted
+    * conjunctive count and θ comes from admitted hits only. θ only skips
+    * scoring, never alignment. The kept rows are the shard's best `k`. */
   private def intersectShard(blobs: Array[ShardPosting], idf: Map[String, Double],
-                             avgDl: Double, k: Int): Search.TopK = {
+                             avgDl: Double, k: Int, admit: Long => Boolean): Search.TopK = {
     val acc = new Search.TopK(k)
     // some term absent from shard => no conjunction
     if (blobs.length < idf.size) return acc
@@ -81,22 +91,24 @@ object Wand {
         i += 1
       }
       if (aligned) {
-        acc.count += 1
-        // block-max θ check before exact scoring
-        var ub = 0.0
-        var j = 0
-        while (j < cursors.length) { ub += cursors(j)._1 * cursors(j)._2.blockMaxTfNorm; j += 1 }
-        // `>= theta` (not `>`) so equal-score smaller-docId candidates
-        // still get scored and can win the tie-break
-        if (!acc.full || ub >= acc.theta) {
-          var score = 0.0
-          j = 0
-          while (j < cursors.length) {
-            val (w, c) = cursors(j)
-            score += w * Bm25.tfNormS(c.tf, c.dl, avgDl)
-            j += 1
+        if (admit(cand)) {
+          acc.count += 1
+          // block-max θ check before exact scoring
+          var ub = 0.0
+          var j = 0
+          while (j < cursors.length) { ub += cursors(j)._1 * cursors(j)._2.blockMaxTfNorm; j += 1 }
+          // `>= theta` (not `>`) so equal-score smaller-docId candidates
+          // still get scored and can win the tie-break
+          if (!acc.full || ub >= acc.theta) {
+            var score = 0.0
+            j = 0
+            while (j < cursors.length) {
+              val (w, c) = cursors(j)
+              score += w * Bm25.tfNormS(c.tf, c.dl, avgDl)
+              j += 1
+            }
+            acc.keep(cand, score)
           }
-          acc.keep(cand, score)
         }
         lead.next()
       }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.SparkTestSession.jobsOf
+import graft.SparkTestSession.{jobNamesOf, jobsOf}
 import graft.api.SearchEngine
 import graft.corpus.Corpus
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,13 +19,43 @@ class SearchEngineSpec extends AnyFunSuite {
   lazy val engine = freshEngine()
 
   /** an engine serving global queries from a committed snapshot (WAND tier) */
-  lazy val persistedEngine: SearchEngine = {
+  lazy val persistedEngine: SearchEngine = persistedFresh("graft-api-persisted")
+
+  /** a new engine serving from a fresh committed snapshot (WAND tier) */
+  def persistedFresh(prefix: String): SearchEngine = {
     val cfg = graft.index.IndexWriter.Config(docsPerShard = 64, nBuckets = 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft-api-persisted").toString
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
     val e = new SearchEngine(spark, Corpus.fromDocuments(spark, "/root/testdata/sf0.001"))
     assert(e.startIndexingPersisted(dir, 1L, cfg, groupSize = 4))
     assert(e.servesFromPersisted)
     e
+  }
+
+  /** count, error and the decorated page agree; scores to 1e-9 (summation
+    * order across the two physical paths differs in the last ulp — same
+    * gate the DuckDB oracle applies via 4dp rounding) */
+  def assertSameResponse(what: String, a: SearchEngine#SearchResponse,
+                         b: SearchEngine#SearchResponse): Unit = {
+    assert((a.result, a.count, a.error) == (b.result, b.count, b.error),
+      s"$what: count ${a.count} vs ${b.count}")
+    assert(a.data.map(i => (i.site, i.uri, i.title, i.snippet)) ==
+      b.data.map(i => (i.site, i.uri, i.title, i.snippet)), s"$what: page diverged")
+    a.data.zip(b.data).foreach { case (x, y) =>
+      assert(math.abs(x.relevance - y.relevance) < 1e-9, s"$what: ${x.uri} score diverged")
+    }
+  }
+
+  /** the repo a zero-match site-scoped search for the rarest term runs in:
+    * (term, a repo none of its docs belong to) */
+  def zeroMatchSite(e: SearchEngine): (String, String) = {
+    import org.apache.spark.sql.functions.{col, collect_set, size}
+    val sites = e.corpus.select("doc_id", "repo")
+    val rare = e.tables.postings.join(sites, "doc_id").groupBy("term")
+      .agg(collect_set(col("repo")).as("repos"))
+      .orderBy(size(col("repos")), col("term")).head()
+    val other = (sites.select("repo").distinct().collect().map(_.getString(0)).toSet --
+      rare.getSeq[String](1)).min
+    (rare.getString(0), other)
   }
 
   /** the separate conjunctive count the facade's ranking pass replaces */
@@ -444,6 +474,24 @@ class SearchEngineSpec extends AnyFunSuite {
     val p2a = pe.search("spark join", offset = 10, limit = 10)
     val p2b = de.search("spark join", offset = 10, limit = 10)
     assert(p2a.data.map(_.uri) == p2b.data.map(_.uri))
+    // site-scoped queries rank on the WAND tier too, the repo admitted
+    // inside the WAND loop: every repo, page 1, page 2 and the clamp
+    val repos = corpus.select("repo").distinct().collect().map(_.getString(0)).sorted
+    assert(repos.length == 20)
+    for (r <- repos; q <- Seq("spark join", "dup hash spark"); (o, l) <- Seq((0, 5), (5, 5), (5000, 5))) {
+      val a = pe.search(q, site = Some(r), offset = o, limit = l)
+      assertSameResponse(s"$q @ $r offset $o", a, de.search(q, site = Some(r), offset = o, limit = l))
+      assert(a.data.forall(_.site == r), s"$q @ $r: a doc of another repo")
+    }
+    assert(pe.search("spark join", site = Some("src3"), offset = 5, limit = 5).data.length == 5,
+      "page 2 must be a full page")
+    // a zero-match site and an unknown site
+    val (rare, other) = zeroMatchSite(pe)
+    for (r <- Seq(other, "no-such-site")) {
+      val a = pe.search(rare, site = Some(r))
+      assert(a.result && a.count == 0 && a.data.isEmpty, s"$rare @ $r: $a")
+      assertSameResponse(s"$rare @ $r", a, de.search(rare, site = Some(r)))
+    }
     // a mutation invalidates the snapshot: fall back to the live tables
     import spark.implicits._
     val doc = Seq((0L, "src0", "doc/0", "0" * 40, "en", "wandfallbackword"))
@@ -557,20 +605,32 @@ class SearchEngineSpec extends AnyFunSuite {
 
   test("one ranking job per search: jobs pinned on both tiers; count ≡ Search.conjunctive") {
     val pe = persistedEngine
-    // warm both tiers so the counts below are steady-state jobs
+    val (rare, other) = zeroMatchSite(pe)
+    // warm: the generation's dictionary and two repos' doc sets
     pe.search("hash join", limit = 10)
     pe.search("hash join", site = Some("src3"), limit = 10)
+    pe.search("hash join", site = Some(other), limit = 10)
     val (global, gJobs) = jobsOf(pe.search("spark join", offset = 10, limit = 10))
     val (site, sJobs) = jobsOf(pe.search("spark join", site = Some("src3"), limit = 10))
+    // a repo's first site-scoped search in a generation also builds its doc set
+    val firstRepo = (Set("src5", "src6") - other).min
+    val (first, fJobs) = jobsOf(pe.search("spark join", site = Some(firstRepo), limit = 10))
     val (missing, mJobs) = jobsOf(pe.search("spark warpdrive", limit = 10))
     assert(global.result && global.data.length == 10 && site.result && site.data.nonEmpty)
+    assert(first.result && first.data.nonEmpty && first.data.forall(_.site == firstRepo))
     assert(!missing.result)
-    // 10 global and 12 site-scoped jobs while the count ran as its own pass
-    assert(gJobs <= 5, s"global (WAND tier) search ran $gJobs jobs")
-    assert(sJobs <= 7, s"site-scoped (DataFrame tier) search ran $sJobs jobs")
-    assert(mJobs <= 1, s"missing-term search ran $mJobs jobs")
+    // rank + decorate (5 global, 7 site-scoped and 1 missing-term job while
+    // df, meta and the site filter each cost their own jobs)
+    assert(gJobs <= 2, s"global (WAND tier) search ran $gJobs jobs")
+    assert(sJobs <= 2, s"site-scoped (WAND tier) search on a warm repo ran $sJobs jobs")
+    assert(fJobs <= 3, s"site-scoped (WAND tier) search on a repo's first use ran $fJobs jobs")
+    assert(mJobs == 0, s"missing-term search ran $mJobs jobs")
+    // site-scoped queries rank through the WAND kernel
+    val (_, sNames) = jobNamesOf(pe.search("spark join", site = Some("src3"), limit = 5))
+    assert(sNames.exists(_.contains("Wand.scala")), s"site-scoped jobs: $sNames")
     // the kernel's count is the full conjunctive match count: WAND page 2
     assert(global.count == conjunctiveCount(pe, "spark join"))
+    assert(site.count == conjunctiveCount(pe, "spark join", Some("src3")))
     // WAND offset-past-end clamp: the count stays the total, the page is
     // the last ranked row
     val all = pe.search("dup spark", limit = 1000)
@@ -578,18 +638,81 @@ class SearchEngineSpec extends AnyFunSuite {
     assert(past.count == conjunctiveCount(pe, "dup spark") && past.count == all.count)
     assert(past.data.map(_.uri) == Seq(all.data.last.uri))
     // zero-match site-scoped query: the rarest term, searched in a site
-    // none of its docs belong to
-    import org.apache.spark.sql.functions.{col, collect_set, size}
-    val sites = pe.corpus.select("doc_id", "repo")
-    val rare = pe.tables.postings.join(sites, "doc_id").groupBy("term")
-      .agg(collect_set(col("repo")).as("repos"))
-      .orderBy(size(col("repos")), col("term")).head()
-    val other = (sites.select("repo").distinct().collect().map(_.getString(0)).toSet --
-      rare.getSeq[String](1)).min
-    val (zero, zJobs) = jobsOf(pe.search(rare.getString(0), site = Some(other)))
+    // none of its docs belong to — ranking only, nothing to decorate
+    val (zero, zJobs) = jobsOf(pe.search(rare, site = Some(other)))
     assert(zero.result && zero.count == 0 && zero.data.isEmpty)
-    assert(conjunctiveCount(pe, rare.getString(0), Some(other)) == 0)
-    assert(zJobs <= 4, s"zero-match site-scoped search ran $zJobs jobs")
+    assert(conjunctiveCount(pe, rare, Some(other)) == 0)
+    assert(zJobs <= 1, s"zero-match site-scoped search ran $zJobs jobs")
+    // LSM tier, after an upsert: the first search rebuilds the live tables
+    // and the dictionary, the next one only ranks and decorates
+    import spark.implicits._
+    val e = freshEngine()
+    assert(e.indexPage(Seq((3L, "src0", "doc/3", "0" * 40, "en", "lsmpinword spark join"))
+      .toDF("doc_id", "repo", "path", "commit", "lang", "content")))
+    assert(e.search("lsmpinword", limit = 10).count == 1)
+    val (lsm, lJobs) = jobsOf(e.search("spark join", limit = 10))
+    assert(lsm.result && lsm.data.length == 10)
+    assert(lJobs <= 5, s"global (LSM tier) search after an upsert ran $lJobs jobs")
+  }
+
+  test("an upsert is visible at once: new term, moved doc; a rebuild re-derives dictionary and site sets") {
+    import spark.implicits._
+    val cfg = graft.index.IndexWriter.Config(docsPerShard = 64, nBuckets = 8)
+    val e = persistedFresh("graft-api-fresh")
+    val moved = e.search("spark join", site = Some("src1"), limit = 1000).data.head.uri
+    assert(!e.search("spark join", site = Some("src2"), limit = 1000).data.exists(_.uri == moved))
+    assert(!e.search("freshmovedterm").result)
+    val sets = e.liveSiteSets
+    assert(sets.size == 2, "one doc set per searched repo")
+    // the doc moves from src1 to src2 and gains a term the index never saw
+    assert(e.indexPage(Seq((moved.stripPrefix("doc/").toLong, "src2", moved, "0" * 40, "en",
+      "freshmovedterm spark join")).toDF("doc_id", "repo", "path", "commit", "lang", "content")))
+    // the mutation destroyed the generation's site-set broadcasts
+    assert(e.liveSiteSets.isEmpty)
+    sets.foreach(b => intercept[org.apache.spark.SparkException](b.value))
+    def fresh(tier: String): Unit = {
+      val r = e.search("freshmovedterm", limit = 10)
+      assert(r.result && r.count == 1 && r.data.map(_.uri) == Seq(moved), s"$tier: $r")
+      assert(!e.search("spark join", site = Some("src1"), limit = 1000).data.exists(_.uri == moved), tier)
+      assert(e.search("spark join", site = Some("src2"), limit = 1000).data.exists(_.uri == moved), tier)
+      assert(e.search("freshmovedterm", site = Some("src1")).count == 0, tier)
+      assert(e.search("freshmovedterm", site = Some("src2")).count == 1, tier)
+    }
+    fresh("LSM")
+    // a second persisted build serves the WAND tier with a new dictionary
+    // and new site sets
+    val dir2 = java.nio.file.Files.createTempDirectory("graft-api-fresh2").toString
+    assert(e.startIndexingPersisted(dir2, 2L, cfg, groupSize = 4) && e.servesFromPersisted)
+    assert(e.liveSiteSets.isEmpty)
+    fresh("WAND")
+    assert(e.liveSiteSets.size == 2)
+  }
+
+  test("a search keeps its snapshot's dictionary, tables and site sets across a mutation") {
+    import spark.implicits._
+    // force the interleaving: an upsert lands after the search took its
+    // snapshot and before it reads the dictionary, builds or uses a site
+    // set, ranks or decorates. The response must be the snapshot's own
+    // answer: a dictionary from the newer generation would change every
+    // score (df of "spark" and "join" grows), newer tables the count.
+    for ((tier, e, site) <- Seq(("WAND", persistedFresh("graft-api-interleave"), Some("src4")),
+                                ("LSM", freshEngine(), None))) {
+      val want = e.search("spark join", site = site, limit = 1000)
+      assert(want.result && want.count > 1)
+      e.afterSnapshot = () => {
+        e.afterSnapshot = () => ()
+        assert(e.indexPage(Seq((9101L, "src4", "doc/9101", "0" * 40, "en", "spark join interleaved"))
+          .toDF("doc_id", "repo", "path", "commit", "lang", "content")))
+      }
+      val stale = e.search("spark join", site = site, limit = 999)
+      assert(stale.data.map(i => (i.uri, i.relevance)) == want.data.map(i => (i.uri, i.relevance)),
+        s"$tier: the snapshot's answer changed")
+      assert(stale.count == want.count, s"$tier: count")
+      // the retired generation's site sets died with its last search
+      assert(e.liveSiteSets.isEmpty, s"$tier: site sets outlived their generation")
+      val now = e.search("spark join", site = site, limit = 998)
+      assert(now.count == want.count + 1 && now.data.exists(_.uri == "doc/9101"), tier)
+    }
   }
 
   test("a replacement indexPage runs as many jobs at LSM depth 3 as at depth 9") {

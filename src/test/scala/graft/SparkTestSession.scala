@@ -26,17 +26,25 @@ object SparkTestSession {
 
   /** `body`'s result and the number of Spark jobs it started */
   def jobsOf[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val (v, names) = jobNamesOf(body)
+    (v, names.size)
+  }
+
+  /** `body`'s result and the call site ("<action> at <File>.scala:<line>")
+    * of every Spark job it started, in start order */
+  def jobNamesOf[T](body: => T): (T, Seq[String]) = {
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
+        names.add(e.stageInfos.maxBy(_.stageId).name): Unit
     }
     drainListenerBus()
     spark.sparkContext.addSparkListener(l)
     try {
       val v = body
       drainListenerBus()
-      (v, jobs.get)
+      import scala.jdk.CollectionConverters._
+      (v, names.asScala.toSeq)
     } finally spark.sparkContext.removeSparkListener(l)
   }
 }
