@@ -31,10 +31,12 @@ import org.apache.spark.storage.StorageLevel
   *
   * Index maintenance is INCREMENTAL: the facade's live tables are backed by
   * the LSM batch log (IncrementalIndex.ParquetStateStore), so `indexPage`'s
-  * index work costs O(page) — tokenize the one doc, point-read its old
-  * postings, append a delta batch — exactly the reference's per-page cost
-  * profile (IndexingServiceImpl.java:244-264), never an O(corpus) rebuild.
-  * The corpus replace is a lazy page-sized delta chain folded into a fresh
+  * index work costs O(page) — tokenize the page, point-read its docs' old
+  * rows, append a delta batch — the reference's per-page cost profile
+  * (IndexingServiceImpl.java:244-264), never an O(corpus) rebuild. The
+  * deltas are computed on the driver (IncrementalIndex.mergePage): at most
+  * 10 Spark jobs, none with a shuffle stage. The corpus replace is a lazy
+  * filter + local-rows union per upsert, folded into a fresh
   * localCheckpoint every `checkpointEvery` upserts: amortized
   * O(corpus / checkpointEvery) per call, analyzed-plan size bounded by the
   * fold period. Reads reconstruct live tables from the batch log lazily
@@ -319,10 +321,13 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     true
   }
 
-  /** single-doc upsert (POST /api/indexPage): replace-by-doc_id in the
-    * corpus (lineage cut by localCheckpoint), then an O(page) delta batch
-    * through the LSM store — delete-only for gated error re-fetches,
-    * tokenize-and-merge otherwise. The full corpus is never re-tokenized. */
+  /** single-doc upsert (POST /api/indexPage): a page-sized merge on the
+    * driver (IncrementalIndex.mergePage) — one version per doc_id, a
+    * delete for each doc whose re-fetch fails the HTTP gate, a
+    * tokenize-and-merge for the rest — then replace-by-doc_id in the
+    * corpus. The full corpus is never re-tokenized; a frame of more than
+    * IncrementalIndex.isinThreshold rows is refused (bulk loads go through
+    * startIndexing or IncrementalIndex.start). */
   def indexPage(doc: DataFrame): Boolean = synchronized {
     require(indexed, "index not built")
     // incoming docs get their integrity column recomputed (input_hint
@@ -340,46 +345,29 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     // HTTP gate on the upsert path too (reference delete+reindex: an error
     // re-fetch REMOVES the old version and indexes nothing,
     // IndexingServiceImpl.java:135-137 via :244-264)
-    // page-sized pins (O(page) jobs): the corpus lineage below references
-    // ONLY checkpointed blocks, never the caller's live plan
-    val docOk = (
-      if (doc2.columns.contains("code")) graft.corpus.Corpus.httpOk(doc2) else doc2
-    ).localCheckpoint(true)
-    val ids = doc2.select("doc_id").localCheckpoint(true)
-    // corpus replace is a LAZY delta chain over the last checkpoint — an
-    // upsert itself never rewrites the corpus. The chain (one broadcast
-    // anti-join + one page-sized union per upsert) is folded into a fresh
-    // checkpoint every `checkpointEvery` calls, so the replace cost is
-    // amortized O(corpus / checkpointEvery) per call and the analyzed plan
-    // is bounded by the fold period instead of growing without bound.
-    corpus = corpus.join(ids, Seq("doc_id"), "left_anti").unionByName(docOk)
-    sinceCheckpoint += 1
-    if (sinceCheckpoint >= checkpointEvery) {
-      corpus = corpus.localCheckpoint(true)
-      sinceCheckpoint = 0
-    }
-    // O(page) index delta: docs whose re-fetch was gated out are deletions;
-    // the rest merge through the batch log (which itself removes their old
-    // postings via point-read + signed df deltas)
-    val delIds = ids.join(docOk.select("doc_id"), Seq("doc_id"), "left_anti")
-    if (!delIds.isEmpty) IncrementalIndex.deleteDocs(store, delIds)
-    if (!docOk.isEmpty) {
-      IncrementalIndex.mergeBatch(store, indexedView(docOk),
-        lexicons = lexicons, rawDocs = Some(docOk))
-      // percolate the BATCH ONLY against the stored alert queries — the
-      // alerting cost of an upsert is O(page), never O(corpus); matches
-      // accumulate until drainAlerts()
-      if (alertQueries.nonEmpty) {
-        import spark.implicits._
-        val q = alertQueries.toSeq
-          .flatMap { case (id, ts) => ts.map(t => (id, t)) }
-          .toDF("query_id", "term")
-        val bp = InvertedIndex.tokensByLang(indexedView(docOk), lexicons)
-          .select("doc_id", "term").distinct()
-        alertHits ++= Search.percolate(bp, q).collect()
-          .map(r => (r.getLong(1), r.getLong(0)))
+    val keep = if (doc2.columns.contains("code")) graft.corpus.Corpus.okStatus else lit(true)
+    // a page the corpus cannot take fails here, before the store moves
+    corpus.unionByName(doc2.drop("seq")): Unit
+    val page = IncrementalIndex.mergePage(store, doc2, lexicons, Html.textOf, keep)
+    if (page.ids.nonEmpty) {
+      // corpus replace is a LAZY chain over the last checkpoint: a filter
+      // and a union with the page's local rows per upsert, so a later
+      // corpus read runs no extra job for it. The chain is folded into a
+      // fresh checkpoint every `checkpointEvery` calls, which bounds the
+      // analyzed plan by the fold period.
+      corpus = corpus.filter(!col("doc_id").isin(page.ids: _*)).unionByName(page.docs)
+      sinceCheckpoint += 1
+      if (sinceCheckpoint >= checkpointEvery) {
+        corpus = corpus.localCheckpoint(true)
+        sinceCheckpoint = 0
       }
     }
+    // percolate the PAGE ONLY against the stored alert queries, on the
+    // driver from its indexed term sets; matches accumulate until
+    // drainAlerts()
+    val alerts = alertQueries.toSeq.sortBy(_._1)
+    for ((d, terms) <- page.terms.toSeq.sortBy(_._1); (id, q) <- alerts if q.forall(terms))
+      alertHits += ((id, d))
     // bound read fan-in: fold the log once it grows past compactEvery
     if (store.pointer.exists(p => p._1 - p._2 >= compactEvery))
       IncrementalIndex.compactState(store, spark)

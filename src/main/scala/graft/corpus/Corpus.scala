@@ -1,6 +1,6 @@
 package graft.corpus
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** One row of the engine's input corpus — the exact `input_hint` shape:
@@ -167,8 +167,10 @@ object Corpus {
     * `code` = 200 (static corpus); live fetch layers populate it from the
     * response. NULL status = fetch never completed ⇒ rejected, not
     * silently kept. */
-  def httpOk(df: DataFrame): DataFrame =
-    df.filter(coalesce(col("code"), lit(Int.MaxValue)) <= 299)
+  def httpOk(df: DataFrame): DataFrame = df.filter(okStatus)
+
+  /** the gate's predicate: true iff the row's `code` passes httpOk */
+  def okStatus: Column = coalesce(col("code"), lit(Int.MaxValue)) <= 299
 
   /** Per-row content integrity invariant vs the source (input_hint):
     * recompute sha2(content,256) and compare with the carried column.

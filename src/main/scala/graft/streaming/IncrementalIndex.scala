@@ -1,13 +1,15 @@
 package graft.streaming
 
 import graft.index.InvertedIndex
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.unsafe.types.UTF8String
+import scala.jdk.CollectionConverters._
 
 /** Streaming ingestion surface. The reference has no streaming (SURVEY.md
   * §2.10) — its analog is the long-running crawl job with cooperative stop
@@ -215,7 +217,8 @@ object IncrementalIndex {
     tableForDocs(store, spark, "postings", ids, before)
 
   /** maximum batch size for which replaced-doc lookup uses the pushed-down
-    * isin path; larger batches fall back to a semi join */
+    * isin path; larger batches fall back to a semi join. Also the most rows
+    * a [[mergePage]] takes. */
   val isinThreshold = 10000
 
   /** merge one micro-batch of docs (doc_id, repo, lang, content) into the
@@ -311,6 +314,102 @@ object IncrementalIndex {
     docIds.unpersist(): Unit
   }
 
+  /** What [[mergePage]] merged: the kept version of each doc as a local
+    * frame (the batch's columns minus `seq`), every doc_id the page touched
+    * (kept or deleted), and the indexed term set of each kept doc. */
+  final case class Page(docs: DataFrame, ids: Seq[Long], terms: Map[Long, Set[String]])
+
+  /** Merge one page of docs into a store that carries the docs log — the
+    * facade's indexPage. Same live tables as [[mergeBatch]] with `rawDocs`,
+    * but page-sized work happens on the driver: one bounded collect of the
+    * batch, one collect of its tokens (the same analyzer Column chain), one
+    * `doc_id IN (…)` point-read per old-state table (doc_ids, postings,
+    * docs) with the last-writer-wins mask applied here, then one part file
+    * per written table. No shuffle stage runs.
+    *
+    * One version per doc_id, in mergeBatch's order: `seq` desc (when the
+    * batch has it), then sha2 of the indexed text desc, then lang, then
+    * repo, compared in Spark's order. Rows failing `keep` are gated out
+    * before the pick; a doc_id with no kept row is deleted. `text` maps
+    * content to the text the tokenizer sees (mergeBatch's callers pass
+    * that view as the batch). A batch of more than [[isinThreshold]] rows
+    * is refused. */
+  def mergePage(store: ParquetStateStore, batch: DataFrame,
+                lexicons: Map[String, graft.analyze.Analyzer.Lexicon] = Map.empty,
+                text: Column => Column = identity,
+                keep: Column = lit(true)): Page = {
+    val spark = batch.sparkSession
+    val rows = batch.withColumn("_sha", sha2(text(col("content")), 256))
+      .withColumn("_keep", coalesce(keep, lit(false)))
+      .limit(isinThreshold + 1).collect()
+    require(rows.length <= isinThreshold,
+      s"a page holds at most $isinThreshold rows: index a larger batch with " +
+        "SearchEngine.startIndexing or IncrementalIndex.start")
+    val schema = StructType(batch.schema.filterNot(_.name == "seq"))
+    val idOf = (r: Row) => r.getAs[Long]("doc_id")
+    val key = (r: Row) =>
+      (if (batch.columns.contains("seq")) Seq(r.getAs[Any]("seq")) else Nil) ++
+        Seq("_sha", "lang", "repo").map(c => r.getAs[Any](c))
+    val newest: Ordering[Row] = (a, b) =>
+      key(a).zip(key(b)).iterator.map { case (x, y) => sparkOrder(x, y) }.find(_ != 0).getOrElse(0)
+    val kept = rows.filter(_.getAs[Boolean]("_keep")).groupBy(idOf)
+      .values.map(_.max(newest)).toSeq.sortBy(idOf)
+    val docs = spark.createDataFrame(
+      kept.map(r => Row.fromSeq(schema.fieldNames.toSeq.map(c => r.getAs[Any](c)))).asJava, schema)
+    val ids = rows.map(idOf).distinct.sorted.toSeq
+    if (ids.isEmpty) return Page(docs, ids, Map.empty)
+
+    val tokens = InvertedIndex.tokensByLang(docs.withColumn("content", text(col("content"))), lexicons)
+      .select("doc_id", "term").collect()
+    val tf: Map[Long, Map[String, Long]] = tokens.groupBy(_.getLong(0)).map { case (d, ts) =>
+      d -> ts.groupMapReduce(_.getString(1))(_ => 1L)(_ + _)
+    }
+    val repo = kept.map(r => idOf(r) -> r.getAs[String]("repo")).toMap
+    // old state of the page's docs: the newest committed batch that wrote
+    // a doc_id holds its live rows (the last-writer-wins mask)
+    val batchId = store.nextBatch
+    def pointRead(name: String, cols: String*): Seq[Row] =
+      store.readUnion(spark, name, batchId).toSeq.flatMap(
+        _.filter(col("doc_id").isin(ids: _*)).select((cols :+ "_b").map(col): _*).collect())
+    val lastB = pointRead("doc_ids", "doc_id").groupMapReduce(_.getLong(0))(_.getLong(1))(math.max)
+    def live(name: String, cols: String*): Seq[Row] =
+      pointRead(name, "doc_id" +: cols: _*)
+        .filter(r => lastB.get(r.getLong(0)).contains(r.getLong(cols.size + 1)))
+    val removed = live("postings", "term").map(r => (r.getLong(0), r.getString(1)))
+    val oldRepo = live("docs", "repo").map(r => r.getLong(0) -> r.getString(1)).toMap
+
+    val added = for ((d, ts) <- tf.toSeq; (t, n) <- ts) yield (d, t, n)
+    def signed[K](plus: Seq[K], minus: Seq[K]): Seq[(K, Long)] =
+      (plus.map(_ -> 1L) ++ minus.map(_ -> -1L)).groupMapReduce(_._1)(_._2)(_ + _).toSeq.filter(_._2 != 0)
+    val termDelta = signed(added.map(_._2), removed.map(_._2))
+    val repoDelta = signed(added.map(p => (repo(p._1), p._2)),
+      removed.flatMap { case (d, t) => oldRepo.get(d).map(_ -> t) })
+    def write(name: String, rows: Seq[Row]): Unit =
+      if (rows.nonEmpty)
+        store.writeTable(name, spark.createDataFrame(rows.asJava, tableSchemas(name)).coalesce(1), batchId)
+    // every table, THEN the pointer (atomic publish)
+    write("postings", added.map { case (d, t, n) => Row(d, t, n) })
+    write("doc_ids", ids.map(Row(_)))
+    write("term_stats", termDelta.map { case (t, n) => Row(t, n) })
+    write("doc_stats", tf.toSeq.map { case (d, ts) => Row(d, ts.values.sum) })
+    if (kept.nonEmpty) store.writeTable("docs", docs.coalesce(1), batchId)
+    write("term_stats_repo", repoDelta.map { case ((r, t), n) => Row(r, t, n) })
+    store.commit(batchId)
+    Page(docs, ids, tf.map { case (d, ts) => d -> ts.keySet })
+  }
+
+  /** Spark's ascending order of two collected values, nulls first: strings
+    * by their UTF-8 bytes (not UTF-16 units), anything else by its own
+    * order */
+  private def sparkOrder(a: Any, b: Any): Int = (a, b) match {
+    case (null, null) => 0
+    case (null, _) => -1
+    case (_, null) => 1
+    case (x: String, y: String) => UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+    case (x: Comparable[Any @unchecked], y) => x.compareTo(y)
+    case _ => throw new IllegalArgumentException(s"no order for $a and $b")
+  }
+
   /** fold the whole batch log into a fresh base batch (bounds read fan-in
     * after many micro-batches; the streaming twin of IndexWriter.compact) */
   def compactState(store: ParquetStateStore, spark: SparkSession): Unit =
@@ -371,50 +470,10 @@ object IncrementalIndex {
       .start()
 
   /** Single-doc upsert (reference POST /api/indexPage,
-    * IndexingServiceImpl.java:84-94,244-264): one-row batch through the
-    * same merge path; storage ids are store-allocated, so upserts can
+    * IndexingServiceImpl.java:84-94,244-264) on a store without the docs
+    * log: one-row batch through mergeBatch (the facade's indexPage uses
+    * mergePage); storage ids are store-allocated, so upserts can
     * interleave freely with streaming batches and compaction. */
   def upsertDoc(state: ParquetStateStore, doc: DataFrame): Unit =
     mergeBatch(state, doc)
-
-  /** Remove `ids` (a doc_id DataFrame) from the live index — the
-    * reference's delete-without-reindex path (an error re-fetch REMOVES the
-    * old page and indexes nothing, IndexingServiceImpl.java:135-137 via
-    * :244-264). O(|ids| + touched postings): a doc_ids-only batch masks the
-    * docs' postings/doc_stats via last-writer-wins, and term_stats gets the
-    * signed negative deltas from a point-read of their OLD postings — the
-    * index is never rescanned. */
-  def deleteDocs(store: ParquetStateStore, ids: DataFrame): Unit = {
-    val spark = ids.sparkSession
-    val batchId = store.nextBatch
-    val docIds = ids.select("doc_id").distinct().cache()
-    val nIds = docIds.count()
-    if (nIds == 0) { docIds.unpersist(); return }
-    lazy val idList = docIds.collect().map(_.getLong(0)).toSeq
-    val removed =
-      if (store.latestBatch.isEmpty) None
-      else if (nIds <= isinThreshold) postingsForDocs(store, spark, idList, batchId)
-      else readPostings(store, spark, batchId).map(_.join(docIds, Seq("doc_id"), "left_semi"))
-    store.writeTable("doc_ids", docIds, batchId)
-    removed.foreach { old =>
-      val oldC = old.cache()
-      store.writeTable("term_stats",
-        oldC.groupBy("term").agg((-count(lit(1))).as("ddf")), batchId)
-      // per-repo decrements when the store maintains the docs log (the
-      // doc_ids mask row above already deletes the docs-table rows)
-      val oldRepos =
-        if (nIds <= isinThreshold)
-          tableForDocs(store, spark, "docs", idList, batchId).map(_.select("doc_id", "repo"))
-        else readDocs(store, spark, batchId)
-          .map(_.select("doc_id", "repo").join(docIds, Seq("doc_id"), "left_semi"))
-      oldRepos.foreach { or =>
-        store.writeTable("term_stats_repo",
-          oldC.select("doc_id", "term").join(or, "doc_id")
-            .groupBy("repo", "term").agg((-count(lit(1))).as("ddf")), batchId)
-      }
-      oldC.unpersist(): Unit
-    }
-    store.commit(batchId)
-    docIds.unpersist(): Unit
-  }
 }

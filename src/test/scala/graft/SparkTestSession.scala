@@ -33,10 +33,17 @@ object SparkTestSession {
   /** `body`'s result and the call site ("<action> at <File>.scala:<line>")
     * of every Spark job it started, in start order */
   def jobNamesOf[T](body: => T): (T, Seq[String]) = {
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val (v, jobs) = jobStagesOf(body)
+    (v, jobs.map(_._1))
+  }
+
+  /** `body`'s result and, for every Spark job it started (in start order),
+    * its call site and its number of stages, skipped ones included */
+  def jobStagesOf[T](body: => T): (T, Seq[(String, Int)]) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        names.add(e.stageInfos.maxBy(_.stageId).name): Unit
+        jobs.add((e.stageInfos.maxBy(_.stageId).name, e.stageInfos.size)): Unit
     }
     drainListenerBus()
     spark.sparkContext.addSparkListener(l)
@@ -44,7 +51,7 @@ object SparkTestSession {
       val v = body
       drainListenerBus()
       import scala.jdk.CollectionConverters._
-      (v, names.asScala.toSeq)
+      (v, jobs.asScala.toSeq)
     } finally spark.sparkContext.removeSparkListener(l)
   }
 }

@@ -3,10 +3,12 @@ package graft
 import graft.SparkTestSession.jobsOf
 import graft.streaming.IncrementalIndex
 import graft.streaming.IncrementalIndex.ParquetStateStore
+import graft.corpus.Corpus
 import graft.index.InvertedIndex
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 /** Incremental/streaming ingestion over the LSM-style batch log: merge
   * semantics (idempotent re-index, no df drift), per-batch cost shape
@@ -226,12 +228,14 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
-  test("deleteDocs removes a doc O(page): postings masked, df decremented, no index rescan") {
-    import spark.implicits._
+  test("a gated page deletes a doc O(page): postings masked, df decremented") {
     val store = new ParquetStateStore(Files.createTempDirectory("graft-stream").toString)
-    IncrementalIndex.mergeBatch(store,
-      docsDf((0L, "r0", "en", "spark join"), (1L, "r0", "en", "spark filter")))
-    IncrementalIndex.deleteDocs(store, Seq(0L).toDF("doc_id"))
+    val b = docsDf((0L, "r0", "en", "spark join"), (1L, "r0", "en", "spark filter"))
+    IncrementalIndex.mergeBatch(store, b, rawDocs = Some(b))
+    // a page whose only version fails the HTTP gate deletes its doc
+    def gone(id: Long) = IncrementalIndex.mergePage(store,
+      docsDf((id, "r0", "en", "error page")).withColumn("code", lit(404)), keep = Corpus.okStatus)
+    gone(0L)
     assert(postSet(store).map(_._1) == Set(1L))
     assert(dfMap(store) == Map("spark" -> 1L, "filter" -> 1L)) // join dropped to 0 -> absent
     // doc_stats row gone too
@@ -242,9 +246,80 @@ class StreamingSpec extends AnyFunSuite {
     val latest = store.latestBatch.get
     assert(!Files.exists(java.nio.file.Paths.get(s"${store.dir}/postings/batch=$latest")))
     // deleting an absent doc is a no-op that stays consistent
-    IncrementalIndex.deleteDocs(store, Seq(99L).toDF("doc_id"))
+    gone(99L)
     assert(postSet(store).map(_._1) == Set(1L))
     assert(dfMap(store) == Map("spark" -> 1L, "filter" -> 1L))
+  }
+
+  test("mergePage and mergeBatch leave identical live tables, step by step") {
+    import spark.implicits._
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.expressions.Window
+    val lex = Map("ru" -> graft.analyze.DefaultLexicon.russian)
+    val text = (c: org.apache.spark.sql.Column) => graft.analyze.Html.textOf(c)
+    def page(rows: (Long, String, String, String, Int)*): DataFrame =
+      rows.toDF("doc_id", "repo", "lang", "content", "code")
+    def seqPage(rows: (Long, String, String, String, Int, Long)*): DataFrame =
+      rows.toDF("doc_id", "repo", "lang", "content", "code", "seq")
+    // the reference pick: mergeBatch's own window order over the raw rows
+    def oneVersion(b: DataFrame): DataFrame = {
+      val order = (if (b.columns.contains("seq")) Seq(col("seq").desc) else Nil) ++
+        Seq(sha2(text(col("content")), 256).desc, col("lang").desc, col("repo").desc)
+      b.withColumn("_rn", row_number().over(Window.partitionBy("doc_id").orderBy(order: _*)))
+        .filter(col("_rn") === 1).drop("_rn", "seq")
+    }
+    def merged(store: ParquetStateStore, raw: DataFrame): Unit =
+      IncrementalIndex.mergeBatch(store, raw.withColumn("content", text(col("content"))),
+        lexicons = lex, rawDocs = Some(raw))
+    def tables(store: ParquetStateStore): Map[String, Set[Seq[Any]]] = Map(
+      "postings" -> IncrementalIndex.readPostings(store, spark),
+      "doc_stats" -> IncrementalIndex.readDocStats(store, spark),
+      "term_stats" -> IncrementalIndex.readTermStats(store, spark),
+      "term_stats_repo" -> IncrementalIndex.readTermStatsRepo(store, spark),
+      "docs" -> IncrementalIndex.readDocs(store, spark)
+    ).map { case (t, df) =>
+      t -> df.get.select(df.get.columns.sorted.map(col): _*).collect().map(_.toSeq).toSet
+    }
+    val base = page((0L, "r0", "en", "alpha beta", 200), (1L, "r0", "en", "alpha gamma", 200),
+      (2L, "r1", "en", "beta delta", 200))
+    val viaPage = new ParquetStateStore(Files.createTempDirectory("graft-parity").toString)
+    var viaBatch = new ParquetStateStore(Files.createTempDirectory("graft-parity").toString)
+    merged(viaPage, base)
+    merged(viaBatch, base)
+    // the live raw rows, to rebuild the mergeBatch twin after a delete
+    var live: Map[Long, Row] = base.collect().map(r => r.getLong(0) -> r).toMap
+    val fullwidth = "\uFF21" // UTF-16 orders it above the emoji, UTF-8 below
+    val emoji = "\uD83D\uDE00"
+    val steps: Seq[(String, DataFrame)] = Seq(
+      "new doc" -> page((3L, "r1", "en", "epsilon zeta", 200)),
+      "replacement" -> page((0L, "r0", "en", "alpha eta eta", 200)),
+      "moves repo" -> page((1L, "r2", "en", "alpha gamma theta", 200)),
+      "gated 404 delete" -> page((2L, "r1", "en", "not found", 404)),
+      "stop words only" -> page((4L, "r2", "en", "the a", 200)),
+      "two versions, seq" -> seqPage((5L, "r0", "en", "older iota", 200, 1L),
+        (5L, "r0", "en", "newer kappa", 200, 2L), (3L, "r1", "en", "lambda", 200, 7L),
+        (3L, "r1", "en", "mu", 200, 3L)),
+      "two versions, no seq" -> page((6L, "r1", "en", "delta one", 200), (6L, "r1", "en", "epsilon two", 200)),
+      "non-ASCII repo tie" -> page((7L, fullwidth, "en", "same words", 200), (7L, emoji, "en", "same words", 200)),
+      "html" -> page((8L, "r0", "en",
+        "<html><head><title>T</title></head><body><p>hello nu world</p><script>var xi;</script></body></html>", 200)),
+      "ru with a lexicon" -> page((9L, "r3", "ru", "дома у реки", 200)))
+    for ((step, raw) <- steps) {
+      val p = IncrementalIndex.mergePage(viaPage, raw, lex, text, Corpus.okStatus)
+      val chosen = oneVersion(raw.filter(Corpus.okStatus))
+      val deleted = p.ids.toSet -- chosen.select("doc_id").collect().map(_.getLong(0))
+      live = live -- deleted ++ chosen.collect().map(r => r.getLong(0) -> r)
+      if (deleted.isEmpty) merged(viaBatch, chosen)
+      else {
+        // mergeBatch has no delete: its twin is a fresh build of the live docs
+        viaBatch = new ParquetStateStore(Files.createTempDirectory("graft-parity").toString)
+        merged(viaBatch, spark.createDataFrame(live.values.toSeq.asJava, base.schema))
+      }
+      val (a, b) = (tables(viaPage), tables(viaBatch))
+      for (t <- a.keys) assert(a(t) == b(t), s"$step: $t diverged\npage:  ${a(t)}\nbatch: ${b(t)}")
+      assert(p.docs.collect().map(_.toSeq).toSet == chosen.collect().map(_.toSeq).toSet, s"$step: page rows")
+    }
+    assert(tables(viaPage)("docs").exists(_.contains(emoji)), "Spark's string order picks the emoji repo")
   }
 
   test("end-to-end Structured Streaming: file source -> foreachBatch -> queryable state") {

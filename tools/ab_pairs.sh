@@ -8,7 +8,9 @@
 # host window; which side runs first alternates from pair to pair.
 # Prints one JSON line per seed (each side's end-to-end metrics, `correct`
 # and `failed`), then one JSON line per metric with both medians, the
-# parent's quartiles and how many pairs the change won.
+# parent's quartiles and how many pairs the change won. The same summary
+# covers each `*_p50_ms` of the run's `context.detail` (e.g.
+# `upsert_p50_ms`), so a claim can name its layer from the same runs.
 #
 # PARENT_REV is exported with `git archive` into a directory outside the
 # repository and builds there; an export leaves nothing registered in
@@ -58,13 +60,22 @@ bench, out, workload, seeds = sys.argv[1], sys.argv[2], sys.argv[3], sys.argv[4:
 lower = {m["name"] for m in json.load(open(bench))["end_to_end"] if m["better"] == "lower"}
 
 def result(side, seed):
-    """the run's result line, or None if it printed none"""
+    """the run's result line with the `*_p50_ms` of its context line's
+    detail under "detail", or None if it printed no result"""
     try:
         lines = [l for l in open(f"{out}/{side}-{seed}.out") if l.strip()]
         r = json.loads(lines[-1])
-        return r if "metrics" in r else None
     except (OSError, IndexError, ValueError):
         return None
+    if "metrics" not in r:
+        return None
+    try:
+        detail = json.loads(lines[-2])["context"]["detail"]
+    except (IndexError, ValueError, KeyError, TypeError):
+        detail = {}
+    r["detail"] = {k: v for k, v in detail.items()
+                   if k.endswith("_p50_ms") and isinstance(v, (int, float))}
+    return r
 
 def quartiles(xs):
     if len(xs) < 2:
@@ -73,14 +84,16 @@ def quartiles(xs):
     return q[0], q[2]
 
 def better(name):
-    return (lambda c, p: c < p) if name in lower else (lambda c, p: c > p)
+    lower_is_better = name in lower or name.startswith("detail.")
+    return (lambda c, p: c < p) if lower_is_better else (lambda c, p: c > p)
 
 pairs = []
 for seed in seeds:
     p, c = result("parent", seed), result("change", seed)
     side = lambda r: None if r is None else {
         "correct": r["correct"], "failed": r["failed"],
-        **{k: v["value"] for k, v in r["metrics"].items()}}
+        **{k: v["value"] for k, v in r["metrics"].items()},
+        **{f"detail.{k}": v for k, v in r["detail"].items()}}
     row = {"workload": workload, "seed": int(seed),
            "first": "parent" if seeds.index(seed) % 2 == 0 else "change",
            "parent": side(p), "change": side(c)}
