@@ -7,9 +7,12 @@ import graft.query.{Bm25, BooleanQuery, QueryFrontend, Search, Wand}
 import graft.stats.Stats
 import graft.streaming.IncrementalIndex
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+import scala.jdk.CollectionConverters._
 
 /** The reference's API surface (controllers/ApiController.java:21-47) as a
   * Spark-native facade — a user of the reference can switch endpoint by
@@ -39,9 +42,11 @@ import org.apache.spark.storage.StorageLevel
   * filter + local-rows union per upsert, folded into a fresh
   * localCheckpoint every `checkpointEvery` upserts: amortized
   * O(corpus / checkpointEvery) per call, analyzed-plan size bounded by the
-  * fold period. Reads reconstruct live tables from the batch log lazily
-  * (cached until the next mutation); the log is compacted once its batch
-  * fan-in exceeds `compactEvery`.
+  * fold period. Reads serve a cached base of live tables read from the
+  * batch log plus a driver-side delta of the pages merged since: an upsert
+  * advances both without a store read, and only a fold, a compaction or a
+  * rebuild reads a new base. The log is compacted once its batch fan-in
+  * exceeds `compactEvery`.
   *
   * Ingestion runs extract-then-lemmatize (reference: Jsoup text() before
   * Lemmatizator, tools/Lemmatizator.java:1): `indexedView` normalizes HTML
@@ -108,18 +113,68 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
   private def indexedView(df: DataFrame): DataFrame =
     df.withColumn("content", Html.textOf(col("content")))
 
-  // ---- lazily reconstructed live tables (invalidated per mutation) -----
-  /** The query-independent serve state of one index generation: the live
-    * tables, the driver-side term → df dictionary collected once from
-    * their cached term stats, and the per-repo doc-id sets that
-    * site-scoped WAND queries admit through. Built on first use, dropped
-    * together by [[invalidateTables]]. A search holds it (`acquire` /
-    * `release`) so a mutation never destroys a site set under a running
-    * ranking job: the last holder destroys them instead. */
-  private final class Pinned(val tables: InvertedIndex.Tables, corpus: DataFrame) {
-    lazy val dictionary: Map[String, Long] =
-      tables.termStats.select("term", "df").collect()
-        .iterator.map(r => r.getString(0) -> r.getLong(1)).toMap
+  // ---- serve state: cached base tables plus a driver-side delta --------
+  import SearchEngine.{Counts, Delta}
+
+  /** The lifetime of cached data that searches read: a search holds it, a
+    * mutation replaces it, and `drop` runs once it is replaced and its last
+    * holder has released it, so no search ever recomputes it from lineage. */
+  private class Lease(drop: () => Unit) {
+    private var holders = 0
+    private var replaced = false
+    def hold(): Unit = synchronized { holders += 1 }
+    def release(): Unit = synchronized { holders -= 1; if (replaced && holders == 0) drop() }
+    def replace(): Unit = synchronized { replaced = true; if (holders == 0) drop() }
+  }
+
+  /** The live tables as read from the store (the only way they are built),
+    * cached until the next base replaces them. Every generation in between
+    * shares them. */
+  private final class Base(val postings: DataFrame, val termStats: DataFrame, val docStats: DataFrame)
+    extends Lease(() => { postings.unpersist(); termStats.unpersist(); docStats.unpersist() })
+
+  /** The query-independent serve state of one index generation: a base, the
+    * delta over it, the driver-side counts, the corpus, and the per-repo
+    * doc-id sets that site-scoped WAND queries admit through. An upsert
+    * derives the next generation from this one and its page ([[advance]]);
+    * a fold, a compaction or a rebuild drops it. A search holds it
+    * (`acquire` / `release`), and with it the base and the corpus it reads,
+    * so a mutation never drops them or destroys a site set under a running
+    * job: the last holder does. */
+  private final class Pinned(val base: Base, delta: Delta, counts: Counts,
+                             val corpus: DataFrame, corpusRoot: Option[Lease]) {
+    def dictionary: Map[String, Long] = counts.dictionary
+
+    /** one flat plan per table whatever the delta's age: the base minus
+      * every touched key, plus the delta's live rows as a local relation */
+    private def patch(table: DataFrame, key: String, keys: Iterable[Any], ddl: String,
+                      rows: Seq[Row]): DataFrame =
+      if (keys.isEmpty) table
+      else table.filter(!col(key).isin(keys.toSeq: _*))
+        .unionByName(spark.createDataFrame(rows.asJava, StructType.fromDDL(ddl)))
+    private def postings(from: DataFrame, inScope: String => Boolean): DataFrame =
+      patch(from, "doc_id", delta.docs.keys, "doc_id BIGINT, term STRING, tf BIGINT",
+        for ((d, Some((r, tf))) <- delta.docs.toSeq if inScope(r); (t, n) <- tf.toSeq) yield Row(d, t, n))
+
+    lazy val tables: InvertedIndex.Tables = InvertedIndex.Tables(
+      postings(base.postings, _ => true),
+      patch(base.termStats, "term", delta.terms, "term STRING, df BIGINT",
+        delta.terms.toSeq.flatMap(t => dictionary.get(t).map(Row(t, _)))),
+      patch(base.docStats, "doc_id", delta.docs.keys, "doc_id BIGINT, dl BIGINT",
+        delta.docs.toSeq.collect { case (d, Some((_, tf))) => Row(d, tf.values.sum) }),
+      counts.nDocs, counts.avgDl)
+
+    /** the live postings of `repo`'s docs. The semi-join scopes the base
+      * alone and the delta is scoped here: joined above the union, it would
+      * be pushed into both branches and broadcast the repo's ids twice. */
+    def sitePostings(repo: String): DataFrame = postings(
+      base.postings.join(corpus.filter(col("repo") === repo).select("doc_id"), Seq("doc_id"), "left_semi"),
+      _ == repo)
+
+    /** the next generation: this one with `page` merged into `next` */
+    def advance(page: IncrementalIndex.Page, next: DataFrame): Pinned =
+      new Pinned(base, delta + page, counts + page, next, corpusRoot)
+
     /** repo → its ascending doc ids, broadcast; None for a repo with no docs */
     private val sites =
       new java.util.concurrent.ConcurrentHashMap[String, Option[Broadcast[Array[Long]]]]()
@@ -138,10 +193,14 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
         }
       })
 
-    def acquire(): Unit = synchronized { users += 1 }
-    def release(): Unit = synchronized { users -= 1; if (retired && users == 0) dropSites() }
+    def acquire(): Unit = synchronized {
+      users += 1; base.hold(); corpusRoot.foreach(_.hold())
+    }
+    def release(): Unit = synchronized {
+      users -= 1; base.release(); corpusRoot.foreach(_.release())
+      if (retired && users == 0) dropSites()
+    }
     def retire(): Unit = synchronized {
-      tables.postings.unpersist(); tables.termStats.unpersist(); tables.docStats.unpersist()
       retired = true
       if (users == 0) dropSites()
     }
@@ -151,15 +210,17 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     }
   }
   private var live: Option[Pinned] = None
+  /** the lease on the cached or checkpointed frame the corpus chain starts
+    * from; None for a corpus read back from the docs log (attach) */
+  private var corpusRoot: Option[Lease] = None
   /** every site-set broadcast not yet destroyed */
   private val siteSets = java.util.concurrent.ConcurrentHashMap.newKeySet[Broadcast[Array[Long]]]()
-  private[graft] def liveSiteSets: Set[Broadcast[Array[Long]]] = {
-    import scala.jdk.CollectionConverters._
-    siteSets.asScala.toSet
-  }
+  private[graft] def liveSiteSets: Set[Broadcast[Array[Long]]] = siteSets.asScala.toSet
 
+  /** drop the generation and replace its base: the next search reads a new
+    * base from the store */
   private def invalidateTables(): Unit = {
-    live.foreach(_.retire())
+    live.foreach { p => p.retire(); p.base.replace() }
     live = None
   }
 
@@ -170,15 +231,31 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
       val ts = IncrementalIndex.readTermStats(store, spark).get.cache()
       val ds = IncrementalIndex.readDocStats(store, spark).get.cache()
       val nDocs = corpus.count() // checkpointed blocks — no source rescan
-      val avgRow = ds.agg(avg(col("dl"))).head()
-      val avgDl = if (avgRow.isNullAt(0)) 0.0 else avgRow.getDouble(0)
-      val pin = new Pinned(InvertedIndex.Tables(p, ts, ds, nDocs, avgDl), corpus)
+      val dl = ds.agg(coalesce(sum(col("dl")), lit(0L)), count(lit(1))).head()
+      val dictionary = ts.select("term", "df").collect()
+        .iterator.map(r => r.getString(0) -> r.getLong(1)).toMap
+      val pin = new Pinned(new Base(p, ts, ds), Delta(Map.empty, Set.empty),
+        Counts(dictionary, nDocs, dl.getLong(0), dl.getLong(1)), corpus, corpusRoot)
       live = Some(pin)
       pin
     }
   }
 
+  /** `f` on the current generation, held while it runs */
+  private def withPinned[T](f: Pinned => T): T = {
+    val pin = synchronized { val p = pinned; p.acquire(); p }
+    try f(pin) finally pin.release()
+  }
+
+  /** `df` cached as the root a corpus chain starts from */
+  private def cachedRoot(df: DataFrame): DataFrame = {
+    val root = df.cache()
+    corpusRoot = Some(new Lease(() => root.unpersist(): Unit))
+    root
+  }
+
   private[graft] def tables: InvertedIndex.Tables = pinned.tables
+  private[graft] def dictionary: Map[String, Long] = pinned.dictionary
 
   /** full index build — refuses while one is in flight (reference guard,
     * IndexingServiceImpl.java:58-65; the reference answers the start
@@ -193,7 +270,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
       val gated =
         if (corpus.columns.contains("code")) graft.corpus.Corpus.httpOk(corpus)
         else corpus
-      corpus = gated.cache()
+      corpus = cachedRoot(gated)
       invalidateTables()
       store = freshStore()
       // one whole-corpus batch through the SAME merge path upserts use —
@@ -236,7 +313,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
       val gated =
         if (corpus.columns.contains("code")) graft.corpus.Corpus.httpOk(corpus)
         else corpus
-      synchronized { corpus = gated.cache() }
+      synchronized { corpus = cachedRoot(gated) }
       val t = InvertedIndex.build(indexedView(corpus), lexicons = lexicons)
       val shards = IndexWriter.shardPostings(t.postings, t.docStats, t.avgDl, cfg)
         .persist(StorageLevel.MEMORY_AND_DISK_SER) // encode once across groups
@@ -349,6 +426,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     // a page the corpus cannot take fails here, before the store moves
     corpus.unionByName(doc2.drop("seq")): Unit
     val page = IncrementalIndex.mergePage(store, doc2, lexicons, Html.textOf, keep)
+    var folded = false
     if (page.ids.nonEmpty) {
       // corpus replace is a LAZY chain over the last checkpoint: a filter
       // and a union with the page's local rows per upsert, so a later
@@ -359,19 +437,29 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
       sinceCheckpoint += 1
       if (sinceCheckpoint >= checkpointEvery) {
         corpus = corpus.localCheckpoint(true)
+        // the checkpoint does not read the old root: drop it once unheld.
+        // The checkpoint's blocks belong to the RDD under its frame.
+        val blocks = corpus.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
+        corpusRoot.foreach(_.replace())
+        corpusRoot = Some(new Lease(() => blocks.foreach(_.unpersist(false)): Unit))
         sinceCheckpoint = 0
+        folded = true
       }
     }
     // percolate the PAGE ONLY against the stored alert queries, on the
     // driver from its indexed term sets; matches accumulate until
     // drainAlerts()
     val alerts = alertQueries.toSeq.sortBy(_._1)
-    for ((d, terms) <- page.terms.toSeq.sortBy(_._1); (id, q) <- alerts if q.forall(terms))
+    for ((d, tf) <- page.postings.toSeq.sortBy(_._1); (id, q) <- alerts if q.forall(tf.contains))
       alertHits += ((id, d))
     // bound read fan-in: fold the log once it grows past compactEvery
-    if (store.pointer.exists(p => p._1 - p._2 >= compactEvery))
-      IncrementalIndex.compactState(store, spark)
-    invalidateTables()
+    val compacted = store.pointer.exists(p => p._1 - p._2 >= compactEvery)
+    if (compacted) IncrementalIndex.compactState(store, spark)
+    // the serve state follows the page without a store read, except where
+    // the corpus or the log was folded: there the next search reads a new
+    // base, so a delta spans at most `checkpointEvery` pages
+    if (folded || compacted) invalidateTables()
+    else if (page.ids.nonEmpty) live = live.map { p => p.retire(); p.advance(page, corpus) }
     persisted = None // the compressed snapshot no longer matches the LSM
     invalidateResponses() // cached responses may cite the replaced/deleted doc
     true
@@ -456,13 +544,13 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     // mutators (under the same lock), so reading them under it prevents a
     // concurrent indexPage from pairing new corpus content with old
     // postings mid-search
-    val (corpus, pin, snap, prior, gen) = synchronized {
+    val (pin, snap, prior, gen) = synchronized {
       val pin = pinned
       pin.acquire()
-      (this.corpus, pin, persisted, authorityPrior, generation)
+      (pin, persisted, authorityPrior, generation)
     }
     val resp =
-      try { afterSnapshot(); doSearch(corpus, pin, snap, prior, query, site, offset, limit, lang) }
+      try { afterSnapshot(); doSearch(pin, snap, prior, query, site, offset, limit, lang) }
       finally pin.release()
     beforeCachePut()
     // a mutation since the snapshot has made this response stale: it still
@@ -484,7 +572,11 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
   def searchAfter(query: String, afterScore: Double, afterDoc: Long,
                   limit: Int = 20, lang: String = "en"): SearchResponse = {
     require(indexed, "index not built")
-    val (corpus, pin) = synchronized { (this.corpus, pinned) }
+    withPinned(pin => searchAfter(pin, query, afterScore, afterDoc, limit, lang))
+  }
+
+  private def searchAfter(pin: Pinned, query: String, afterScore: Double, afterDoc: Long,
+                          limit: Int, lang: String): SearchResponse = {
     val t = pin.tables
     val lex = lexicons.getOrElse(lang, Analyzer.emptyLexicon)
     if (Analyzer.queryTerms(lang, query, lex).isEmpty)
@@ -499,7 +591,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     val total = Search.conjunctive(t.postings, kept).count()
     val top = Search.bm25TopKAfter(t.postings, t.docStats, dfs, t.nDocs,
       t.avgDl, limit, afterScore, afterDoc)
-    SearchResponse(result = true, total, items(corpus, pageOf(top), dfs.keySet), null)
+    SearchResponse(result = true, total, items(pin.corpus, pageOf(top), dfs.keySet), null)
   }
 
   /** Boolean-tree search (AND/OR/NOT, [[graft.query.BooleanQuery]]) —
@@ -511,7 +603,11 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
   def searchBoolean(tree: BooleanQuery.Node, limit: Int = 20,
                     lang: String = "en"): SearchResponse = {
     require(indexed, "index not built")
-    val (corpus, pin) = synchronized { (this.corpus, pinned) }
+    withPinned(pin => searchBoolean(pin, tree, limit, lang))
+  }
+
+  private def searchBoolean(pin: Pinned, tree: BooleanQuery.Node, limit: Int,
+                            lang: String): SearchResponse = {
     val t = pin.tables
     val lex = lexicons.getOrElse(lang, Analyzer.emptyLexicon)
     def leaves(n: BooleanQuery.Node): Seq[String] = n match {
@@ -542,10 +638,10 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     val total = BooleanQuery.matches(t.postings, q).count()
     if (total == 0) return SearchResponse(result = true, 0, Nil, null)
     val top = BooleanQuery.topK(t.postings, t.docStats, dfs, t.nDocs, t.avgDl, q, limit)
-    SearchResponse(result = true, total, items(corpus, pageOf(top), dfs.keySet), null)
+    SearchResponse(result = true, total, items(pin.corpus, pageOf(top), dfs.keySet), null)
   }
 
-  private def doSearch(corpus: DataFrame, pin: Pinned, snap: Option[SearchEngine.Persisted],
+  private def doSearch(pin: Pinned, snap: Option[SearchEngine.Persisted],
                        prior: Option[(DataFrame, Double)], query: String,
                        site: Option[String], offset: Int, limit: Int,
                        lang: String): SearchResponse = {
@@ -569,11 +665,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     val kept = plan.terms.map(_.term)
     val dfs = plan.terms.map(pt => pt.term -> pt.df).toMap
     val t = pin.tables
-    lazy val scoped = site match {
-      case Some(r) => t.postings.join(
-        corpus.filter(col("repo") === r).select("doc_id"), Seq("doc_id"), "left_semi")
-      case None => t.postings
-    }
+    lazy val scoped = site.fold(t.postings)(pin.sitePostings)
     // rank tier: a committed compressed snapshot (startIndexingPersisted,
     // not yet invalidated by a mutation) serves every query through the
     // block-max WAND path with the snapshot's FROZEN stats — rank-identical
@@ -626,7 +718,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
           .withColumnRenamed("blend", "score")))
     }
     if (total == 0) return SearchResponse(result = true, 0, Nil, null)
-    SearchResponse(result = true, total, items(corpus, page, dfs.keySet), null)
+    SearchResponse(result = true, total, items(pin.corpus, page, dfs.keySet), null)
   }
 
   /** the (doc_id, score) rows of a ranked (rank, doc_id, score) frame, in
@@ -721,6 +813,32 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
 
 object SearchEngine {
 
+  /** What changed since the base: for each doc_id touched, its repo and
+    * live term → tf, or None when it has no live postings (a tombstone:
+    * deleted, or no indexed term left); and every term whose df moved. */
+  private final case class Delta(docs: Map[Long, Option[(String, Map[String, Long])]], terms: Set[String]) {
+    def +(p: IncrementalIndex.Page): Delta =
+      Delta(docs ++ p.ids.map(id => id -> p.postings.get(id).map(p.repo(id) -> _)), terms ++ p.termDelta.keys)
+  }
+
+  /** A generation's statistics, kept on the driver: the term → df
+    * dictionary, the corpus size, and Σdl over the doc_stats rows with their
+    * count. Every dl is an integer, so Σdl / count is bit-equal to Spark's
+    * avg(dl) over the same rows. */
+  private final case class Counts(dictionary: Map[String, Long], nDocs: Long, sumDl: Long, nDl: Long) {
+    def avgDl: Double = if (nDl == 0) 0.0 else sumDl.toDouble / nDl
+    /** the counts after `p`, from its own numbers: terms whose df reaches 0
+      * leave the dictionary, as in IncrementalIndex.readTermStats */
+    def +(p: IncrementalIndex.Page): Counts = Counts(
+      p.termDelta.foldLeft(dictionary) { case (d, (t, n)) =>
+        val df = d.getOrElse(t, 0L) + n
+        if (df > 0) d.updated(t, df) else d - t
+      },
+      nDocs + p.docsDelta,
+      sumDl - p.oldDl.values.sum + p.postings.values.map(_.values.sum).sum,
+      nDl - p.oldDl.size + p.postings.size)
+  }
+
   /** a committed compressed snapshot the WAND tier serves, with the
     * `_meta.json` stats (nDocs, avgDl) it was encoded with */
   private final case class Persisted(dir: String, cfg: IndexWriter.Config, meta: TableIO.IndexMeta)
@@ -742,7 +860,6 @@ object SearchEngine {
     val runRe = "^run-(\\d+)$".r
     val s = java.nio.file.Files.list(base)
     val runs = try {
-      import scala.jdk.CollectionConverters._
       s.iterator().asScala.map(_.getFileName.toString).collect {
         case runRe(n) => n.toInt
       }.toSeq.sorted(Ordering[Int].reverse)

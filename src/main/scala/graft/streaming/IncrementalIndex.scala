@@ -314,10 +314,22 @@ object IncrementalIndex {
     docIds.unpersist(): Unit
   }
 
-  /** What [[mergePage]] merged: the kept version of each doc as a local
-    * frame (the batch's columns minus `seq`), every doc_id the page touched
-    * (kept or deleted), and the indexed term set of each kept doc. */
-  final case class Page(docs: DataFrame, ids: Seq[Long], terms: Map[Long, Set[String]])
+  /** What [[mergePage]] merged, and the delta it applied to the live
+    * tables, so a reader can advance its own copy of them without a read:
+    *  - `docs`: the kept version of each doc as a local frame (the batch's
+    *    columns minus `seq`);
+    *  - `ids`: every doc_id the page touched, kept or deleted;
+    *  - `repo`: the repo of each kept doc;
+    *  - `postings`: term → tf of each kept doc with an indexed term; a
+    *    touched id absent here has no live postings and no doc_stats row;
+    *  - `termDelta`: the signed df change per term, as written to
+    *    `term_stats`;
+    *  - `oldDl`: the dl each touched doc had before, for those that had
+    *    postings;
+    *  - `docsDelta`: kept rows minus the docs-log rows they replaced. */
+  final case class Page(docs: DataFrame, ids: Seq[Long], repo: Map[Long, String],
+                        postings: Map[Long, Map[String, Long]], termDelta: Map[String, Long],
+                        oldDl: Map[Long, Long], docsDelta: Long)
 
   /** Merge one page of docs into a store that carries the docs log — the
     * facade's indexPage. Same live tables as [[mergeBatch]] with `rawDocs`,
@@ -357,7 +369,7 @@ object IncrementalIndex {
     val docs = spark.createDataFrame(
       kept.map(r => Row.fromSeq(schema.fieldNames.toSeq.map(c => r.getAs[Any](c)))).asJava, schema)
     val ids = rows.map(idOf).distinct.sorted.toSeq
-    if (ids.isEmpty) return Page(docs, ids, Map.empty)
+    if (ids.isEmpty) return Page(docs, ids, Map.empty, Map.empty, Map.empty, Map.empty, 0L)
 
     val tokens = InvertedIndex.tokensByLang(docs.withColumn("content", text(col("content"))), lexicons)
       .select("doc_id", "term").collect()
@@ -375,8 +387,10 @@ object IncrementalIndex {
     def live(name: String, cols: String*): Seq[Row] =
       pointRead(name, "doc_id" +: cols: _*)
         .filter(r => lastB.get(r.getLong(0)).contains(r.getLong(cols.size + 1)))
-    val removed = live("postings", "term").map(r => (r.getLong(0), r.getString(1)))
-    val oldRepo = live("docs", "repo").map(r => r.getLong(0) -> r.getString(1)).toMap
+    val removedTf = live("postings", "term", "tf")
+    val removed = removedTf.map(r => (r.getLong(0), r.getString(1)))
+    val oldDocs = live("docs", "repo")
+    val oldRepo = oldDocs.map(r => r.getLong(0) -> r.getString(1)).toMap
 
     val added = for ((d, ts) <- tf.toSeq; (t, n) <- ts) yield (d, t, n)
     def signed[K](plus: Seq[K], minus: Seq[K]): Seq[(K, Long)] =
@@ -395,7 +409,8 @@ object IncrementalIndex {
     if (kept.nonEmpty) store.writeTable("docs", docs.coalesce(1), batchId)
     write("term_stats_repo", repoDelta.map { case ((r, t), n) => Row(r, t, n) })
     store.commit(batchId)
-    Page(docs, ids, tf.map { case (d, ts) => d -> ts.keySet })
+    Page(docs, ids, repo, tf, termDelta.toMap,
+      removedTf.groupMapReduce(_.getLong(0))(_.getLong(2))(_ + _), kept.size.toLong - oldDocs.size)
   }
 
   /** Spark's ascending order of two collected values, nulls first: strings
@@ -419,20 +434,23 @@ object IncrementalIndex {
         val next = store.nextBatch
         val posts = p.cache()
         val dstats = readDocStats(store, spark).get.cache() // reconstructed ONCE
+        // docs / per-repo stats fold only when the store maintains them
+        val docs = readDocs(store, spark).map(_.cache())
         store.writeTable("postings", posts, next)
-        store.writeTable("doc_ids", posts.select("doc_id").distinct()
-          .unionByName(dstats.select("doc_id")).distinct(), next)
+        // a doc with no indexed term is live through its docs row alone
+        store.writeTable("doc_ids", (Seq(posts, dstats) ++ docs).map(_.select("doc_id"))
+          .reduce(_ unionByName _).distinct(), next)
         store.writeTable("term_stats",
           posts.groupBy("term").agg(count(lit(1)).as("ddf")), next)
         store.writeTable("doc_stats", dstats, next)
-        // docs / per-repo stats fold only when the store maintains them
-        readDocs(store, spark).foreach(d => store.writeTable("docs", d, next))
+        docs.foreach(d => store.writeTable("docs", d, next))
         readTermStatsRepo(store, spark).foreach(t =>
           store.writeTable("term_stats_repo",
             t.select(col("repo"), col("term"), col("df").as("ddf")), next))
         store.commit(next, base = next)
         posts.unpersist()
-        dstats.unpersist(): Unit
+        dstats.unpersist()
+        docs.foreach(_.unpersist()): Unit
     }
 
   /** seed an EMPTY (or fresh) store with prebuilt tables as its base batch
@@ -444,8 +462,9 @@ object IncrementalIndex {
                termStatsRepo: Option[DataFrame] = None): Unit = {
     val next = store.nextBatch
     store.writeTable("postings", t.postings, next)
-    store.writeTable("doc_ids", t.postings.select("doc_id").distinct()
-      .unionByName(t.docStats.select("doc_id")).distinct(), next)
+    // the raw docs name every doc, a stop-word-only one included
+    store.writeTable("doc_ids", rawDocs.map(_.select("doc_id")).getOrElse(
+      t.postings.select("doc_id").unionByName(t.docStats.select("doc_id"))).distinct(), next)
     store.writeTable("term_stats", t.termStats.select(col("term"), col("df").as("ddf")), next)
     store.writeTable("doc_stats", t.docStats, next)
     rawDocs.foreach(d => store.writeTable("docs", d, next))

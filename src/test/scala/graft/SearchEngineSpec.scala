@@ -643,15 +643,19 @@ class SearchEngineSpec extends AnyFunSuite {
     assert(zero.result && zero.count == 0 && zero.data.isEmpty)
     assert(conjunctiveCount(pe, rare, Some(other)) == 0)
     assert(zJobs <= 1, s"zero-match site-scoped search ran $zJobs jobs")
-    // LSM tier, after an upsert: the first search rebuilds the live tables
-    // and the dictionary, the next one only ranks and decorates
+    // LSM tier, after an upsert: the upsert advanced the generation the
+    // first search pinned, so the first search after it only ranks and
+    // decorates, as the next one does
     import spark.implicits._
     val e = freshEngine()
+    assert(e.search("hash join", limit = 10).result)
     assert(e.indexPage(Seq((3L, "src0", "doc/3", "0" * 40, "en", "lsmpinword spark join"))
       .toDF("doc_id", "repo", "path", "commit", "lang", "content")))
-    assert(e.search("lsmpinword", limit = 10).count == 1)
+    val (pin, pJobs) = jobsOf(e.search("lsmpinword", limit = 10))
+    assert(pin.count == 1)
     val (lsm, lJobs) = jobsOf(e.search("spark join", limit = 10))
     assert(lsm.result && lsm.data.length == 10)
+    assert(pJobs <= 4, s"first global (LSM tier) search after an upsert ran $pJobs jobs")
     assert(lJobs <= 4, s"global (LSM tier) search after an upsert ran $lJobs jobs")
   }
 
@@ -745,7 +749,9 @@ class SearchEngineSpec extends AnyFunSuite {
     val e = freshEngine()
     def depth = e.store.pointer.map { case (latest, base, _) => latest - base + 1 }.get
     // the corpus chain gains a filter and a local union per upsert, which
-    // no later corpus read pays for with a job
+    // no later corpus read pays for with a job; a generation pinned before
+    // the first upsert is advanced by every one of them
+    assert(e.search("hash join", limit = 5).result)
     val jobsAt = (1L to 8L).map { id =>
       assert(e.indexPage(Seq((id, "src0", s"doc/$id", "0" * 40, "en", s"chainmarker$id spark join"))
         .toDF("doc_id", "repo", "path", "commit", "lang", "content")))
@@ -754,10 +760,38 @@ class SearchEngineSpec extends AnyFunSuite {
       assert(fresh.count == 1 && fresh.data.map(_.uri) == Seq(s"doc/$id"))
       val (site, sJobs) = jobsOf(e.search("spark join", site = Some("src3"), limit = 10))
       assert(site.result && site.data.nonEmpty && site.data.forall(_.site == "src3"))
+      val (warm, wJobs) = jobsOf(e.search(s"chainmarker$id spark", limit = 5))
+      assert(warm.count == 1)
+      assert(tJobs == 0, s"depth $depth: the advanced tables ran $tJobs jobs")
+      assert(fJobs <= 4 && fJobs <= wJobs, s"depth $depth: first search $fJobs jobs, warm $wJobs")
+      assert(sJobs <= 5, s"depth $depth: site-scoped search ran $sJobs jobs")
       depth -> (tJobs, fJobs, sJobs)
     }.toMap
     assert(jobsAt(3L) == jobsAt(9L),
       s"(table rebuild, fresh search, site-scoped search) jobs by depth: ${jobsAt.toSeq.sorted}")
+  }
+
+  test("a folding upsert reads a new base and answers as before") {
+    import spark.implicits._
+    val e = new SearchEngine(spark,
+      Corpus.fromDocuments(spark, "/root/testdata/sf0.001"), checkpointEvery = 3)
+    assert(e.startIndexing())
+    val before = e.search("spark join", limit = 1000)
+    val tJobs = (1L to 6L).map { id =>
+      assert(e.indexPage(Seq((20000L + id, "src0", s"doc/${20000 + id}", "0" * 40, "en",
+        s"foldmarker$id spark join")).toDF("doc_id", "repo", "path", "commit", "lang", "content")))
+      val (_, jobs) = jobsOf(e.tables)
+      val r = e.search(s"foldmarker$id", limit = 5)
+      assert(r.count == 1 && r.data.map(_.uri) == Seq(s"doc/${20000 + id}"))
+      jobs
+    }
+    // upserts 3 and 6 fold the corpus chain: the next read builds a base
+    assert(tJobs(2) > 0 && tJobs(5) > 0, s"table jobs per upsert: $tJobs")
+    assert(Seq(0, 1, 3, 4).forall(tJobs(_) == 0), s"table jobs per upsert: $tJobs")
+    val after = e.search("spark join", limit = 1000)
+    assert(after.count == before.count + 6)
+    assert((1 to 6).forall(i => after.data.exists(_.uri == s"doc/${20000 + i}")))
+    assert(e.tables.nDocs == 506 && e.statistics().pages == 506)
   }
 
   test("a two-version indexPage keeps one version in index, corpus, docs log and attach") {
@@ -870,5 +904,135 @@ class SearchEngineSpec extends AnyFunSuite {
     val fresh = e.search(q, limit = 1000)
     assert(fresh.count == stale.count + 1, "a response computed before the upsert was cached")
     assert(fresh.data.exists(_.uri == "doc/9001"))
+  }
+
+  test("a persisted build keeps a stop-word-only doc in the docs log: statistics, attach, compaction") {
+    import spark.implicits._
+    import java.nio.file.Files
+    val c = Seq((1L, "s0", "doc/1", "alpha beta"), (2L, "s0", "doc/2", "the a"), (3L, "s1", "doc/3", "gamma alpha"))
+      .map { case (id, repo, path, content) => (id, repo, path, "0" * 40, "en", content) }
+      .toDF("doc_id", "repo", "path", "commit", "lang", "content")
+    val live = new SearchEngine(spark, c)
+    assert(live.startIndexing() && live.statistics().pages == 3)
+    val stateDir = Files.createTempDirectory("graft-stopword-seed").toString
+    val e = new SearchEngine(spark, c, stateDir = Some(stateDir))
+    assert(e.startIndexingPersisted(Files.createTempDirectory("graft-stopword-tables").toString, 1L,
+      graft.index.IndexWriter.Config(docsPerShard = 64, nBuckets = 8), groupSize = 4))
+    assert(e.statistics().pages == 3)
+    assert(SearchEngine.attach(spark, stateDir).corpus.count() == 3)
+    // a compacted log keeps the doc as well, on either build path
+    for (st <- Seq(e.store, live.store)) {
+      graft.streaming.IncrementalIndex.compactState(st, spark)
+      assert(graft.streaming.IncrementalIndex.readDocs(st, spark).get.count() == 3)
+    }
+  }
+
+  test("cached serve state is dropped by its last holder: no growth over 40 upserts, a held search survives a fold") {
+    import spark.implicits._
+    val e = new SearchEngine(spark,
+      Corpus.fromDocuments(spark, "/root/testdata/sf0.001"), checkpointEvery = 8)
+    assert(e.startIndexing())
+    def up(id: Long, content: String): Unit =
+      assert(e.indexPage(Seq((id, s"src${id % 20}", s"doc/$id", "0" * 40, "en", content))
+        .toDF("doc_id", "repo", "path", "commit", "lang", "content")))
+    def cached = spark.sparkContext.getPersistentRDDs.size
+    assert(e.search("spark join", limit = 10).result)
+    val first = cached
+    // five folds of the corpus chain, each followed by a new base
+    for (id <- 1L to 40L) {
+      up(id, s"leasemarker$id spark join")
+      assert(e.searchAfter(s"leasemarker$id", 1e9, 0L).count == 1)
+      assert(e.searchBoolean(graft.query.BooleanQuery.Term(s"leasemarker$id")).count == 1)
+      assert(e.search(s"leasemarker$id").count == 1)
+      assert(cached <= first, s"upsert $id: $cached cached RDDs, $first after the first search")
+    }
+    // a search that took its snapshot before eight more upserts, the last
+    // of them a fold, answers from that snapshot: its base and its corpus
+    // checkpoint stay cached until it releases them
+    val want = e.search("spark join", limit = 1000)
+    e.afterSnapshot = () => {
+      e.afterSnapshot = () => ()
+      (1L to 8L).foreach(i => up(30000L + i, "spark join held"))
+      assert(cached > first, "the held generation's base and corpus were dropped under it")
+    }
+    val held = e.search("spark join", limit = 999)
+    assert(held.count == want.count)
+    assert(held.data.map(i => (i.uri, i.title, i.snippet, i.relevance)) ==
+      want.data.map(i => (i.uri, i.title, i.snippet, i.relevance)))
+    assert(cached <= first, s"$cached cached RDDs after the held search released, $first before")
+    val now = e.search("spark join", limit = 998)
+    assert(now.count == want.count + 8)
+    assert(cached <= first)
+  }
+
+  test("an advanced generation equals a base rebuilt from the store, and the Oracle, step by step") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{avg, col}
+    import graft.query.Oracle
+    val stateDir = java.nio.file.Files.createTempDirectory("graft-advance-parity").toString
+    type D = (Long, String, String, Int)
+    def frame(docs: Seq[D], seq: Boolean = false) = {
+      val rows = docs.zipWithIndex.map { case ((id, repo, content, code), i) =>
+        (id, repo, s"doc/$id", "0" * 40, "en", content, code, i.toLong) }
+      val df = rows.toDF("doc_id", "repo", "path", "commit", "lang", "content", "code", "seq")
+      if (seq) df else df.drop("seq")
+    }
+    val initial: Seq[D] = Seq(
+      (1L, "s0", "alpha beta gamma", 200), (2L, "s1", "beta gamma delta epsilon", 200),
+      (3L, "s2", "gamma delta", 200), (4L, "s0", "alpha alpha beta", 200),
+      (5L, "s1", "delta epsilon zeta eta", 200), (6L, "s2", "the a", 200),
+      (7L, "s0", "beta zeta", 404))
+    val e = new SearchEngine(spark, frame(initial), stateDir = Some(stateDir))
+    assert(e.startIndexing())
+    assert(e.search("alpha").result) // pins the generation every step advances
+    var docs = initial.filter(_._4 <= 299).map(d => d._1 -> d).toMap
+    val long = (1 to 24).map(i => s"w$i").mkString(" ")
+    val steps: Seq[(String, Seq[D], Boolean)] = Seq(
+      ("a new doc with a new term", Seq((10L, "s0", "omega alpha", 200)), false),
+      ("a replacement", Seq((2L, "s1", "beta beta theta", 200)), false),
+      ("a repo move", Seq((3L, "s0", "gamma delta iota", 200)), false),
+      ("a gated 404 delete", Seq((4L, "s0", "alpha gone", 404)), false),
+      ("a stop-word-only doc", Seq((11L, "s1", "the of and", 200)), false),
+      ("a replacement with no tokens", Seq((5L, "s1", "!!! ???", 200)), false),
+      ("a two-version frame", Seq((1L, "s0", "alpha kappa", 200), (1L, "s2", "lambda mu beta", 200)), true),
+      ("avgDl up", Seq((12L, "s2", s"alpha $long", 200)), false),
+      ("avgDl down", Seq((12L, "s2", "alpha", 200)), false))
+    val queries = Seq(("alpha", None), ("beta gamma", None), ("delta", None), ("omega", None),
+      ("theta", None), ("alpha beta", None), ("iota", None), ("lambda", None), ("kappa", None),
+      ("gamma", Some("s0")), ("beta", Some("s2")), ("w7", None))
+    for ((what, page, seq) <- steps) {
+      assert(e.indexPage(frame(page, seq)), what)
+      // the newest version of each doc wins; a gated one deletes it
+      for (d <- page) docs = if (d._4 <= 299) docs.updated(d._1, d) else docs - d._1
+      val (t, tJobs) = jobsOf(e.tables)
+      assert(tJobs == 0, s"$what: the generation was rebuilt ($tJobs jobs), not advanced")
+      val twin = SearchEngine.attach(spark, stateDir)
+      val r = twin.tables
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+      assert(rows(t.postings) == rows(r.postings), s"$what: postings")
+      assert(rows(t.docStats) == rows(r.docStats), s"$what: docStats")
+      assert(rows(t.termStats) == rows(r.termStats), s"$what: termStats")
+      assert(e.dictionary == twin.dictionary, s"$what: dictionary")
+      assert(t.nDocs == r.nDocs && t.nDocs == docs.size, s"$what: nDocs ${t.nDocs} vs ${r.nDocs}")
+      val sparkAvg = Option(r.docStats.agg(avg(col("dl"))).head().get(0)).fold(0.0)(_.asInstanceOf[Double])
+      assert(t.avgDl == r.avgDl && t.avgDl == sparkAvg, s"$what: avgDl ${t.avgDl} vs ${r.avgDl}, $sparkAvg")
+      val oracle = new Oracle.Index(docs.values.toSeq.map(d => Oracle.Doc(d._1, d._2, "en", d._3)))
+      assert(t.avgDl == oracle.avgDl, s"$what: Oracle avgDl ${oracle.avgDl}")
+      for ((q, site) <- queries) {
+        val got = e.search(q, site = site, limit = 20)
+        assertSameResponse(s"$what: $q @ $site", got, twin.search(q, site = site, limit = 20))
+        val p = oracle.plan("en", q)
+        if (p.missing.nonEmpty) assert(!got.result && got.error.contains(p.missing.head), s"$what: $q")
+        else {
+          val hits = oracle.score(p.terms.map(_.term)).filter(h => site.forall(_ == docs(h.docId)._2))
+            .sortBy(h => (-h.bm25, h.docId))
+          assert(got.result && got.count == hits.size, s"$what: $q @ $site count ${got.count}")
+          assert(got.data.map(_.uri) == hits.take(20).map(h => s"doc/${h.docId}"), s"$what: $q @ $site order")
+          got.data.zip(hits).foreach { case (g, h) =>
+            assert(math.abs(g.relevance - h.bm25) < 1e-9, s"$what: $q @ $site ${g.uri} score")
+          }
+        }
+      }
+    }
   }
 }

@@ -12,13 +12,16 @@
 # covers each `*_p50_ms` of the run's `context.detail` (e.g.
 # `upsert_p50_ms`), so a claim can name its layer from the same runs.
 #
-# PARENT_REV is exported with `git archive` into a directory outside the
-# repository and builds there; an export leaves nothing registered in
-# .git, unlike a worktree. Environment:
-#   AB_PARENT_DIR  where to export the parent (default: a new mktemp dir);
-#                  an existing export is reused
-#   AB_SECONDS     --seconds per run (default 15)
-#   AB_OUT         where the raw run outputs go (default: a new mktemp dir)
+# Both sides run from sibling `git archive` exports in one directory, so
+# neither side gains or loses from where its checkout sits (a run from the
+# repository itself against an export elsewhere biased cold-JVM `setup_s`
+# by about 8%). The change side is the working tree as `git add -A` would
+# stage it, written through a temporary index: the exports leave nothing
+# registered in .git and the repository's own index untouched. Environment:
+#   AB_DIR      where both exports go, as parent-<tree> and change-<tree>
+#               (default: a new mktemp dir); an existing export is reused
+#   AB_SECONDS  --seconds per run (default 15)
+#   AB_OUT      where the raw run outputs go (default: a new mktemp dir)
 # Only the benchmark is invoked; no file of the repository is changed.
 set -euo pipefail
 if [ $# -lt 3 ]; then
@@ -28,13 +31,24 @@ fi
 rev=$1 workload=$2
 shift 2
 root=$(git rev-parse --show-toplevel)
-parent=${AB_PARENT_DIR:-$(mktemp -d "${TMPDIR:-/tmp}/ab_parent.XXXXXX")}
-case "$(cd "$parent" && pwd)/" in
-  "$root"/*) echo "AB_PARENT_DIR must lie outside the repository" >&2; exit 2 ;;
+dir=${AB_DIR:-$(mktemp -d "${TMPDIR:-/tmp}/ab_pairs.XXXXXX")}
+case "$(cd "$dir" && pwd)/" in
+  "$root"/*) echo "AB_DIR must lie outside the repository" >&2; exit 2 ;;
 esac
-if [ ! -f "$parent/build.sbt" ]; then
-  git -C "$root" archive "$rev" | tar -x -C "$parent"
-fi
+index=$(mktemp "${TMPDIR:-/tmp}/ab_index.XXXXXX")
+change_tree=$(cd "$root" && cp "$(git rev-parse --git-path index)" "$index" &&
+  GIT_INDEX_FILE=$index git add -A && GIT_INDEX_FILE=$index git write-tree)
+rm -f "$index"
+parent_tree=$(git -C "$root" rev-parse "$rev^{tree}")
+export_tree() { # tree dest
+  if [ ! -f "$2/build.sbt" ]; then
+    mkdir -p "$2"
+    git -C "$root" archive "$1" | tar -x -C "$2"
+  fi
+}
+parent=$dir/parent-$parent_tree change=$dir/change-$change_tree
+export_tree "$parent_tree" "$parent"
+export_tree "$change_tree" "$change"
 out=${AB_OUT:-$(mktemp -d "${TMPDIR:-/tmp}/ab_out.XXXXXX")}
 mkdir -p "$out"
 
@@ -46,9 +60,9 @@ i=0
 for seed in "$@"; do
   # which side runs first alternates from pair to pair
   if [ $((i % 2)) -eq 0 ]; then
-    run "$parent" parent "$seed"; run "$root" change "$seed"
+    run "$parent" parent "$seed"; run "$change" change "$seed"
   else
-    run "$root" change "$seed"; run "$parent" parent "$seed"
+    run "$change" change "$seed"; run "$parent" parent "$seed"
   fi
   i=$((i + 1))
 done
