@@ -723,6 +723,8 @@ class SearchEngineSpec extends AnyFunSuite {
     import spark.implicits._
     val e = freshEngine()
     def depth = e.store.pointer.map { case (latest, base, _) => latest - base + 1 }.get
+    // a pinned generation, which every upsert advances on the driver
+    assert(e.search("hash join", limit = 5).result)
     // upsert k replaces doc k and leaves the log k + 1 batches deep
     val jobsAt = (1L to 8L).map { id =>
       val doc = Seq((id, "src0", s"doc/$id", "0" * 40, "en", s"depthmarker$id spark join"))
