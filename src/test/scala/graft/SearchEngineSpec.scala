@@ -775,8 +775,7 @@ class SearchEngineSpec extends AnyFunSuite {
 
   test("a folding upsert reads a new base and answers as before") {
     import spark.implicits._
-    val e = new SearchEngine(spark,
-      Corpus.fromDocuments(spark, "/root/testdata/sf0.001"), checkpointEvery = 3)
+    val e = new SearchEngine(spark, engine.corpus, checkpointEvery = 3)
     assert(e.startIndexing())
     val before = e.search("spark join", limit = 1000)
     val tJobs = (1L to 6L).map { id =>
@@ -931,8 +930,7 @@ class SearchEngineSpec extends AnyFunSuite {
 
   test("cached serve state is dropped by its last holder: no growth over 40 upserts, a held search survives a fold") {
     import spark.implicits._
-    val e = new SearchEngine(spark,
-      Corpus.fromDocuments(spark, "/root/testdata/sf0.001"), checkpointEvery = 8)
+    val e = new SearchEngine(spark, engine.corpus, checkpointEvery = 8)
     assert(e.startIndexing())
     def up(id: Long, content: String): Unit =
       assert(e.indexPage(Seq((id, s"src${id % 20}", s"doc/$id", "0" * 40, "en", content))
