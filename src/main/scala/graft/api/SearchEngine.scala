@@ -37,16 +37,17 @@ import scala.jdk.CollectionConverters._
   * index work costs O(page) — tokenize the page, point-read its docs' old
   * rows, append a delta batch — the reference's per-page cost profile
   * (IndexingServiceImpl.java:244-264), never an O(corpus) rebuild. The
-  * deltas are computed on the driver (IncrementalIndex.mergePage): at most
-  * 10 Spark jobs, none with a shuffle stage. The corpus replace is a lazy
-  * filter + local-rows union per upsert, folded into a fresh
-  * localCheckpoint every `checkpointEvery` upserts: amortized
-  * O(corpus / checkpointEvery) per call, analyzed-plan size bounded by the
-  * fold period. Reads serve a cached base of live tables read from the
-  * batch log plus a driver-side delta of the pages merged since: an upsert
-  * advances both without a store read, and only a fold, a compaction or a
-  * rebuild reads a new base. The log is compacted once its batch fan-in
-  * exceeds `compactEvery`.
+  * deltas are computed on the driver (IncrementalIndex.mergePage): two
+  * Spark jobs (the page's token collect and one fused point read), none
+  * with a shuffle stage; the batch is written from the driver, with no
+  * job. The corpus replace is a lazy filter + local-rows union per
+  * upsert, folded into a fresh localCheckpoint every `checkpointEvery`
+  * upserts: amortized O(corpus / checkpointEvery) per call, analyzed-plan
+  * size bounded by the fold period. Reads serve a cached base of live
+  * tables read from the batch log plus a driver-side delta of the pages
+  * merged since: an upsert advances both without a store read, and only a
+  * fold, a compaction or a rebuild reads a new base. The log is compacted
+  * once its batch fan-in exceeds `compactEvery`.
   *
   * Ingestion runs extract-then-lemmatize (reference: Jsoup text() before
   * Lemmatizator, tools/Lemmatizator.java:1): `indexedView` normalizes HTML
@@ -425,7 +426,9 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     val keep = if (doc2.columns.contains("code")) graft.corpus.Corpus.okStatus else lit(true)
     // a page the corpus cannot take fails here, before the store moves
     corpus.unionByName(doc2.drop("seq")): Unit
-    val page = IncrementalIndex.mergePage(store, doc2, lexicons, Html.textOf, keep)
+    // the docs log keeps the corpus's column order, whatever the page's
+    val doc3 = doc2.select((corpus.columns.toSeq ++ doc2.columns.filter(_ == "seq")).map(col): _*)
+    val page = IncrementalIndex.mergePage(store, doc3, lexicons, Html.textOf, keep)
     var folded = false
     if (page.ids.nonEmpty) {
       // corpus replace is a LAZY chain over the last checkpoint: a filter

@@ -1,11 +1,15 @@
 package graft.streaming
 
 import graft.index.InvertedIndex
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, classic}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.unsafe.types.UTF8String
@@ -17,13 +21,19 @@ import scala.jdk.CollectionConverters._
   * shape for both: a Structured Streaming source of new/changed docs feeding
   * `foreachBatch`, over an LSM-style append-only state:
   *
-  *   state/postings/batch=<id>    delta postings of the docs in batch <id>
-  *   state/doc_ids/batch=<id>     doc_ids (re)written by batch <id>
-  *   state/term_stats/batch=<id>  SIGNED df deltas (+new terms, −replaced)
-  *   state/doc_stats/batch=<id>   (doc_id, dl) of the batch docs
-  *   state/_committed             "<latest> <base> <lastAppliedStreamId>" —
-  *                                single atomic pointer (3rd field = highest
-  *                                Structured-Streaming batch id applied)
+  *   state/postings/batch=<id>         delta postings of the docs in batch <id>
+  *   state/doc_ids/batch=<id>          doc_ids (re)written by batch <id>
+  *   state/term_stats/batch=<id>       SIGNED df deltas (+new terms, −replaced)
+  *   state/doc_stats/batch=<id>        (doc_id, dl) of the batch docs
+  *   state/docs/batch=<id>             raw rows of the batch docs (docs log)
+  *   state/term_stats_repo/batch=<id>  SIGNED per-(repo, term) df deltas
+  *   state/_committed                  "<latest> <base> <lastAppliedStreamId>" —
+  *                                     single atomic pointer (3rd field =
+  *                                     highest Structured-Streaming batch
+  *                                     id applied)
+  *
+  * `docs` and `term_stats_repo` exist only in stores whose batches carry
+  * raw docs (the facade's always do).
   *
   * Per-batch WRITE cost is O(|batch| + |touched docs|), never O(index): a
   * batch appends its deltas and flips one pointer. The old snapshot design
@@ -40,7 +50,7 @@ import scala.jdk.CollectionConverters._
   * at depth 10 (pinned in StreamingSpec). Past 32 dirs Spark lists them
   * with one parallel-listing job, which is still one at any depth.
   *
-  * Crash contract: all four tables are written BEFORE the pointer moves, so
+  * Crash contract: all six tables are written BEFORE the pointer moves, so
   * a torn batch is invisible; a replay after a crash recomputes the same
   * deterministic deltas into the same batch dir and re-commits — and never
   * reads a path it is overwriting, because reads only consult batches ≤ the
@@ -93,6 +103,32 @@ object IncrementalIndex {
     def writeTable(name: String, df: DataFrame, batchId: Long): Unit =
       df.write.mode("overwrite").parquet(s"$dir/$name/batch=$batchId")
 
+    /** driver-held rows as batch `batchId` of `name`, with no Spark job:
+      * the batch dir is replaced (what `writeTable`'s overwrite does), then
+      * `rows`, if any, go to ONE part file through Spark's own parquet
+      * writer in this JVM — the codec, the parquet schema and the footer's
+      * row schema a DataFrame write of `rows` with `schema` would give.
+      * No rows leave no dir, so a torn attempt's dir never outlives a
+      * replay that writes nothing there. */
+    def writeRows(spark: SparkSession, name: String, schema: StructType, rows: Seq[Row],
+                  batchId: Long): Unit = {
+      val out = new Path(s"$dir/$name/batch=$batchId")
+      val job = Job.getInstance(spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf())
+      val fs = out.getFileSystem(job.getConfiguration)
+      fs.delete(out, true)
+      if (rows.nonEmpty) {
+        val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+        val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+        fs.mkdirs(out)
+        val writer = factory.newInstance(
+          new Path(out, s"part-00000-${java.util.UUID.randomUUID()}-c000${factory.getFileExtension(ctx)}")
+            .toString, schema, ctx)
+        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+        try rows.foreach(r => writer.write(toCatalyst(r).asInstanceOf[InternalRow]))
+        finally writer.close()
+      }
+    }
+
     /** atomic pointer flip — publishes every table of the batch at once.
       * `streamId >= 0` additionally records the streaming batch as applied. */
     def commit(batchId: Long, base: Long = -1L, streamId: Long = -1L): Unit = {
@@ -126,7 +162,7 @@ object IncrementalIndex {
   }
 
   /** schemas of the fixed-shape log tables; `docs` carries the corpus's own */
-  private val tableSchemas: Map[String, StructType] = Map(
+  private[graft] val tableSchemas: Map[String, StructType] = Map(
     "postings" -> "doc_id BIGINT, term STRING, tf BIGINT",
     "doc_ids" -> "doc_id BIGINT",
     "term_stats" -> "term STRING, ddf BIGINT",
@@ -136,7 +172,7 @@ object IncrementalIndex {
 
   /** the Spark schema one batch dir was written with, read from a single
     * parquet footer in this JVM (no Spark job) */
-  private def footerSchema(spark: SparkSession, batchDir: String): StructType = {
+  private[graft] def footerSchema(spark: SparkSession, batchDir: String): StructType = {
     val ls = java.nio.file.Files.list(java.nio.file.Paths.get(batchDir))
     val part = try ls.filter { p =>
       val n = p.getFileName.toString
@@ -334,10 +370,13 @@ object IncrementalIndex {
   /** Merge one page of docs into a store that carries the docs log — the
     * facade's indexPage. Same live tables as [[mergeBatch]] with `rawDocs`,
     * but page-sized work happens on the driver: one bounded collect of the
-    * batch, one collect of its tokens (the same analyzer Column chain), one
-    * `doc_id IN (…)` point-read per old-state table (doc_ids, postings,
-    * docs) with the last-writer-wins mask applied here, then one part file
-    * per written table. No shuffle stage runs.
+    * batch, one collect of its tokens (the same analyzer Column chain), and
+    * one collect of a `doc_id IN (…)` point read that unions the old-state
+    * tables (doc_ids, postings, docs), with the last-writer-wins mask
+    * applied here. Each table's batch is then written from the driver
+    * ([[ParquetStateStore.writeRows]]: one part file, no job). That is two
+    * Spark jobs, neither with a shuffle stage; the collect of a local batch
+    * folds into its local relation and runs none.
     *
     * One version per doc_id, in mergeBatch's order: `seq` desc (when the
     * batch has it), then sha2 of the indexed text desc, then lang, then
@@ -366,8 +405,8 @@ object IncrementalIndex {
       key(a).zip(key(b)).iterator.map { case (x, y) => sparkOrder(x, y) }.find(_ != 0).getOrElse(0)
     val kept = rows.filter(_.getAs[Boolean]("_keep")).groupBy(idOf)
       .values.map(_.max(newest)).toSeq.sortBy(idOf)
-    val docs = spark.createDataFrame(
-      kept.map(r => Row.fromSeq(schema.fieldNames.toSeq.map(c => r.getAs[Any](c)))).asJava, schema)
+    val docRows = kept.map(r => Row.fromSeq(schema.fieldNames.toSeq.map(c => r.getAs[Any](c))))
+    val docs = spark.createDataFrame(docRows.asJava, schema)
     val ids = rows.map(idOf).distinct.sorted.toSeq
     if (ids.isEmpty) return Page(docs, ids, Map.empty, Map.empty, Map.empty, Map.empty, 0L)
 
@@ -377,20 +416,25 @@ object IncrementalIndex {
       d -> ts.groupMapReduce(_.getString(1))(_ => 1L)(_ + _)
     }
     val repo = kept.map(r => idOf(r) -> r.getAs[String]("repo")).toMap
-    // old state of the page's docs: the newest committed batch that wrote
-    // a doc_id holds its live rows (the last-writer-wins mask)
+    // old state of the page's docs, in one scan: each table's rows of the
+    // page's doc_ids, tagged with their table. The newest committed batch
+    // that wrote a doc_id holds its live rows (the last-writer-wins mask).
     val batchId = store.nextBatch
-    def pointRead(name: String, cols: String*): Seq[Row] =
-      store.readUnion(spark, name, batchId).toSeq.flatMap(
-        _.filter(col("doc_id").isin(ids: _*)).select((cols :+ "_b").map(col): _*).collect())
-    val lastB = pointRead("doc_ids", "doc_id").groupMapReduce(_.getLong(0))(_.getLong(1))(math.max)
-    def live(name: String, cols: String*): Seq[Row] =
-      pointRead(name, "doc_id" +: cols: _*)
-        .filter(r => lastB.get(r.getLong(0)).contains(r.getLong(cols.size + 1)))
-    val removedTf = live("postings", "term", "tf")
-    val removed = removedTf.map(r => (r.getLong(0), r.getString(1)))
-    val oldDocs = live("docs", "repo")
-    val oldRepo = oldDocs.map(r => r.getLong(0) -> r.getString(1)).toMap
+    val old = Seq("doc_ids" -> Nil, "postings" -> Seq("term", "tf"), "docs" -> Seq("repo"))
+      .flatMap { case (name, cols) =>
+        store.readUnion(spark, name, batchId).map(_.filter(col("doc_id").isin(ids: _*))
+          .select((lit(name).as("_t") +: ("doc_id" +: cols :+ "_b").map(col)): _*))
+      }.reduceOption(_.unionByName(_, allowMissingColumns = true))
+      .fold(Array.empty[Row])(_.collect()).groupBy(_.getAs[String]("_t"))
+    def rowsOf(name: String): Seq[Row] = old.getOrElse(name, Array.empty[Row]).toSeq
+    val lastB = rowsOf("doc_ids").groupMapReduce(_.getAs[Long]("doc_id"))(_.getAs[Long]("_b"))(math.max)
+    def live(name: String): Seq[Row] =
+      rowsOf(name).filter(r => lastB.get(r.getAs[Long]("doc_id")).contains(r.getAs[Long]("_b")))
+    val removedTf = live("postings").map(r =>
+      (r.getAs[Long]("doc_id"), r.getAs[String]("term"), r.getAs[Long]("tf")))
+    val removed = removedTf.map(r => (r._1, r._2))
+    val oldDocs = live("docs")
+    val oldRepo = oldDocs.map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("repo")).toMap
 
     val added = for ((d, ts) <- tf.toSeq; (t, n) <- ts) yield (d, t, n)
     def signed[K](plus: Seq[K], minus: Seq[K]): Seq[(K, Long)] =
@@ -399,18 +443,17 @@ object IncrementalIndex {
     val repoDelta = signed(added.map(p => (repo(p._1), p._2)),
       removed.flatMap { case (d, t) => oldRepo.get(d).map(_ -> t) })
     def write(name: String, rows: Seq[Row]): Unit =
-      if (rows.nonEmpty)
-        store.writeTable(name, spark.createDataFrame(rows.asJava, tableSchemas(name)).coalesce(1), batchId)
+      store.writeRows(spark, name, tableSchemas(name), rows, batchId)
     // every table, THEN the pointer (atomic publish)
     write("postings", added.map { case (d, t, n) => Row(d, t, n) })
     write("doc_ids", ids.map(Row(_)))
     write("term_stats", termDelta.map { case (t, n) => Row(t, n) })
     write("doc_stats", tf.toSeq.map { case (d, ts) => Row(d, ts.values.sum) })
-    if (kept.nonEmpty) store.writeTable("docs", docs.coalesce(1), batchId)
+    store.writeRows(spark, "docs", schema, docRows, batchId)
     write("term_stats_repo", repoDelta.map { case ((r, t), n) => Row(r, t, n) })
     store.commit(batchId)
     Page(docs, ids, repo, tf, termDelta.toMap,
-      removedTf.groupMapReduce(_.getLong(0))(_.getLong(2))(_ + _), kept.size.toLong - oldDocs.size)
+      removedTf.groupMapReduce(_._1)(_._3)(_ + _), kept.size.toLong - oldDocs.size)
   }
 
   /** Spark's ascending order of two collected values, nulls first: strings

@@ -3,7 +3,9 @@ package graft
 import graft.SparkTestSession.{jobNamesOf, jobStagesOf, jobsOf}
 import graft.api.SearchEngine
 import graft.corpus.Corpus
+import graft.streaming.IncrementalIndex
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** API-facade behavior: endpoint semantics mirrored from the reference
   * (ApiController paths, SearchResponce shape, error payloads, result
@@ -736,10 +738,11 @@ class SearchEngineSpec extends AnyFunSuite {
     assert(jobsAt.keySet == (2L to 9L).toSet)
     assert(jobsAt(3L).size == jobsAt(9L).size,
       s"indexPage jobs by depth: ${jobsAt.toSeq.sortBy(_._1).map(d => d._1 -> d._2.size)}")
-    // page-sized work on the driver: one token collect, three point reads
-    // and one write per table, no shuffle
+    // page-sized work on the driver: one token collect and one point read
+    // over the old-state tables; the batch is written from the driver with
+    // no job, and nothing shuffles
     for ((d, jobs) <- jobsAt) {
-      assert(jobs.size <= 10, s"depth $d: ${jobs.size} jobs: $jobs")
+      assert(jobs.size <= 2, s"depth $d: ${jobs.size} jobs: $jobs")
       assert(jobs.forall(_._2 == 1), s"depth $d: a job with a shuffle stage: $jobs")
     }
     val r = e.search("depthmarker8", limit = 5)
@@ -1034,5 +1037,150 @@ class SearchEngineSpec extends AnyFunSuite {
         }
       }
     }
+  }
+
+  /** the part files of one table batch dir, by name */
+  def partFiles(dir: String): Seq[String] = {
+    val ls = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+    try ls.iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).toSeq.sorted
+    finally ls.close()
+  }
+
+  /** every live table of a store as a set of rows; doc_ids as the set of
+    * logged ids */
+  def liveTables(s: IncrementalIndex.ParquetStateStore): Map[String, Set[Seq[Any]]] = Map(
+    "postings" -> IncrementalIndex.readPostings(s, spark),
+    "doc_ids" -> s.readUnion(spark, "doc_ids").map(_.select("doc_id").distinct()),
+    "term_stats" -> IncrementalIndex.readTermStats(s, spark),
+    "doc_stats" -> IncrementalIndex.readDocStats(s, spark),
+    "docs" -> IncrementalIndex.readDocs(s, spark),
+    "term_stats_repo" -> IncrementalIndex.readTermStatsRepo(s, spark)
+  ).map { case (t, df) => t -> df.get.collect().map(_.toSeq).toSet }
+
+  test("a torn indexPage batch is invisible; re-running the upsert equals an uninterrupted run") {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    val tables = Seq("postings", "doc_ids", "term_stats", "doc_stats", "docs", "term_stats_repo")
+    def built(): (SearchEngine, String) = {
+      val dir = Files.createTempDirectory("graft-torn").toString
+      val e = new SearchEngine(spark, engine.corpus, stateDir = Some(dir))
+      assert(e.startIndexing())
+      (e, dir)
+    }
+    def page(id: Long, repo: String, content: String, code: Int = 200) =
+      Seq((id, repo, s"doc/$id", "0" * 40, "en", content, code))
+        .toDF("doc_id", "repo", "path", "commit", "lang", "content", "code")
+    def copyDir(from: String, to: String): Unit = {
+      Files.createDirectories(Paths.get(to))
+      val ls = Files.list(Paths.get(from))
+      try ls.iterator().asScala.foreach(f => Files.copy(f, Paths.get(to).resolve(f.getFileName)))
+      finally ls.close()
+    }
+    /** the batch dirs `twin` wrote for `batch`, copied into `store` with no
+      * pointer move: a crash after the table writes, before the commit */
+    def tear(twin: SearchEngine, store: IncrementalIndex.ParquetStateStore, batch: Long): Unit =
+      for (t <- tables if Files.exists(Paths.get(s"${twin.store.dir}/$t/batch=$batch")))
+        copyDir(s"${twin.store.dir}/$t/batch=$batch", s"${store.dir}/$t/batch=$batch")
+    val ((main, mainDir), (twin, _)) = (built(), built())
+    val before = liveTables(main.store)
+    val answer = main.search("spark join", limit = 10)
+    // a replacement of doc 1, run uninterrupted on the twin
+    val upsert = page(1L, "src3", "tornmarker spark join")
+    assert(twin.indexPage(upsert))
+    val next = twin.store.latestBatch.get
+    assert(main.store.nextBatch == next)
+    tear(twin, main.store, next)
+    // plus a foreign part file with other rows of the same doc
+    val foreign = Files.createTempDirectory("graft-foreign").toString
+    Seq((1L, "foreignterm", 7L)).toDF("doc_id", "term", "tf").coalesce(1)
+      .write.mode("overwrite").parquet(foreign)
+    Files.copy(Paths.get(foreign, partFiles(foreign).head),
+      Paths.get(s"${main.store.dir}/postings/batch=$next/part-00001-foreign-c000.snappy.parquet"))
+    // readers and a restarted engine serve the pre-upsert state
+    assert(main.store.latestBatch.contains(next - 1))
+    assert(liveTables(main.store) == before)
+    val restarted = SearchEngine.attach(spark, mainDir)
+    assert(restarted.store.dir == main.store.dir)
+    assert(!restarted.search("tornmarker").result && !restarted.search("foreignterm").result)
+    assertSameResponse("attach over a torn batch", restarted.search("spark join", limit = 10), answer)
+    assert(restarted.statistics().pages == 500)
+    // re-running the upsert leaves every live table equal to the twin's and
+    // exactly one part file in each table dir the upsert wrote
+    assert(restarted.indexPage(upsert))
+    assert(liveTables(restarted.store) == liveTables(twin.store))
+    for (t <- tables) {
+      val (got, want) = (s"${restarted.store.dir}/$t/batch=$next", s"${twin.store.dir}/$t/batch=$next")
+      assert(Files.exists(Paths.get(got)) == Files.exists(Paths.get(want)), t)
+      if (Files.exists(Paths.get(got))) assert(partFiles(got).size == 1, s"$t: ${partFiles(got)}")
+    }
+    assertSameResponse("re-run vs uninterrupted", restarted.search("tornmarker spark", limit = 10),
+      twin.search("tornmarker spark", limit = 10))
+    // a torn batch of one page under a re-run with ANOTHER page that writes
+    // fewer tables (a gated delete of an absent doc writes doc_ids only):
+    // none of the torn page's tables is published
+    val settled = liveTables(restarted.store)
+    assert(twin.indexPage(page(90001L, "src2", "tornnewdoc spark")))
+    tear(twin, restarted.store, next + 1)
+    assert(restarted.indexPage(page(90002L, "src2", "absent page", 404)))
+    assert(restarted.store.latestBatch.contains(next + 1))
+    val after = liveTables(restarted.store)
+    for (t <- tables if t != "doc_ids") assert(after(t) == settled(t), t)
+    assert(after("doc_ids") == settled("doc_ids") + Seq(90002L))
+    for (t <- tables if t != "doc_ids")
+      assert(!Files.exists(Paths.get(s"${restarted.store.dir}/$t/batch=${next + 1}")), t)
+    assert(!SearchEngine.attach(spark, mainDir).search("tornnewdoc").result)
+  }
+
+  test("a driver-written page equals a DataFrame write of its rows: footer and parquet schemas") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, sha2}
+    import org.apache.spark.sql.types.StructType
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-footer").toString
+    val e = new SearchEngine(spark, engine.corpus, stateDir = Some(dir))
+    assert(e.startIndexing())
+    val repoOf = e.corpus.select("doc_id", "repo").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    // a new doc, a replacement in place and a repo move, with `code` ahead
+    // of `content` (the corpus has it last)
+    val page = Seq(
+      (90001L, "src1", "doc/90001", "0" * 40, "en", 200, "paritynew spark join"),
+      (1L, repoOf(1L), "doc/1", "0" * 40, "en", 200, "parityreplaced hash join"),
+      (2L, if (repoOf(2L) == "src0") "src1" else "src0", "doc/2", "0" * 40, "en", 200, "paritymoved spark"))
+      .toDF("doc_id", "repo", "path", "commit", "lang", "code", "content")
+    assert(e.indexPage(page))
+    val b = e.store.latestBatch.get
+    // the docs batch: the corpus's columns in its order, the page's types
+    val withSha = page.withColumn("sha256", sha2(col("content"), 256))
+    val schemas = IncrementalIndex.tableSchemas +
+      ("docs" -> StructType(e.corpus.columns.toSeq.map(c => withSha.schema(c))))
+    assert(schemas.size == 6)
+    def footer(batchDir: String) = {
+      val part = partFiles(batchDir)
+      assert(part.size == 1, s"$batchDir: $part")
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$batchDir/${part.head}"), spark.sparkContext.hadoopConfiguration))
+      val meta = try reader.getFooter finally reader.close()
+      (IncrementalIndex.footerSchema(spark, batchDir), meta.getFileMetaData.getSchema,
+        meta.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet)
+    }
+    for ((t, schema) <- schemas) {
+      val batchDir = s"${e.store.dir}/$t/batch=$b"
+      val rows = spark.read.schema(schema).parquet(batchDir).collect()
+      assert(rows.nonEmpty, t)
+      val viaDf = Files.createTempDirectory(s"graft-footer-$t").toString + "/out"
+      spark.createDataFrame(rows.toSeq.asJava, schema).coalesce(1).write.parquet(viaDf)
+      val (got, want) = (footer(batchDir), footer(viaDf))
+      assert(got._1 == schema, s"$t: footer schema ${got._1.treeString}")
+      assert(got._1 == want._1, s"$t: footer schema\n${got._1.treeString}\nvs\n${want._1.treeString}")
+      assert(got._2 == want._2, s"$t: parquet schema\n${got._2}\nvs\n${want._2}")
+      assert(got._3 == want._3, s"$t: codecs ${got._3} vs ${want._3}")
+      assert(spark.read.parquet(viaDf).collect().map(_.toSeq).toSet == rows.map(_.toSeq).toSet, t)
+    }
+    // the docs log and an attached engine keep the corpus's columns
+    assert(IncrementalIndex.readDocs(e.store, spark).get.columns.toSeq == e.corpus.columns.toSeq)
+    assert(SearchEngine.attach(spark, dir).corpus.columns.toSeq == e.corpus.columns.toSeq)
   }
 }
