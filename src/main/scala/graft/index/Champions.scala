@@ -1,6 +1,6 @@
 package graft.index
 
-import graft.query.Bm25
+import graft.query.{Bm25, Search}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -73,18 +73,9 @@ object Champions {
     * to champion candidates. */
   def topK(champions: DataFrame, dfs: Map[String, Long], nDocs: Long,
            avgDl: Double, k: Int): DataFrame = {
-    val terms = dfs.keys.toSeq.sorted
-    val dfCol = dfs.foldLeft(lit(0L)) { case (acc, (t, d)) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
-    }
-    val scored = champions
-      .filter(col("term").isin(terms.map(x => x: Any): _*))
-      .withColumn("term_score", Bm25.score(col("tf"), dfCol, col("dl"), nDocs, avgDl))
-      .groupBy("doc_id").agg(sum(col("term_score")).as("score"))
-    scored.orderBy(desc("score"), asc("doc_id")).limit(k)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(desc("score"), asc("doc_id"))).cast("long"))
-      .select(col("rank"), col("doc_id"), col("score"))
+    val scored = Search.docScores(Search.termScores(champions, dfs, nDocs, avgDl))
+    Search.rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
+      .select(col("rank").cast("long").as("rank"), col("doc_id"), col("score"))
   }
 
   /** Tiered retrieval with an EXACTNESS certificate (IIR §7.2.1 tiered

@@ -65,16 +65,9 @@ object BooleanQuery {
   def topK(postings: DataFrame, docStats: DataFrame, dfs: Map[String, Long],
            nDocs: Long, avgDl: Double, q: Node, k: Int): DataFrame = {
     val cand = matches(postings, q)
-    val terms = positiveTerms(q).toSeq.sorted
-    val dfCol = terms.foldLeft(lit(0L)) { (acc, t) =>
-      when(col("term") === t, lit(dfs(t))).otherwise(acc)
-    }
-    val scored = postings
-      .filter(col("term").isin(terms.map(x => x: Any): _*))
-      .join(cand, Seq("doc_id"), "left_semi")
-      .join(docStats, "doc_id")
-      .withColumn("term_score", Bm25.score(col("tf"), dfCol, col("dl"), nDocs, avgDl))
-      .groupBy("doc_id").agg(sum(col("term_score")).as("score"))
+    val scored = Search.docScores(Search.termScores(
+      postings.join(cand, Seq("doc_id"), "left_semi").join(docStats, "doc_id"),
+      positiveTerms(q).map(t => t -> dfs(t)).toMap, nDocs, avgDl))
     Search.rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
       .select(col("rank"), col("doc_id"), col("score"))
   }

@@ -52,9 +52,7 @@ object Dfr {
               k: Int, c: Double = 1.0): DataFrame = {
     require(cfs.nonEmpty && cfs.values.forall(_ > 0L), "cf must be positive")
     val terms = cfs.keys.toSeq.sorted
-    val lambdaCol = terms.foldLeft(lit(0.0)) { (acc, t) =>
-      when(col("term") === t, lit(cfs(t).toDouble / nDocs.toDouble)).otherwise(acc)
-    }
+    val lambdaCol = Search.termLit(cfs.map { case (t, cf) => t -> cf.toDouble / nDocs.toDouble }, 0.0)
     val tfn = col("tf") * log(lit(1.0) + lit(c) * lit(avgDl) / col("dl")) * lit(InvLn2)
     val contrib = (lit(1.0) / (col("tfn") + lit(1.0))) *
       (col("tfn") * log(col("tfn") / col("lambda")) * lit(InvLn2)

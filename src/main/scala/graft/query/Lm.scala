@@ -56,9 +56,7 @@ object Lm {
     val muPt: Map[String, Double] =
       terms.map(t => t -> mu * (cfs(t).toDouble / totalTokens.toDouble)).toMap
     val qConst = terms.map(t => math.log(muPt(t))).sum
-    val muPtCol = terms.foldLeft(lit(0.0)) { (acc, t) =>
-      when(col("term") === t, lit(muPt(t))).otherwise(acc)
-    }
+    val muPtCol = Search.termLit(muPt, 0.0)
     val scored = postings
       .filter(col("term").isin(terms.map(x => x: Any): _*))
       .withColumn("delta", log(lit(1.0) + col("tf") / muPtCol))

@@ -63,16 +63,10 @@ object Passage {
   def maxpTopK(passagePostings: DataFrame, passageLengths: DataFrame,
                dfs: Map[String, Long], nPassages: Long, avgPl: Double,
                k: Int): DataFrame = {
-    val terms = dfs.keys.toSeq.sorted
-    val dfCol = dfs.foldLeft(lit(0L)) { case (acc, (t, d)) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
-    }
-    val scored = passagePostings
-      .filter(col("term").isin(terms.map(x => x: Any): _*))
-      .join(passageLengths, Seq("doc_id", "s"))
-      .withColumn("term_score",
-        Bm25.score(col("tf"), dfCol, col("pl"), nPassages, avgPl))
-      .groupBy("doc_id", "s").agg(sum(col("term_score")).as("score"))
+    val scored = Search.docScores(
+      Search.termScores(passagePostings.join(passageLengths, Seq("doc_id", "s")), dfs,
+        nPassages, avgPl, len = "pl"),
+      keys = Seq("doc_id", "s"))
     val best = scored
       .withColumn("rn", row_number().over(
         Window.partitionBy("doc_id").orderBy(desc("score"), asc("s"))))

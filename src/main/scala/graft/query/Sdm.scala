@@ -61,9 +61,7 @@ object Sdm {
     // --- f_T: the Lm decomposition over the unigram set
     val muPt = uniq.map(t => t -> mu * (cfs(t).toDouble / c)).toMap
     val constT = uniq.map(t => math.log(muPt(t))).sum
-    val muPtCol = uniq.foldLeft(lit(0.0)) { (acc, t) =>
-      when(col("term") === t, lit(muPt(t))).otherwise(acc)
-    }
+    val muPtCol = Search.termLit(muPt, 0.0)
     val sT = postings.filter(col("term").isin(uniq.map(x => x: Any): _*))
       .withColumn("delta", log(lit(1.0) + col("tf") / muPtCol))
       .groupBy("doc_id").agg(sum("delta").as("sd_t"))

@@ -1,7 +1,7 @@
 package graft.query
 
 import graft.index.InvertedIndex
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -9,6 +9,12 @@ import org.apache.spark.sql.functions._
   * as ONE Catalyst plan: posting fetch ⋈ intersection ⋈ scoring ⋈ top-k,
   * crossing driver→executor exactly once, vs the reference's N+1 JDBC
   * round-trips per query (SearcherPage.java:95,109,118).
+  *
+  * Every BM25 ranker here (and in Taat, BooleanQuery, Passage, Champions)
+  * scores through one kernel: [[termScores]] (term IN filter, df literal
+  * CASE, per-term score) and [[docScores]] (Σ score + n_terms per doc key,
+  * gated n_terms = |q| for AND, >= m for min-match, ungated for OR). Every
+  * term → literal column comes from [[termLit]]: one flat CASE.
   *
   * Physical shape (verified via .explain in SearchSpec):
   *   postings scan (IN-list filter on term, pushed to parquet)
@@ -37,32 +43,62 @@ object Search {
       .reduce((a, b) => a.join(b, Seq("doc_id"), "left_semi"))
   }
 
+  /** term → literal column: ONE flat CASE over the sorted terms, `default`
+    * for any other term. Every per-query literal map (df, weight, term
+    * order, synonym group, per-term constants) goes through here; a CASE
+    * nested one level per term overflows the planner's stack at a few
+    * hundred terms. */
+  private[graft] def termLit(vs: Map[String, Any], default: Any): Column = {
+    val ts = vs.keys.toSeq.sorted
+    if (ts.isEmpty) lit(default)
+    else ts.tail
+      .foldLeft(when(col("term") === ts.head, lit(vs(ts.head))))((c, t) => c.when(col("term") === t, lit(vs(t))))
+      .otherwise(lit(default))
+  }
+
+  /** The per-term BM25 rows every DataFrame ranker sums: the rows of
+    * `rows` whose term is a key of `dfs`, plus `df` and
+    * term_score = [weight ·] Bm25.score(tf, df, len). `rows` must carry
+    * term, tf and the length column `len` (a postings ⋈ docStats join, or
+    * a relation that stores its lengths); the term filter pushes below the
+    * join into the scan. Absent or unit `weights` emit no multiply. */
+  private[graft] def termScores(rows: DataFrame, dfs: Map[String, Long], nDocs: Long,
+                                avgDl: Double, len: String = "dl",
+                                weights: Map[String, Int] = Map.empty): DataFrame = {
+    val df = termLit(dfs, 0L)
+    val bm25 = Bm25.score(col("tf"), df, col(len), nDocs, avgDl)
+    rows.filter(col("term").isin(dfs.keys.toSeq.sorted.map(x => x: Any): _*))
+      .withColumn("df", df)
+      .withColumn("term_score",
+        if (weights.values.forall(_ == 1)) bm25 else termLit(weights, 0) * bm25)
+  }
+
+  /** [[termScores]] rows summed per doc key: (keys…, n_terms, score), kept
+    * where `gate` (over n_terms) holds — `n_terms = |q|` for AND,
+    * `>= m` for min-match, none for OR. */
+  private[graft] def docScores(termRows: DataFrame, gate: Option[Column] = None,
+                               keys: Seq[String] = Seq("doc_id")): DataFrame = {
+    val agg = termRows.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n_terms"), sum(col("term_score")).as("score"))
+    gate.fold(agg)(agg.filter)
+  }
+
   /** Shared conjunctive BM25 candidate scoring: one IN-filtered postings
     * scan → docStats join → hash aggregate → n_terms = |q| conjunction.
     * Returns (doc_id, score). Used by bm25TopK, blendTopK and the facade's
     * count + top-k pass so the candidate semantics cannot diverge. */
   def conjunctiveScores(postings: DataFrame, docStats: DataFrame,
                         dfs: Map[String, Long], nDocs: Long,
-                        avgDl: Double): DataFrame = {
-    val terms = dfs.keys.toSeq.sorted
-    val dfCol = dfs.foldLeft(lit(0L)) { case (acc, (t, d)) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
-    }
-    postings
-      .filter(col("term").isin(terms.map(x => x: Any): _*))
-      .join(docStats, "doc_id")
-      .withColumn("term_score", Bm25.score(col("tf"), dfCol, col("dl"), nDocs, avgDl))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_terms"), sum(col("term_score")).as("score"))
-      .filter(col("n_terms") === terms.size)
+                        avgDl: Double): DataFrame =
+    docScores(termScores(postings.join(docStats, "doc_id"), dfs, nDocs, avgDl),
+        Some(col("n_terms") === dfs.size))
       .select(col("doc_id"), col("score"))
-  }
 
   /** distributed top-k + rank stamp: TakeOrdered limit, then row_number over
     * the ≤ k surviving rows (single tiny partition) with the SAME sort keys
     * — the two sorts must match exactly for ranks to be correct, which is
     * why this lives in one place. */
-  private[query] def rankTopK(scored: DataFrame, k: Int, sort: Seq[org.apache.spark.sql.Column],
+  private[graft] def rankTopK(scored: DataFrame, k: Int, sort: Seq[org.apache.spark.sql.Column],
                               offset: Int = 0): DataFrame =
     scored.orderBy(sort: _*).offset(offset).limit(k)
       .withColumn("rank", row_number().over(Window.orderBy(sort: _*)) + offset)
@@ -152,18 +188,8 @@ object Search {
                        minMatch: Int, k: Int): DataFrame = {
     require(minMatch >= 1 && minMatch <= dfs.size,
       s"minMatch must be in [1, ${dfs.size}]")
-    val terms = dfs.keys.toSeq.sorted
-    val dfCol = dfs.foldLeft(lit(0L)) { case (acc, (t, d)) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
-    }
-    val scored = postings
-      .filter(col("term").isin(terms.map(x => x: Any): _*))
-      .join(docStats, "doc_id")
-      .withColumn("term_score", Bm25.score(col("tf"), dfCol, col("dl"), nDocs, avgDl))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_terms"), sum(col("term_score")).as("score"))
-      .filter(col("n_terms") >= minMatch)
-      .select(col("doc_id"), col("n_terms"), col("score"))
+    val scored = docScores(termScores(postings.join(docStats, "doc_id"), dfs, nDocs, avgDl),
+      Some(col("n_terms") >= minMatch))
     rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
       .select(col("rank"), col("doc_id"), col("n_terms"), col("score"))
   }
@@ -178,21 +204,14 @@ object Search {
   def explain(postings: DataFrame, docStats: DataFrame,
               dfs: Map[String, Long], nDocs: Long, avgDl: Double,
               k: Int): DataFrame = {
-    val terms = dfs.keys.toSeq.sorted
-    val dfCol = dfs.foldLeft(lit(0L)) { case (acc, (t, d)) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
-    }
     val top = bm25TopK(postings, docStats, dfs, nDocs, avgDl, k)
       .select(col("rank"), col("doc_id"))
-    postings
-      .filter(col("term").isin(terms.map(x => x: Any): _*))
-      .join(broadcast(top), "doc_id")
-      .join(docStats, "doc_id")
-      .select(col("rank"), col("doc_id"), col("term"), col("tf"),
-        dfCol.as("df"), col("dl"),
-        Bm25.idf(dfCol, nDocs).as("idf"),
+    termScores(postings.join(broadcast(top), "doc_id").join(docStats, "doc_id"),
+        dfs, nDocs, avgDl)
+      .select(col("rank"), col("doc_id"), col("term"), col("tf"), col("df"), col("dl"),
+        Bm25.idf(col("df"), nDocs).as("idf"),
         Bm25.tfNorm(col("tf"), col("dl"), avgDl).as("tfnorm"),
-        Bm25.score(col("tf"), dfCol, col("dl"), nDocs, avgDl).as("contrib"))
+        col("term_score").as("contrib"))
   }
 
   /** Recency-decayed ranking (Elasticsearch function_score exp-decay):
@@ -236,15 +255,7 @@ object Search {
   def bm25TopKDisjunctive(postings: DataFrame, docStats: DataFrame,
                           dfs: Map[String, Long], nDocs: Long, avgDl: Double,
                           k: Int): DataFrame = {
-    val terms = dfs.keys.toSeq.sorted
-    val dfCol = dfs.foldLeft(lit(0L)) { case (acc, (t, d)) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
-    }
-    val scored = postings
-      .filter(col("term").isin(terms.map(x => x: Any): _*))
-      .join(docStats, "doc_id")
-      .withColumn("term_score", Bm25.score(col("tf"), dfCol, col("dl"), nDocs, avgDl))
-      .groupBy("doc_id").agg(sum(col("term_score")).as("score"))
+    val scored = docScores(termScores(postings.join(docStats, "doc_id"), dfs, nDocs, avgDl))
     rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
       .select(col("rank"), col("doc_id"), col("score"))
   }
@@ -272,9 +283,7 @@ object Search {
                   avgDl: Double, k: Int): DataFrame = {
     val members = groups.flatMap(_._2)
     require(members.distinct.size == members.size, "synonym groups must be disjoint")
-    val grpCol = groups.foldLeft(lit(null).cast("string")) { case (acc, (g, ms)) =>
-      when(col("term").isin(ms.map(x => x: Any): _*), lit(g)).otherwise(acc)
-    }
+    val grpCol = termLit(groups.flatMap { case (g, ms) => ms.map(_ -> g) }.toMap, null)
     val gtf = postings.filter(col("term").isin(members.map(x => x: Any): _*))
       .withColumn("grp", grpCol)
       .groupBy("doc_id", "grp").agg(sum("tf").as("gtf"))
@@ -348,36 +357,14 @@ object Search {
       .groupBy("term").agg(sum(col("tf")).as("w"))
       .orderBy(desc("w"), asc("term")).limit(e)
 
-  /** Disjunctive BM25 with per-term integer weights — the scoring half of
-    * pseudo-relevance feedback (original terms count `wOrig`×, expansion
-    * terms 1×). wdfs: term -> (df, weight); both enter the plan as literal
-    * CASE maps like bm25TopK's dfs, so the only work is one IN-filtered
-    * postings scan + one hash aggregate. */
-  def bm25TopKWeighted(postings: DataFrame, docStats: DataFrame,
-                       wdfs: Map[String, (Long, Int)], nDocs: Long,
-                       avgDl: Double, k: Int): DataFrame = {
-    val terms = wdfs.keys.toSeq.sorted
-    val dfCol = wdfs.foldLeft(lit(0L)) { case (acc, (t, (d, _))) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
-    }
-    val wCol = wdfs.foldLeft(lit(0)) { case (acc, (t, (_, w))) =>
-      when(col("term") === t, lit(w)).otherwise(acc)
-    }
-    val scored = postings
-      .filter(col("term").isin(terms.map(x => x: Any): _*))
-      .join(docStats, "doc_id")
-      .withColumn("term_score", wCol * Bm25.score(col("tf"), dfCol, col("dl"), nDocs, avgDl))
-      .groupBy("doc_id").agg(sum(col("term_score")).as("score"))
-    rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("score"))
-  }
-
   /** Pseudo-relevance feedback (Rocchio-style blind feedback, Manning IIR
     * §9.1.6): retrieve the top-r docs conjunctively, mine the e strongest
     * terms from them (`prfExpansion`), then re-rank DISJUNCTIVELY with the
     * original terms weighted `wOrig`× and expansion terms 1× — docs matching
     * only expansion terms can now surface (recall widens), while original-
-    * term matches dominate (precision holds).
+    * term matches dominate (precision holds). The rescore is the one
+    * IN-filtered postings scan + hash aggregate of every BM25 ranker, the
+    * integer weights a second literal CASE map beside the df map.
     *
     * Scale shape: two bounded driver collects (r doc ids, e terms — the
     * same ≤-dozens contract as QueryFrontend.plan's df lookup) bracketing
@@ -392,9 +379,11 @@ object Search {
     val expTerms = prfExpansion(postings, fbDocs, dfs.keySet, e)
       .select("term").collect().map(_.getString(0)).toSet
     val expDfs = QueryFrontend.lookupDf(termStats, expTerms)
-    val wdfs = dfs.map { case (t, d) => t -> (d, wOrig) } ++
-      expDfs.map { case (t, d) => t -> (d, 1) }
-    bm25TopKWeighted(postings, docStats, wdfs, nDocs, avgDl, k)
+    val weights = dfs.map { case (t, _) => t -> wOrig } ++ expDfs.map { case (t, _) => t -> 1 }
+    val scored = docScores(termScores(postings.join(docStats, "doc_id"), dfs ++ expDfs,
+      nDocs, avgDl, weights = weights))
+    rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
+      .select(col("rank"), col("doc_id"), col("score"))
   }
 
   /** Reciprocal-rank fusion (Cormack, Clarke & Büttcher 2009) of two
@@ -442,12 +431,7 @@ object Search {
     val c1 = rankTopK(m.groupBy("doc_id").agg(sum("tf").as("stf")),
         n1, Seq(desc("stf"), asc("doc_id")))
       .select("doc_id")
-    val dfCol = dfs.foldLeft(lit(0L)) { case (acc, (t, d)) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
-    }
-    val s2 = m.join(c1, "doc_id").join(docStats, "doc_id")
-      .withColumn("w", Bm25.score(col("tf"), dfCol, col("dl"), nDocs, avgDl))
-      .groupBy("doc_id").agg(sum("w").as("score"))
+    val s2 = docScores(termScores(m.join(c1, "doc_id").join(docStats, "doc_id"), dfs, nDocs, avgDl))
     val c2 = rankTopK(s2, n2, Seq(desc("score"), asc("doc_id")))
       .select("doc_id", "score")
     val ph = graft.index.Positional.phraseMatches(
@@ -1027,9 +1011,7 @@ object Search {
       import spark.implicits._
       return Seq.empty[(Long, Long, Double)].toDF("rank", "doc_id", "score_r")
     }
-    val qwt = qRows.foldLeft(lit(0.0)) { case (acc, r) =>
-      when(col("term") === r.getString(0), lit(r.getDouble(1))).otherwise(acc)
-    }
+    val qwt = termLit(qRows.map(r => r.getString(0) -> r.getDouble(1)).toMap, 0.0)
     val terms = qRows.map(_.getString(0)).toSeq
     val qn = norms.filter(col("doc_id") === docId).select(col("norm").as("qnorm"))
     val scored = w.filter(col("term").isin(terms.map(x => x: Any): _*))

@@ -42,20 +42,10 @@ object Taat {
     val spark = postings.sparkSession
     import spark.implicits._
     val ordered = dfs.toSeq.sortBy { case (t, d) => (d, t) }.map(_._1)
-    val ord = ordered.zipWithIndex.map { case (t, i) => (t, (i + 1).toLong) }
-      .toDF("term", "idx")
-    val idxCol = ordered.zipWithIndex.foldLeft(lit(0L)) { case (acc, (t, i)) =>
-      when(col("term") === t, lit((i + 1).toLong)).otherwise(acc)
-    }
-    val dfCol = dfs.foldLeft(lit(0L)) { case (acc, (t, d)) =>
-      when(col("term") === t, lit(d)).otherwise(acc)
-    }
-    val matched = postings
-      .filter(col("term").isin(ordered.map(x => x: Any): _*))
-      .join(docStats, "doc_id")
-      .withColumn("idx", idxCol)
-      .withColumn("w", Bm25.score(col("tf"), dfCol, col("dl"), nDocs, avgDl))
-      .select("doc_id", "idx", "w")
+    val idx = ordered.zipWithIndex.map { case (t, i) => (t, (i + 1).toLong) }
+    val ord = idx.toDF("term", "idx")
+    val matched = Search.termScores(postings.join(docStats, "doc_id"), dfs, nDocs, avgDl)
+      .select(col("doc_id"), Search.termLit(idx.toMap, 0L).as("idx"), col("term_score"))
     val firstIdx = matched.groupBy("doc_id").agg(min("idx").as("first_idx"))
     // densified accumulator counts: every term advances i even when it
     // creates nothing new
@@ -73,11 +63,8 @@ object Taat {
           col("doc_id"), col("score"))
     // no admitted-join needed: any doc matched by a term idx ≤ i* has
     // first_idx ≤ i* by definition
-    val quit = matched.filter(col("idx") <= iStar)
-      .groupBy("doc_id").agg(sum("w").as("score"))
-    val cont = matched
-      .join(admitted, "doc_id")
-      .groupBy("doc_id").agg(sum("w").as("score"))
+    val quit = Search.docScores(matched.filter(col("idx") <= iStar))
+    val cont = Search.docScores(matched.join(admitted, "doc_id"))
     topK(quit, "quit").unionByName(topK(cont, "continue"))
   }
 }

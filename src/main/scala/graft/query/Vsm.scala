@@ -37,9 +37,7 @@ object Vsm {
     val terms = dfs.keys.toSeq.sorted
     val idf = terms.map(t => t -> math.log(nDocs.toDouble / dfs(t))).toMap
     val qnorm = math.sqrt(idf.values.map(x => x * x).sum)
-    val qw = terms.foldLeft(lit(0.0)) { (acc, t) =>
-      when(col("term") === t, lit(idf(t) / qnorm)).otherwise(acc)
-    }
+    val qw = Search.termLit(idf.map { case (t, w) => t -> w / qnorm }, 0.0)
     val scored = postings
       .filter(col("term").isin(terms.map(x => x: Any): _*))
       .withColumn("part", qw * (lit(1.0) + log(col("tf"))))

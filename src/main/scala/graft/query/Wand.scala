@@ -3,20 +3,22 @@ package graft.query
 import graft.index.{PostingCodec, ShardPosting}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.functions._
 
 /** Conjunctive BM25 top-k over the compressed sharded index with block-max
   * pruning — the scale path of the query core (north star: "BM25 top-k with
   * posting-list intersection and block-max WAND pruning").
   *
-  * Distribution shape: the query touches |terms| × |shards| blobs; they are
-  * grouped by shard (each group = the query's full working set for one
-  * docId range, ≤ |terms| blobs), intersected + scored + top-k'd per group
-  * with zero further shuffle, then the tiny per-shard top-k lists (≤ k rows
-  * each) meet in a global TakeOrderedAndProject ([[topK]]) or a
-  * treeAggregate inside the same job ([[countTopK]]). Adding
-  * executors splits shards, not terms — scaling is embarrassing in the
-  * shard dimension, which is why hot terms don't skew this path.
+  * Distribution shape: every entry point runs through ONE shard runner
+  * ([[run]]), one Spark job. The query touches |terms| × |shards| blobs;
+  * they are grouped by shard (each group = the query's full working set
+  * for one docId range, ≤ |terms| blobs), and a per-shard loop —
+  * conjunctive ([[intersectShard]]), disjunctive block-max WAND or
+  * MaxScore — scores them into a [[Search.TopK]] with zero further
+  * shuffle; the tiny per-shard top-k lists (≤ k rows each) merge in a
+  * treeAggregate inside the same job. The DataFrame-returning entry points
+  * are views of the merged `TopK.ranked`. Adding executors splits shards,
+  * not terms — scaling is embarrassing in the shard dimension, which is why
+  * hot terms don't skew this path.
   *
   * Pruning: rarest-first driving list (reference's df-asc ordering,
   * SearcherPage.java:47,201-206) + skipTo on the others (skip blocks are
@@ -29,28 +31,37 @@ object Wand {
   /** Exact conjunctive top-k per shard. `idfs` must be keyed by every query
     * term; `avgDl` must be the value the index was encoded with; returns
     * (rank, doc_id, score) global top-k, ties docId asc. */
-  def topK(shards: Dataset[ShardPosting], idfs: Map[String, Double], avgDl: Double, k: Int): DataFrame = {
-    val spark = shards.sparkSession
-    import spark.implicits._
-    val idfB = spark.sparkContext.broadcast(idfs)
-    val hits = shards.groupByKey(_.shard).flatMapGroups { (_, it) =>
-      intersectShard(it.toArray, idfB.value, avgDl, k, admitAll).ranked.iterator.map(h => (h.docId, h.score))
-    }.toDF("doc_id", "score")
-    ranked(hits, k)
-  }
+  def topK(shards: Dataset[ShardPosting], idfs: Map[String, Double], avgDl: Double, k: Int): DataFrame =
+    view(shards, countTopK(shards, idfs, avgDl, k))
 
   /** The full conjunctive match count AND the global top-k in ONE Spark
-    * job: the query's blobs are grouped by shard inside the job (keyBy →
-    * groupByKey), each shard's [[intersectShard]] partial is merged with
-    * treeAggregate, and the count comes back in the action's result. Only
-    * docs `admit` accepts are counted and ranked. Same candidates, scores
-    * and rank order as [[topK]] when every doc is admitted. */
+    * job: the shard runner with [[intersectShard]] per shard. Only docs
+    * `admit` accepts are counted and ranked. Same candidates, scores and
+    * rank order as [[topK]] when every doc is admitted. */
   def countTopK(shards: Dataset[ShardPosting], idfs: Map[String, Double],
-                avgDl: Double, k: Int, admit: Long => Boolean = admitAll): Search.TopK = {
+                avgDl: Double, k: Int, admit: Long => Boolean = admitAll): Search.TopK =
+    run(shards, idfs, k)(intersectShard(_, _, avgDl, k, admit))
+
+  /** The shard runner of every entry point, ONE Spark job: the idfs ride
+    * one broadcast, the query's blobs are grouped by shard inside the job
+    * (one shuffle on the shard key), `perShard` turns each shard's blobs
+    * into a partial and treeAggregate merges them, so the count comes back
+    * in the action's result. */
+  private def run(shards: Dataset[ShardPosting], idfs: Map[String, Double], k: Int)(
+      perShard: (Array[ShardPosting], Map[String, Double]) => Search.TopK): Search.TopK = {
     val idfB = shards.sparkSession.sparkContext.broadcast(idfs)
     shards.rdd.keyBy(_.shard).groupByKey()
-      .map { case (_, it) => intersectShard(it.toArray, idfB.value, avgDl, k, admit) }
+      .map { case (_, it) => perShard(it.toArray, idfB.value) }
       .treeAggregate(new Search.TopK(k))((a, b) => a.merge(b), (a, b) => a.merge(b))
+  }
+
+  /** (rank, doc_id, score) rows of a merged top-k, best first; rank is an
+    * int, as a row_number rank stamp is */
+  private def view(shards: Dataset[ShardPosting], top: Search.TopK): DataFrame = {
+    val spark = shards.sparkSession
+    import spark.implicits._
+    top.ranked.toSeq.zipWithIndex.map { case (h, i) => (i + 1, h.docId, h.score) }
+      .toDF("rank", "doc_id", "score")
   }
 
   /** the admission predicate that accepts every doc */
@@ -116,10 +127,16 @@ object Wand {
     acc
   }
 
-  /** global merge of the per-shard top-k lists: TakeOrdered + rank stamp */
-  private def ranked(hits: DataFrame, k: Int): DataFrame =
-    Search.rankTopK(hits, k, Seq(desc("score"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("score"))
+  /** a query term's cursor: idf weight, posting cursor, and the term-level
+    * upper bound idf · maxTfNorm of the whole list */
+  private final class TermCursor(val w: Double, val cur: PostingCodec.Cursor, val termUB: Double)
+
+  /** live cursors over one shard's blobs */
+  private def cursorsOf(blobs: Array[ShardPosting], idf: Map[String, Double]): Array[TermCursor] =
+    blobs.map { b =>
+      val dec = new PostingCodec.Decoded(b.bytes)
+      new TermCursor(idf(b.term), new PostingCodec.Cursor(dec), idf(b.term) * dec.maxTfNorm)
+    }.filter(!_.cur.exhausted)
 
   /** Classic DISJUNCTIVE block-max WAND (Broder et al. 2003 + block-max
     * refinement, Ding & Suel 2011): OR-semantics top-k — any doc containing
@@ -136,69 +153,62 @@ object Wand {
     * still be scored to win the docId tie-break).
     */
   def topKDisjunctive(shards: Dataset[ShardPosting], idfs: Map[String, Double],
-                      avgDl: Double, k: Int): DataFrame = {
-    val spark = shards.sparkSession
-    import spark.implicits._
-    val idfB = spark.sparkContext.broadcast(idfs)
-    val hits = shards.groupByKey(_.shard).flatMapGroups { (_, it) =>
-      val idf = idfB.value
-      final class C(val w: Double, val cur: PostingCodec.Cursor, val termUB: Double)
-      val cursors = scala.collection.mutable.ArrayBuffer.from(
-        it.toArray.map { b =>
-          val dec = new PostingCodec.Decoded(b.bytes)
-          new C(idf(b.term), new PostingCodec.Cursor(dec), idf(b.term) * dec.maxTfNorm)
-        }.filter(!_.cur.exhausted))
-      val top = new Search.TopK(k)
-      while (cursors.nonEmpty) {
-        val sorted = cursors.sortInPlace()(Ordering.by(_.cur.docId))
-        // pivot: first index where the prefix UB could reach theta
-        var acc = 0.0
-        var pivot = -1
-        var i = 0
-        while (pivot < 0 && i < sorted.length) {
-          acc += sorted(i).termUB
-          if (!top.full || acc >= top.theta) pivot = i
-          i += 1
-        }
-        if (pivot < 0) {
-          cursors.clear() // no remaining doc can reach theta
-        } else {
-          val pivotDoc = sorted(pivot).cur.docId
-          // BMW pivot extension: cursors past the pivot index can sit on the
-          // same docId (sorted ⇒ contiguous) and contribute to the exact
-          // score, so the block-max bound must include them too — otherwise a
-          // doc whose tail cursors push it over θ is wrongly skipped.
-          while (pivot + 1 < sorted.length && sorted(pivot + 1).cur.docId == pivotDoc) pivot += 1
-          if (sorted(0).cur.docId == pivotDoc) {
-            // all cursors at pivotDoc participate; block-max second chance
-            var bmUB = 0.0
-            var j = 0
-            while (j <= pivot) { bmUB += sorted(j).w * sorted(j).cur.blockMaxTfNorm; j += 1 }
-            if (!top.full || bmUB >= top.theta) {
-              var score = 0.0
-              j = 0
-              while (j < sorted.length && sorted(j).cur.docId == pivotDoc) {
-                val c = sorted(j)
-                score += c.w * Bm25.tfNormS(c.cur.tf, c.cur.dl, avgDl)
-                j += 1
-              }
-              top.keep(pivotDoc, score)
-            }
-            // advance every cursor sitting on pivotDoc
-            var j2 = 0
-            while (j2 < sorted.length && sorted(j2).cur.docId == pivotDoc) {
-              sorted(j2).cur.next(); j2 += 1
-            }
-          } else {
-            // docs before the pivot can't win: jump the leading cursor
-            sorted(0).cur.skipTo(pivotDoc)
-          }
-          cursors.filterInPlace(!_.cur.exhausted)
-        }
+                      avgDl: Double, k: Int): DataFrame =
+    view(shards, run(shards, idfs, k)(disjunctiveShard(_, _, avgDl, k)))
+
+  /** one shard's disjunctive block-max WAND top-k */
+  private def disjunctiveShard(blobs: Array[ShardPosting], idf: Map[String, Double],
+                               avgDl: Double, k: Int): Search.TopK = {
+    val cursors = scala.collection.mutable.ArrayBuffer.from(cursorsOf(blobs, idf))
+    val top = new Search.TopK(k)
+    while (cursors.nonEmpty) {
+      val sorted = cursors.sortInPlace()(Ordering.by(_.cur.docId))
+      // pivot: first index where the prefix UB could reach theta
+      var acc = 0.0
+      var pivot = -1
+      var i = 0
+      while (pivot < 0 && i < sorted.length) {
+        acc += sorted(i).termUB
+        if (!top.full || acc >= top.theta) pivot = i
+        i += 1
       }
-      top.ranked.iterator.map(h => (h.docId, h.score))
-    }.toDF("doc_id", "score")
-    ranked(hits, k)
+      if (pivot < 0) {
+        cursors.clear() // no remaining doc can reach theta
+      } else {
+        val pivotDoc = sorted(pivot).cur.docId
+        // BMW pivot extension: cursors past the pivot index can sit on the
+        // same docId (sorted ⇒ contiguous) and contribute to the exact
+        // score, so the block-max bound must include them too — otherwise a
+        // doc whose tail cursors push it over θ is wrongly skipped.
+        while (pivot + 1 < sorted.length && sorted(pivot + 1).cur.docId == pivotDoc) pivot += 1
+        if (sorted(0).cur.docId == pivotDoc) {
+          // all cursors at pivotDoc participate; block-max second chance
+          var bmUB = 0.0
+          var j = 0
+          while (j <= pivot) { bmUB += sorted(j).w * sorted(j).cur.blockMaxTfNorm; j += 1 }
+          if (!top.full || bmUB >= top.theta) {
+            var score = 0.0
+            j = 0
+            while (j < sorted.length && sorted(j).cur.docId == pivotDoc) {
+              val c = sorted(j)
+              score += c.w * Bm25.tfNormS(c.cur.tf, c.cur.dl, avgDl)
+              j += 1
+            }
+            top.keep(pivotDoc, score)
+          }
+          // advance every cursor sitting on pivotDoc
+          var j2 = 0
+          while (j2 < sorted.length && sorted(j2).cur.docId == pivotDoc) {
+            sorted(j2).cur.next(); j2 += 1
+          }
+        } else {
+          // docs before the pivot can't win: jump the leading cursor
+          sorted(0).cur.skipTo(pivotDoc)
+        }
+        cursors.filterInPlace(!_.cur.exhausted)
+      }
+    }
+    top
   }
 
   /** Disjunctive BM25 top-k via MaxScore pruning (Turtle & Flood 1995,
@@ -216,89 +226,83 @@ object Wand {
     * so a prefix whose bound EQUALS θ stays essential and a probe chain
     * whose bound equals θ runs to completion.
     *
-    * Scale shape: identical to [[topKDisjunctive]] — per-shard mapGroups
-    * over ≤ |terms| decoded blobs, zero further shuffle, per-shard top-k
-    * lists meet in one TakeOrderedAndProject. The MaxScore advantage at
+    * Scale shape: identical to [[topKDisjunctive]] — the shard runner over
+    * ≤ |terms| decoded blobs per shard, zero further shuffle, per-shard
+    * top-k lists merged in the same job. The MaxScore advantage at
     * 100 TB: once θ passes a hot term's upper bound, that (longest, lowest-
     * idf) list is never iterated again — only skipTo-probed at candidate
     * docIds, O(candidates · log blocks) on the skip index instead of
     * O(postings). */
   def maxScoreTopK(shards: Dataset[ShardPosting], idfs: Map[String, Double],
-                   avgDl: Double, k: Int): DataFrame = {
-    val spark = shards.sparkSession
-    import spark.implicits._
-    val idfB = spark.sparkContext.broadcast(idfs)
-    val hits = shards.groupByKey(_.shard).flatMapGroups { (_, it) =>
-      val idf = idfB.value
-      final class C(val w: Double, val cur: PostingCodec.Cursor, val termUB: Double)
-      // static MaxScore layout: ascending term upper bound
-      val cs = it.toArray.map { b =>
-        val dec = new PostingCodec.Decoded(b.bytes)
-        new C(idf(b.term), new PostingCodec.Cursor(dec), idf(b.term) * dec.maxTfNorm)
-      }.filter(!_.cur.exhausted).sortBy(_.termUB)
-      val live = Array.fill(cs.length)(true)
-      val top = new Search.TopK(k)
-      val prefixUB = new Array[Double](cs.length + 1)
-      var done = cs.isEmpty
-      while (!done) {
-        var i = 0
-        while (i < cs.length) {
-          prefixUB(i + 1) = prefixUB(i) + (if (live(i)) cs(i).termUB else 0.0)
-          i += 1
-        }
-        // largest prefix whose total bound is STRICTLY below θ is non-essential
-        var firstEss = 0
-        if (top.full)
-          while (firstEss < cs.length && prefixUB(firstEss + 1) < top.theta) firstEss += 1
-        // candidate: min docId across live essential cursors
-        var cand = Long.MaxValue
+                   avgDl: Double, k: Int): DataFrame =
+    view(shards, run(shards, idfs, k)(maxScoreShard(_, _, avgDl, k)))
+
+  /** one shard's MaxScore top-k */
+  private def maxScoreShard(blobs: Array[ShardPosting], idf: Map[String, Double],
+                            avgDl: Double, k: Int): Search.TopK = {
+    // static MaxScore layout: ascending term upper bound
+    val cs = cursorsOf(blobs, idf).sortBy(_.termUB)
+    val live = Array.fill(cs.length)(true)
+    val top = new Search.TopK(k)
+    val prefixUB = new Array[Double](cs.length + 1)
+    var done = cs.isEmpty
+    while (!done) {
+      var i = 0
+      while (i < cs.length) {
+        prefixUB(i + 1) = prefixUB(i) + (if (live(i)) cs(i).termUB else 0.0)
+        i += 1
+      }
+      // largest prefix whose total bound is STRICTLY below θ is non-essential
+      var firstEss = 0
+      if (top.full)
+        while (firstEss < cs.length && prefixUB(firstEss + 1) < top.theta) firstEss += 1
+      // candidate: min docId across live essential cursors
+      var cand = Long.MaxValue
+      i = firstEss
+      while (i < cs.length) {
+        if (live(i) && cs(i).cur.docId < cand) cand = cs(i).cur.docId
+        i += 1
+      }
+      if (cand == Long.MaxValue) {
+        done = true // only non-essential lists remain: no doc can reach θ
+      } else {
+        // exact essential contributions; advance those cursors after
+        var score = 0.0
         i = firstEss
         while (i < cs.length) {
-          if (live(i) && cs(i).cur.docId < cand) cand = cs(i).cur.docId
+          if (live(i) && cs(i).cur.docId == cand) {
+            score += cs(i).w * Bm25.tfNormS(cs(i).cur.tf, cs(i).cur.dl, avgDl)
+          }
           i += 1
         }
-        if (cand == Long.MaxValue) {
-          done = true // only non-essential lists remain: no doc can reach θ
-        } else {
-          // exact essential contributions; advance those cursors after
-          var score = 0.0
-          i = firstEss
-          while (i < cs.length) {
-            if (live(i) && cs(i).cur.docId == cand) {
-              score += cs(i).w * Bm25.tfNormS(cs(i).cur.tf, cs(i).cur.dl, avgDl)
+        // probe non-essential lists in descending-UB order, early exit
+        // the moment even full credit for the unprobed rest can't reach θ
+        var j = firstEss - 1
+        var viable = !top.full || score + prefixUB(firstEss) >= top.theta
+        while (viable && j >= 0) {
+          if (live(j)) {
+            if (top.full && score + prefixUB(j + 1) < top.theta) viable = false
+            else {
+              val c = cs(j)
+              c.cur.skipTo(cand)
+              if (c.cur.exhausted) live(j) = false
+              else if (c.cur.docId == cand)
+                score += c.w * Bm25.tfNormS(c.cur.tf, c.cur.dl, avgDl)
             }
-            i += 1
           }
-          // probe non-essential lists in descending-UB order, early exit
-          // the moment even full credit for the unprobed rest can't reach θ
-          var j = firstEss - 1
-          var viable = !top.full || score + prefixUB(firstEss) >= top.theta
-          while (viable && j >= 0) {
-            if (live(j)) {
-              if (top.full && score + prefixUB(j + 1) < top.theta) viable = false
-              else {
-                val c = cs(j)
-                c.cur.skipTo(cand)
-                if (c.cur.exhausted) live(j) = false
-                else if (c.cur.docId == cand)
-                  score += c.w * Bm25.tfNormS(c.cur.tf, c.cur.dl, avgDl)
-              }
-            }
-            j -= 1
+          j -= 1
+        }
+        if (viable) top.keep(cand, score)
+        i = firstEss
+        while (i < cs.length) {
+          if (live(i) && cs(i).cur.docId == cand) {
+            cs(i).cur.next()
+            if (cs(i).cur.exhausted) live(i) = false
           }
-          if (viable) top.keep(cand, score)
-          i = firstEss
-          while (i < cs.length) {
-            if (live(i) && cs(i).cur.docId == cand) {
-              cs(i).cur.next()
-              if (cs(i).cur.exhausted) live(i) = false
-            }
-            i += 1
-          }
+          i += 1
         }
       }
-      top.ranked.iterator.map(h => (h.docId, h.score))
-    }.toDF("doc_id", "score")
-    ranked(hits, k)
+    }
+    top
   }
 }

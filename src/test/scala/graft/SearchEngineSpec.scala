@@ -661,6 +661,33 @@ class SearchEngineSpec extends AnyFunSuite {
     assert(lJobs <= 4, s"global (LSM tier) search after an upsert ran $lJobs jobs")
   }
 
+  test("a 500-term query answers on the live tier, equal to the Oracle") {
+    import spark.implicits._
+    import graft.query.Oracle
+    val e = new SearchEngine(spark, Corpus.generateDistributed(spark, 2000L, 8, 11L))
+    assert(e.startIndexing() && !e.servesFromPersisted)
+    // one page holds all 500 query terms, a second all but the first
+    val words = (0 until 500).map(i => s"bulkword$i")
+    assert(e.indexPage(Seq(
+        (5000L, "repo-00", "doc/5000", "0" * 40, "en", words.mkString(" ")),
+        (5001L, "repo-01", "doc/5001", "0" * 40, "en", words.tail.mkString(" ") + " tok1"))
+      .toDF("doc_id", "repo", "path", "commit", "lang", "content")))
+    val q = words.reverse.mkString(" ")
+    val got = e.search(q, limit = 10)
+    val oracle = new Oracle.Index(e.corpus.select("doc_id", "repo", "lang", "content").collect()
+      .map(r => Oracle.Doc(r.getLong(0), r.getString(1), r.getString(2), r.getString(3))).toSeq)
+    val p = oracle.plan("en", q)
+    val all = oracle.score(p.terms.map(_.term))
+    val want = oracle.topK("en", q, 10)
+    assert(p.missing.isEmpty && want.map(_.docId) == Seq(5000L))
+    assert(got.result && got.error == null && got.count == all.size, s"count ${got.count}")
+    val paths = e.corpus.select("doc_id", "path").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(got.data.map(_.uri) == want.map(h => paths(h.docId)))
+    got.data.zip(want).foreach { case (g, h) =>
+      assert(math.abs(g.relevance - h.bm25) < 1e-9, s"${g.uri} score ${g.relevance} vs ${h.bm25}")
+    }
+  }
+
   test("an upsert is visible at once: new term, moved doc; a rebuild re-derives dictionary and site sets") {
     import spark.implicits._
     val cfg = graft.index.IndexWriter.Config(docsPerShard = 64, nBuckets = 8)

@@ -1021,6 +1021,36 @@ class SearchSpec extends AnyFunSuite {
     val conj = Search.bm25TopK(post, ds, dfs, 3L, 2.0, 10)
       .collect().map(_.getLong(1)).toSet
     assert(docs(3).keySet == conj)
+    // the gate's two ends are the AND and OR rankers, row for row
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("rank", "doc_id", "score").collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSeq
+    def sameRows(what: String, a: Seq[(Int, Long, Double)], b: Seq[(Int, Long, Double)]): Unit = {
+      assert(a.map(r => (r._1, r._2)) == b.map(r => (r._1, r._2)), what)
+      a.zip(b).foreach { case (x, y) => assert(math.abs(x._3 - y._3) < 1e-9, s"$what: doc ${x._2}") }
+    }
+    sameRows("minMatch = |q|", rows(Search.bm25TopKMinMatch(post, ds, dfs, 3L, 2.0, dfs.size, 10)),
+      rows(Search.bm25TopK(post, ds, dfs, 3L, 2.0, 10)))
+    sameRows("minMatch = 1", rows(Search.bm25TopKMinMatch(post, ds, dfs, 3L, 2.0, 1, 10)),
+      rows(Search.bm25TopKDisjunctive(post, ds, dfs, 3L, 2.0, 10)))
+  }
+
+  test("conjunctiveScores: a 500-term query is one flat CASE, not a stack overflow") {
+    import spark.implicits._
+    // d1 holds all 500 terms, d2 all but the last
+    val terms = (0 until 500).map(i => f"t$i%03d")
+    val tfOf = (i: Int) => 1L + i % 3
+    val post = (terms.zipWithIndex.map { case (t, i) => (t, 1L, tfOf(i)) } ++
+      terms.init.zipWithIndex.map { case (t, i) => (t, 2L, tfOf(i)) }).toDF("term", "doc_id", "tf")
+    val dl1 = terms.indices.map(tfOf).sum
+    val dl2 = dl1 - tfOf(499)
+    val ds = Seq((1L, dl1), (2L, dl2)).toDF("doc_id", "dl")
+    val dfs = terms.map(t => t -> (if (t == terms.last) 1L else 2L)).toMap
+    val avgDl = (dl1 + dl2) / 2.0
+    val got = Search.conjunctiveScores(post, ds, dfs, 2L, avgDl)
+      .collect().map(r => (r.getLong(0), r.getDouble(1)))
+    val want = terms.zipWithIndex.map { case (t, i) => Bm25.scoreS(tfOf(i), dfs(t), dl1, 2L, avgDl) }.sum
+    assert(got.map(_._1).toSeq == Seq(1L))
+    assert(math.abs(got.head._2 - want) < 1e-9, s"score ${got.head._2} vs $want")
   }
 
   test("segmentQuery: corpus-bigram glue yields [new york][pizza] segments") {

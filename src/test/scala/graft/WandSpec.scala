@@ -1,5 +1,6 @@
 package graft
 
+import graft.SparkTestSession.jobsOf
 import graft.corpus.Corpus
 import graft.index.{IndexWriter, InvertedIndex, PostingCodec}
 import graft.query.{Bm25, Oracle, QueryFrontend, Search, Wand}
@@ -20,6 +21,7 @@ class WandSpec extends AnyFunSuite {
                   queriesToRun: Seq[String]): Unit = {
     val t = InvertedIndex.build(corpus)
     val shards = IndexWriter.shardPostings(t.postings, t.docStats, t.avgDl, cfg).cache()
+    shards.count() // materialized first, so a query's job count is its own
     val docs = corpus.select("doc_id", "repo", "lang", "content").collect()
       .map(r => Oracle.Doc(r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
     val oracle = new Oracle.Index(docs.toIndexedSeq)
@@ -28,8 +30,13 @@ class WandSpec extends AnyFunSuite {
       if (!p.isEmpty) {
         val idfs = p.terms.map(ti => ti.term -> Bm25.idfS(ti.df, t.nDocs)).toMap
         val qShards = shards.filter(s => idfs.contains(s.term))
-        val gotW = Wand.topK(qShards, idfs, t.avgDl, 10)
-          .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
+        val (gotW, jobs) = jobsOf(Wand.topK(qShards, idfs, t.avgDl, 10)
+          .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))))
+        assert(jobs == 1, s"[$corpusName/$q] Wand.topK ran $jobs jobs")
+        // topK is the view of countTopK's ranked rows
+        val ranked = Wand.countTopK(qShards, idfs, t.avgDl, 10).ranked
+        assert(gotW.toSeq == ranked.toSeq.zipWithIndex.map { case (h, i) => (i + 1, h.docId, h.score) },
+          s"[$corpusName/$q] topK vs countTopK.ranked")
         val dfs = p.terms.map(ti => ti.term -> ti.df).toMap
         val gotD = Search.bm25TopK(t.postings, t.docStats, dfs, t.nDocs, t.avgDl, 10)
           .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
@@ -66,6 +73,7 @@ class WandSpec extends AnyFunSuite {
     ).foreach { case (name, corpus, qs) =>
       val t = InvertedIndex.build(corpus)
       val shardsDs = IndexWriter.shardPostings(t.postings, t.docStats, t.avgDl, cfg).cache()
+      shardsDs.count()
       val docs = corpus.select("doc_id", "repo", "lang", "content").collect()
         .map(r => Oracle.Doc(r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
       val oracle = new Oracle.Index(docs.toIndexedSeq)
@@ -75,9 +83,10 @@ class WandSpec extends AnyFunSuite {
           val dfs = p.terms.map(ti => ti.term -> ti.df).toMap
           val idfs = p.terms.map(ti => ti.term -> Bm25.idfS(ti.df, t.nDocs)).toMap
           val want = oracle.topKDisjunctive("en", q, 10)
-          val gotW = Wand.topKDisjunctive(shardsDs.filter(sp => idfs.contains(sp.term)),
+          val (gotW, wJobs) = jobsOf(Wand.topKDisjunctive(shardsDs.filter(sp => idfs.contains(sp.term)),
               idfs, t.avgDl, 10)
-            .collect().map(r => (r.getLong(1), r.getDouble(2)))
+            .collect().map(r => (r.getLong(1), r.getDouble(2))))
+          assert(wJobs == 1, s"[$name/$q] topKDisjunctive ran $wJobs jobs")
           val gotD = Search.bm25TopKDisjunctive(t.postings, t.docStats, dfs, t.nDocs, t.avgDl, 10)
             .collect().map(r => (r.getLong(1), r.getDouble(2)))
           assert(gotW.map(_._1).toSeq == want.map(_.docId), s"[$name/$q] WAND-OR docIds")
@@ -85,9 +94,10 @@ class WandSpec extends AnyFunSuite {
           gotW.zip(want).foreach { case ((_, s), o) =>
             assert(math.abs(s - o.bm25) < 1e-9, s"[$name/$q] score $s vs ${o.bm25}")
           }
-          val gotM = Wand.maxScoreTopK(shardsDs.filter(sp => idfs.contains(sp.term)),
+          val (gotM, mJobs) = jobsOf(Wand.maxScoreTopK(shardsDs.filter(sp => idfs.contains(sp.term)),
               idfs, t.avgDl, 10)
-            .collect().map(r => (r.getLong(1), r.getDouble(2)))
+            .collect().map(r => (r.getLong(1), r.getDouble(2))))
+          assert(mJobs == 1, s"[$name/$q] maxScoreTopK ran $mJobs jobs")
           assert(gotM.map(_._1).toSeq == want.map(_.docId), s"[$name/$q] MaxScore docIds")
           gotM.zip(want).foreach { case ((_, s), o) =>
             assert(math.abs(s - o.bm25) < 1e-9, s"[$name/$q] MaxScore score")

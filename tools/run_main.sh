@@ -5,8 +5,10 @@
 # Usage: bash tools/run_main.sh <MainClass> [args...]
 MAIN=${1:?main class}
 shift
+# heap: half the host's RAM, clamped to 2-8 GiB (as the tier-1 test command sizes it)
+HEAP="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo || echo 2g)"
 exec java \
-  -Xmx24g \
+  "-Xmx$HEAP" \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
