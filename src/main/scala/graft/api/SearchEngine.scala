@@ -308,6 +308,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
                              priorEdges: Option[DataFrame] = None,
                              priorIters: Int = 3,
                              priorBeta: Double = 0.5): Boolean = {
+    require(priorBeta >= 0 && priorBeta <= 1, s"beta must be in [0, 1], got $priorBeta")
     if (!inFlight.compareAndSet(false, true)) return false
     try {
       cancel.set(false)
@@ -516,11 +517,18 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
 
   /** Install a static authority prior (doc_id, pr) — e.g. `LinkRank
     * .pagerank` over the crawl graph — blended into every subsequent
-    * search's ranking: blend = bm25 · (β + (1−β)·pr/max(pr)). The response
-    * cache is invalidated (same query, different ranking). */
+    * search's ranking: blend = bm25 · (β + (1−β)·pr/max(pr)). β ∈ [0, 1]
+    * and pr ≥ 0 are required, so that no blend exceeds its BM25 score (the
+    * bound the WAND tier's certified rerank rests on; one job checks pr).
+    * The response cache is invalidated (same query, different ranking). */
   def setAuthorityPrior(prior: DataFrame, beta: Double = 0.5): Unit = synchronized {
+    require(beta >= 0 && beta <= 1, s"beta must be in [0, 1], got $beta")
+    val cached = prior.select(col("doc_id"), col("pr")).cache()
+    if (!cached.filter(col("pr") < 0).isEmpty) {
+      cached.unpersist(); throw new IllegalArgumentException("prior pr must be >= 0")
+    }
     authorityPrior.foreach(_._1.unpersist())
-    authorityPrior = Some((prior.select(col("doc_id"), col("pr")).cache(), beta))
+    authorityPrior = Some((cached, beta))
     invalidateResponses()
   }
 
@@ -565,36 +573,22 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
   /** Cursor (search-after) deep paging — beyond the reference's offset
     * pager: the page strictly AFTER the (relevance, docId) cursor of the
     * previous page in the deterministic total order (score desc, docId
-    * asc), so page 10^4 costs what page 1 costs
-    * ([[graft.query.Search.bm25TopKAfter]]). The cursor is the last item
-    * of the previous page: its `relevance` and its docId (the numeric
-    * tail of `uri` = "doc/<id>"). Serves the pure-BM25 DataFrame path;
-    * prior-blended rankings keep paging by offset (a cursor there would
-    * need the blended score as its key). `count` carries the total match
-    * count, as in [[search]]. */
+    * asc), so page 10^4 costs what page 1 costs. The cursor is the last
+    * item of the previous page: its `relevance` and its docId (the numeric
+    * tail of `uri` = "doc/<id>"). One ranking action over the live tables
+    * (Search.countTopK with the cursor) counts every match and keeps the
+    * best `limit` after the cursor: `count` is the total match count, as
+    * in [[search]], past the last match too. Pure BM25 only: a cursor over
+    * a prior-blended ranking would need the blended score as its key. */
   def searchAfter(query: String, afterScore: Double, afterDoc: Long,
                   limit: Int = 20, lang: String = "en"): SearchResponse = {
     require(indexed, "index not built")
-    withPinned(pin => searchAfter(pin, query, afterScore, afterDoc, limit, lang))
-  }
-
-  private def searchAfter(pin: Pinned, query: String, afterScore: Double, afterDoc: Long,
-                          limit: Int, lang: String): SearchResponse = {
-    val t = pin.tables
-    val lex = lexicons.getOrElse(lang, Analyzer.emptyLexicon)
-    if (Analyzer.queryTerms(lang, query, lex).isEmpty)
-      return SearchResponse(result = false, 0, Nil, "Empty search query")
-    val plan = QueryFrontend.plan(pin.dictionary, lang, query, lex)
-    if (plan.missing.nonEmpty)
-      return SearchResponse(result = false, 0, Nil,
-        s"No data for words: ${plan.missing.mkString(", ")}, ")
-    if (plan.isEmpty) return SearchResponse(result = true, 0, Nil, null)
-    val kept = plan.terms.map(_.term)
-    val dfs = plan.terms.map(pt => pt.term -> pt.df).toMap
-    val total = Search.conjunctive(t.postings, kept).count()
-    val top = Search.bm25TopKAfter(t.postings, t.docStats, dfs, t.nDocs,
-      t.avgDl, limit, afterScore, afterDoc)
-    SearchResponse(result = true, total, items(pin.corpus, pageOf(top), dfs.keySet), null)
+    withPinned(pin => planned(pin, query, lang).fold(identity, terms => {
+      val (dfs, t) = (terms.toMap, pin.tables)
+      val top = Search.countTopK(Search.conjunctiveScores(t.postings, t.docStats, dfs, t.nDocs, t.avgDl),
+        limit, after = Some(Search.Scored(afterDoc, afterScore)))
+      respond(pin.corpus, top.count, top.ranked.toSeq, dfs.keySet)
+    }))
   }
 
   /** Boolean-tree search (AND/OR/NOT, [[graft.query.BooleanQuery]]) —
@@ -602,7 +596,8 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     * analyzed through the SAME per-lang lexicon as the index; a 1→N leaf
     * becomes an OR of its normal forms — including under NOT, where the
     * expansion correctly WIDENS the exclusion. The tree filters, positive
-    * leaves score by BM25; `count` = full candidate-set size. */
+    * leaves score by BM25: one ranking action over the tree's one
+    * aggregate; `count` = full candidate-set size. */
   def searchBoolean(tree: BooleanQuery.Node, limit: Int = 20,
                     lang: String = "en"): SearchResponse = {
     require(indexed, "index not built")
@@ -613,13 +608,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
                             lang: String): SearchResponse = {
     val t = pin.tables
     val lex = lexicons.getOrElse(lang, Analyzer.emptyLexicon)
-    def leaves(n: BooleanQuery.Node): Seq[String] = n match {
-      case BooleanQuery.Term(s) => Seq(s)
-      case BooleanQuery.And(qs) => qs.flatMap(leaves)
-      case BooleanQuery.Or(qs)  => qs.flatMap(leaves)
-      case BooleanQuery.Not(q)  => leaves(q)
-    }
-    if (leaves(tree).exists(s => Analyzer.queryTerms(lang, s, lex).isEmpty))
+    if (BooleanQuery.leafTerms(tree).exists(s => Analyzer.queryTerms(lang, s, lex).isEmpty))
       return SearchResponse(result = false, 0, Nil, "Empty search query")
     def analyzed(n: BooleanQuery.Node): BooleanQuery.Node = n match {
       case BooleanQuery.Term(s) =>
@@ -638,45 +627,46 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     if (missing.nonEmpty)
       return SearchResponse(result = false, 0, Nil,
         s"No data for words: ${missing.mkString(", ")}, ")
-    val total = BooleanQuery.matches(t.postings, q).count()
-    if (total == 0) return SearchResponse(result = true, 0, Nil, null)
-    val top = BooleanQuery.topK(t.postings, t.docStats, dfs, t.nDocs, t.avgDl, q, limit)
-    SearchResponse(result = true, total, items(pin.corpus, pageOf(top), dfs.keySet), null)
+    val top = Search.countTopK(BooleanQuery.scores(t.postings, t.docStats, dfs, t.nDocs, t.avgDl, q), limit)
+    respond(pin.corpus, top.count, top.ranked.toSeq, dfs.keySet)
+  }
+
+  /** The preamble of `search` and `searchAfter`: the query's planned
+    * (term, df) pairs from the generation's dictionary (no Spark job), or
+    * the response that answers it unranked — an empty query and missing
+    * words are errors (reference SearchServiceImpl.java:54-57,
+    * SearcherPage.java:58-79; its messages are Russian, kept in English
+    * here), an empty plan matches nothing. */
+  private def planned(pin: Pinned, query: String,
+                      lang: String): Either[SearchResponse, Seq[(String, Long)]] = {
+    // BOTH sides analyze through the same per-lang lexicon (reference
+    // lemmatizes query and index alike: SearcherPage.java:39,
+    // IndexingServiceImpl.java:144-155)
+    val lex = lexicons.getOrElse(lang, Analyzer.emptyLexicon)
+    lazy val plan = QueryFrontend.plan(pin.dictionary, lang, query, lex)
+    if (Analyzer.queryTerms(lang, query, lex).isEmpty)
+      Left(SearchResponse(result = false, 0, Nil, "Empty search query"))
+    else if (plan.missing.nonEmpty)
+      Left(SearchResponse(result = false, 0, Nil, s"No data for words: ${plan.missing.mkString(", ")}, "))
+    else if (plan.isEmpty) Left(SearchResponse(result = true, 0, Nil, null))
+    else Right(plan.terms.map(pt => pt.term -> pt.df))
   }
 
   private def doSearch(pin: Pinned, snap: Option[SearchEngine.Persisted],
                        prior: Option[(DataFrame, Double)], query: String,
                        site: Option[String], offset: Int, limit: Int,
                        lang: String): SearchResponse = {
-    // BOTH sides analyze through the same per-lang lexicon (reference
-    // lemmatizes query and index alike: SearcherPage.java:39,
-    // IndexingServiceImpl.java:144-155)
-    val lex = lexicons.getOrElse(lang, Analyzer.emptyLexicon)
-    // empty-after-analysis -> error (reference SearchServiceImpl.java:54-57)
-    val qTerms = Analyzer.queryTerms(lang, query, lex)
-    // (the reference's messages are Russian — "Задан пустой поисковый
-    // запрос" / "Нет данных по словам: …" — kept in English here)
-    if (qTerms.isEmpty)
-      return SearchResponse(result = false, 0, Nil, "Empty search query")
-    // df from the generation's dictionary: no Spark job before ranking
-    val plan = QueryFrontend.plan(pin.dictionary, lang, query, lex)
-    if (plan.missing.nonEmpty)
-      // reference sentinel row lists the missing words (SearcherPage.java:58-79)
-      return SearchResponse(result = false, 0, Nil,
-        s"No data for words: ${plan.missing.mkString(", ")}, ")
-    if (plan.isEmpty) return SearchResponse(result = true, 0, Nil, null)
-    val kept = plan.terms.map(_.term)
-    val dfs = plan.terms.map(pt => pt.term -> pt.df).toMap
-    val t = pin.tables
-    lazy val scoped = site.fold(t.postings)(pin.sitePostings)
+    val terms = planned(pin, query, lang) match { case Left(r) => return r; case Right(ts) => ts }
+    val (dfs, t) = (terms.toMap, pin.tables)
     // rank tier: a committed compressed snapshot (startIndexingPersisted,
     // not yet invalidated by a mutation) serves every query through the
     // block-max WAND path with the snapshot's FROZEN stats — rank-identical
     // to the DataFrame aggregate by construction (shared formula +
     // tie-breaks; asserted in SearchEngineSpec). A site-scoped query admits
     // only its repo's docs inside the WAND loop. `rank(k)` is ONE ranking
-    // job returning the full match count and the best k rows.
-    val rank: Int => Search.TopK = snap match {
+    // job returning the full match count and the best k rows; `scores()`
+    // is the (doc_id, score) relation of every match.
+    val (rank, scores): (Int => Search.TopK, () => DataFrame) = snap match {
       case Some(s) =>
         val admit = site match {
           case None => Wand.admitAll
@@ -687,65 +677,58 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
           }
         }
         val idfs = dfs.map { case (tm, d) => tm -> Bm25.idfS(d, s.meta.nDocs) }
-        k => Wand.countTopK(IndexWriter.readForTerms(spark, s.dir, kept, s.cfg), idfs,
-          s.meta.avgDl, k, admit)
+        def shards = IndexWriter.readForTerms(spark, s.dir, terms.map(_._1), s.cfg)
+        (k => Wand.countTopK(shards, idfs, s.meta.avgDl, k, admit),
+          () => Wand.scores(shards, idfs, s.meta.avgDl, admit))
       case None =>
-        k => Search.countTopK(Search.conjunctiveScores(scoped, t.docStats, dfs, t.nDocs, t.avgDl), k)
+        val scored = Search.conjunctiveScores(site.fold(t.postings)(pin.sitePostings),
+          t.docStats, dfs, t.nDocs, t.avgDl)
+        (k => Search.countTopK(scored, k), () => scored)
     }
-    // `count` is the FULL result-set size before pagination — the
-    // reference's response count is resultSearch.size(), not the page
-    // length (SearchServiceImpl.java:90); a UI pager needs the total
-    val (total, page) = (prior, snap) match {
-      case (None, _) =>
-        // the best offset + limit rows: all of them are kept whenever the
-        // offset clamp fires, so the last row is present
-        val ranked = rank(saturatedAdd(offset, limit))
-        val (o, l) = clampPage(offset, limit, ranked.count)
-        (ranked.count, ranked.ranked.iterator.drop(o).take(l).map(h => (h.docId, h.score)).toSeq)
-      case (Some((p, beta)), Some(_)) =>
-        // two-stage ranking: WAND retrieves C candidates by pure BM25 (an
-        // upper bound of the blended score, Search.rerankWithPrior doc)
-        // with the count, the prior reranks those C rows only. C covers
-        // every match whenever the offset clamp fires.
-        val cands = rank(math.max(math.min(8L * saturatedAdd(offset, limit), Int.MaxValue.toLong).toInt, 64))
-        val (o, l) = clampPage(offset, limit, cands.count)
-        import spark.implicits._
-        val candDf = cands.ranked.toSeq.map(h => (h.docId, h.score)).toDF("doc_id", "score")
-        (cands.count, pageOf(Search.rerankWithPrior(candDf, p, beta, l, o)))
-      case (Some((p, beta)), None) =>
-        val total = Search.conjunctive(scoped, kept).count()
-        val (o, l) = clampPage(offset, limit, total)
-        (total, pageOf(Search.blendTopK(scoped, t.docStats, dfs, t.nDocs, t.avgDl, p,
-            saturatedAdd(o, l), beta)
-          .filter(col("rank") > o)
-          .withColumnRenamed("blend", "score")))
+    // the best offset + limit rows: all of them are kept whenever the
+    // offset clamp fires, so the last row is present. `count` is the FULL
+    // result-set size before pagination — the reference's response count
+    // is resultSearch.size(), not the page length
+    // (SearchServiceImpl.java:90); a UI pager needs the total
+    val n = saturatedAdd(offset, limit)
+    val top = prior match {
+      case None => rank(n)
+      case Some((p, beta)) =>
+        // the count and the best n of `scored` by blend, in one action
+        def blend(scored: DataFrame) = Search.countTopK(Search.blendScores(scored, p, beta)
+          .select(col("doc_id"), col("blend").as("score")), n)
+        // the WAND tier first reranks its C best matches by BM25 (two-stage
+        // ranking), kept when certified exact: every match is a candidate,
+        // or the n-th blend is strictly above the C-th BM25 score (β ∈
+        // [0, 1] and pr ≥ 0 keep every blend at or below its BM25 score, so
+        // no match outside the C ranks above the n-th). Otherwise, and on
+        // the DataFrame tier, every match is blended.
+        snap.flatMap { _ =>
+          val cands = rank(math.max(math.min(8L * n, Int.MaxValue).toInt, 64))
+          val c = cands.ranked
+          val top = blend(spark.createDataFrame(c.toSeq).toDF("doc_id", "score"))
+          top.count = cands.count
+          Some(top).filter(_ => cands.count <= cands.k || top.ranked.lastOption.forall(_.score > c.last.score))
+        }.getOrElse(blend(scores()))
     }
-    if (total == 0) return SearchResponse(result = true, 0, Nil, null)
-    SearchResponse(result = true, total, items(pin.corpus, page, dfs.keySet), null)
+    val (o, l) = clampPage(offset, limit, top.count)
+    respond(pin.corpus, top.count, top.ranked.toSeq.drop(o).take(l), dfs.keySet)
   }
 
-  /** the (doc_id, score) rows of a ranked (rank, doc_id, score) frame, in
-    * rank order: the ≤ k rows are sorted here, not by a distributed sort */
-  private def pageOf(top: DataFrame): Seq[(Long, Double)] =
-    top.select(col("rank").cast("long"), col("doc_id"), col("score")).collect()
-      .sortBy(_.getLong(0)).map(r => (r.getLong(1), r.getDouble(2))).toSeq
-
-  /** the decorated `page` ((doc_id, score) in rank order): one filtered
-    * corpus scan computes title and snippet; rank order and score are
-    * attached here, on the driver */
-  private def items(corpus: DataFrame, page: Seq[(Long, Double)], terms: Set[String]): Seq[SearchItem] =
-    if (page.isEmpty) Nil
-    else {
-      val rows = Search.decorateIds(corpus, page.map(_._1), terms).collect()
-        .iterator.map(r => r.getLong(0) -> r).toMap
-      page.flatMap { case (id, score) =>
-        rows.get(id).map { r =>
-          SearchItem(r.getAs[String]("repo"), r.getAs[String]("repo"),
-            r.getAs[String]("path"), r.getAs[String]("title"),
-            r.getAs[String]("snippet"), score)
-        }
+  /** the response to a ranked page (best first): the match count, and the
+    * page decorated — one filtered corpus scan computes title and snippet;
+    * rank order and score are attached here, on the driver */
+  private def respond(corpus: DataFrame, total: Long, page: Seq[Search.Scored],
+                      terms: Set[String]): SearchResponse = {
+    val rows = if (page.isEmpty) Map.empty[Long, Row]
+      else Search.decorateIds(corpus, page.map(_.docId), terms).collect().map(r => r.getLong(0) -> r).toMap
+    SearchResponse(result = true, total, page.flatMap { s =>
+      rows.get(s.docId).map { r =>
+        SearchItem(r.getAs[String]("repo"), r.getAs[String]("repo"), r.getAs[String]("path"),
+          r.getAs[String]("title"), r.getAs[String]("snippet"), s.score)
       }
-    }
+    }, null)
+  }
 
   /** offset + limit clamped to [0, Int.MaxValue]: the heap size a page
     * needs, known before the match count */

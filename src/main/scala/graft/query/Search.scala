@@ -157,12 +157,23 @@ object Search {
 
   /** `(count, best k)` of a (doc_id, score) relation in ONE action: a
     * [[TopK]] per partition, merged with treeAggregate. The count comes
-    * back in the action's result, so a retried task cannot add to it. */
-  def countTopK(scored: DataFrame, k: Int): TopK =
+    * back in the action's result, so a retried task cannot add to it.
+    * With an `after` cursor, every row counts but only rows ranked after
+    * it are kept: the page after the cursor, with the full match count. */
+  def countTopK(scored: DataFrame, k: Int, after: Option[Scored] = None): TopK =
     scored.select(col("doc_id"), col("score")).rdd
       .treeAggregate(new TopK(k))(
-        (acc, r) => { acc.offer(r.getLong(0), r.getDouble(1)); acc },
+        (acc, r) => {
+          val s = Scored(r.getLong(0), r.getDouble(1))
+          if (after.forall(RankOrder.compare(s, _) < 0)) acc.offer(s.docId, s.score) else acc.count += 1
+          acc
+        },
         (a, b) => a.merge(b))
+
+  /** (rank, doc_id, score) rows of a top-k, best first; rank is an int */
+  private[graft] def view(spark: SparkSession, top: TopK): DataFrame =
+    spark.createDataFrame(top.ranked.toSeq.zipWithIndex.map { case (h, i) => (i + 1, h.docId, h.score) })
+      .toDF("rank", "doc_id", "score")
 
   /** BM25-scored conjunctive top-k: (rank, doc_id, score).
     * dfs: term -> df (from the driver-side plan — terms are few, so df
@@ -324,22 +335,19 @@ object Search {
     * deterministic total order (score desc, doc_id asc). This is the deep-
     * paging scale path: OFFSET p·k recomputes and discards p·k rows on
     * every page (the classic collapse around page 10^4), while the cursor
-    * filter prunes candidates BEFORE the top-k heap, so page 10^4 costs
-    * the same as page 1. Because the total order is deterministic, the
-    * cursor page is provably identical to the offset page — ft_search_after
-    * hashes against exactly that statement (ranks offset+1..offset+k of the
-    * full ordering). The cursor score is the exact double collected from
-    * the previous page; scoring is deterministic, so the equality/strict
-    * comparison against the recomputed score is bit-safe. */
+    * drops candidates BEFORE the top-k heap, so page 10^4 costs the same
+    * as page 1. Because the total order is deterministic, the cursor page
+    * is provably identical to the offset page — ft_search_after hashes
+    * against exactly that statement (ranks offset+1..offset+k of the full
+    * ordering). The cursor score is the exact double collected from the
+    * previous page; scoring is deterministic, so the strict comparison
+    * against the recomputed score is bit-safe. A view of [[countTopK]]'s
+    * cursor, the one SearchEngine.searchAfter ranks with. */
   def bm25TopKAfter(postings: DataFrame, docStats: DataFrame,
                     dfs: Map[String, Long], nDocs: Long, avgDl: Double,
-                    k: Int, afterScore: Double, afterDoc: Long): DataFrame = {
-    val scored = conjunctiveScores(postings, docStats, dfs, nDocs, avgDl)
-      .filter(col("score") < afterScore ||
-        (col("score") === afterScore && col("doc_id") > afterDoc))
-    rankTopK(scored, k, Seq(desc("score"), asc("doc_id")))
-      .select(col("rank"), col("doc_id"), col("score"))
-  }
+                    k: Int, afterScore: Double, afterDoc: Long): DataFrame =
+    view(postings.sparkSession, countTopK(conjunctiveScores(postings, docStats, dfs, nDocs, avgDl), k,
+      after = Some(Scored(afterDoc, afterScore))))
 
   /** Expansion-term mining for blind relevance feedback: the strongest
     * terms of the pseudo-relevant doc set, weighted by Σtf WITHIN that set
@@ -841,16 +849,16 @@ object Search {
       .select(col("rank"), col("doc_id"), col("blend"))
   }
 
-  /** The blend factor join shared by `blendTopK` and the facade's two-stage
-    * rerank: blend = score · (β + (1−β)·pr/max(pr)) over (doc_id, score)
-    * rows. Empty prior: max(pr) is NULL — coalesce to 1 so every doc's
-    * prior factor is 0 and the ranking degrades to β-scaled pure relevance
-    * instead of all-NULL blends. Docs absent from the prior (left join)
-    * take pr = 0: new pages rank on relevance alone until the next prior
-    * refresh, which is the graceful-staleness semantics a periodically
-    * recomputed authority signal needs. */
+  /** The blend factor join shared by `blendTopK` and the facade's prior
+    * ranking: blend = score · (β + (1−β)·pr/max(pr)) over (doc_id, score)
+    * rows. Empty or all-zero prior: max(pr) is NULL or 0 — taken as 1 so
+    * every doc's prior factor is 0 and the ranking degrades to β-scaled
+    * pure relevance instead of all-NULL or NaN blends. Docs absent from
+    * the prior (left join) take pr = 0: new pages rank on relevance alone
+    * until the next prior refresh, which is the graceful-staleness
+    * semantics a periodically recomputed authority signal needs. */
   def blendScores(scored: DataFrame, prior: DataFrame, beta: Double): DataFrame = {
-    val prMax = prior.agg(coalesce(max(col("pr")), lit(1L)).cast("double").as("pr_max"))
+    val prMax = prior.agg(when(max(col("pr")) > 0, max(col("pr"))).otherwise(lit(1L)).cast("double").as("pr_max"))
     scored
       .join(prior.select(col("doc_id"), col("pr")), Seq("doc_id"), "left")
       .crossJoin(broadcast(prMax))
@@ -858,21 +866,6 @@ object Search {
         (lit(beta) + lit(1.0 - beta) *
           coalesce(col("pr"), lit(0L)).cast("double") / col("pr_max")))
   }
-
-  /** Stage-2 authority rerank of a stage-1 candidate list (rank, doc_id,
-    * score) — the standard two-stage web-ranking shape: retrieval fetches
-    * C ≥ k candidates by pure relevance (WAND/BM25), the rerank blends the
-    * static prior over those C rows only. The blend factor is ≤ 1, so a
-    * candidate's BM25 score upper-bounds its blended score — whenever the
-    * k-th blended score among the C candidates ≥ the C-th BM25 score, the
-    * result is provably identical to blending the whole corpus; larger C
-    * trades rerank cost (C rows, trivial) for that certificate. */
-  def rerankWithPrior(cands: DataFrame, prior: DataFrame, beta: Double,
-                      k: Int, offset: Int = 0): DataFrame =
-    rankTopK(blendScores(cands.select(col("doc_id"), col("score")), prior, beta)
-        .drop("score").withColumnRenamed("blend", "score"),
-      k, Seq(desc("score"), asc("doc_id")), offset)
-      .select(col("rank"), col("doc_id"), col("score"))
 
   /** BM25F — field-weighted BM25 over (title, body) fields of the same page
     * (Robertson/Zaragoza 2004, the standard web-ranking upgrade: a title hit

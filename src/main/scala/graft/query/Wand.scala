@@ -2,23 +2,24 @@ package graft.query
 
 import graft.index.{PostingCodec, ShardPosting}
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Conjunctive BM25 top-k over the compressed sharded index with block-max
   * pruning — the scale path of the query core (north star: "BM25 top-k with
   * posting-list intersection and block-max WAND pruning").
   *
-  * Distribution shape: every entry point runs through ONE shard runner
-  * ([[run]]), one Spark job. The query touches |terms| × |shards| blobs;
-  * they are grouped by shard (each group = the query's full working set
-  * for one docId range, ≤ |terms| blobs), and a per-shard loop —
-  * conjunctive ([[intersectShard]]), disjunctive block-max WAND or
-  * MaxScore — scores them into a [[Search.TopK]] with zero further
-  * shuffle; the tiny per-shard top-k lists (≤ k rows each) merge in a
-  * treeAggregate inside the same job. The DataFrame-returning entry points
-  * are views of the merged `TopK.ranked`. Adding executors splits shards,
-  * not terms — scaling is embarrassing in the shard dimension, which is why
-  * hot terms don't skew this path.
+  * Distribution shape: every top-k entry point runs through ONE shard runner
+  * ([[run]]), one Spark job. The query touches |terms| × |shards| blobs; they
+  * are grouped by shard (each group = the query's full working set for one
+  * docId range, ≤ |terms| blobs), and a per-shard loop — conjunctive
+  * ([[intersectShard]]), disjunctive block-max WAND or MaxScore — scores them
+  * into a [[Search.TopK]] with zero further shuffle; the tiny per-shard top-k
+  * lists (≤ k rows each) merge in a treeAggregate inside the same job. The
+  * DataFrame-returning entry points are views of the merged `TopK.ranked`;
+  * [[scores]] is the conjunctive loop unpruned, as a relation of every match.
+  * Adding executors splits shards, not terms — scaling is embarrassing in the
+  * shard dimension, which is why hot terms don't skew this path.
   *
   * Pruning: rarest-first driving list (reference's df-asc ordering,
   * SearcherPage.java:47,201-206) + skipTo on the others (skip blocks are
@@ -32,7 +33,7 @@ object Wand {
     * term; `avgDl` must be the value the index was encoded with; returns
     * (rank, doc_id, score) global top-k, ties docId asc. */
   def topK(shards: Dataset[ShardPosting], idfs: Map[String, Double], avgDl: Double, k: Int): DataFrame =
-    view(shards, countTopK(shards, idfs, avgDl, k))
+    Search.view(shards.sparkSession, countTopK(shards, idfs, avgDl, k))
 
   /** The full conjunctive match count AND the global top-k in ONE Spark
     * job: the shard runner with [[intersectShard]] per shard. Only docs
@@ -42,26 +43,29 @@ object Wand {
                 avgDl: Double, k: Int, admit: Long => Boolean = admitAll): Search.TopK =
     run(shards, idfs, k)(intersectShard(_, _, avgDl, k, admit))
 
-  /** The shard runner of every entry point, ONE Spark job: the idfs ride
-    * one broadcast, the query's blobs are grouped by shard inside the job
-    * (one shuffle on the shard key), `perShard` turns each shard's blobs
-    * into a partial and treeAggregate merges them, so the count comes back
-    * in the action's result. */
-  private def run(shards: Dataset[ShardPosting], idfs: Map[String, Double], k: Int)(
-      perShard: (Array[ShardPosting], Map[String, Double]) => Search.TopK): Search.TopK = {
-    val idfB = shards.sparkSession.sparkContext.broadcast(idfs)
-    shards.rdd.keyBy(_.shard).groupByKey()
-      .map { case (_, it) => perShard(it.toArray, idfB.value) }
-      .treeAggregate(new Search.TopK(k))((a, b) => a.merge(b), (a, b) => a.merge(b))
-  }
+  /** Every admitted conjunctive match with the score [[countTopK]] ranks
+    * it by, as a (doc_id, score) relation: [[intersectShard]] with no
+    * bound on the rows kept, so θ never skips a doc — for a ranking that
+    * is not BM25 alone (SearchEngine's prior blend). */
+  def scores(shards: Dataset[ShardPosting], idfs: Map[String, Double],
+             avgDl: Double, admit: Long => Boolean = admitAll): DataFrame =
+    shards.sparkSession.createDataFrame(perShard(shards, idfs)(intersectShard(_, _, avgDl, Int.MaxValue, admit))
+      .flatMap(_.ranked.map(s => (s.docId, s.score)))).toDF("doc_id", "score")
 
-  /** (rank, doc_id, score) rows of a merged top-k, best first; rank is an
-    * int, as a row_number rank stamp is */
-  private def view(shards: Dataset[ShardPosting], top: Search.TopK): DataFrame = {
-    val spark = shards.sparkSession
-    import spark.implicits._
-    top.ranked.toSeq.zipWithIndex.map { case (h, i) => (i + 1, h.docId, h.score) }
-      .toDF("rank", "doc_id", "score")
+  /** The shard runner of every top-k entry point, ONE Spark job: each
+    * shard's partial from [[perShard]], merged by treeAggregate, so the
+    * count comes back in the action's result. */
+  private def run(shards: Dataset[ShardPosting], idfs: Map[String, Double], k: Int)(
+      f: (Array[ShardPosting], Map[String, Double]) => Search.TopK): Search.TopK =
+    perShard(shards, idfs)(f)
+      .treeAggregate(new Search.TopK(k))((a, b) => a.merge(b), (a, b) => a.merge(b))
+
+  /** `f` over each shard's blobs: the idfs ride one broadcast, the query's
+    * blobs are grouped by shard (one shuffle on the shard key). */
+  private def perShard(shards: Dataset[ShardPosting], idfs: Map[String, Double])(
+      f: (Array[ShardPosting], Map[String, Double]) => Search.TopK): RDD[Search.TopK] = {
+    val idfB = shards.sparkSession.sparkContext.broadcast(idfs)
+    shards.rdd.keyBy(_.shard).groupByKey().map { case (_, it) => f(it.toArray, idfB.value) }
   }
 
   /** the admission predicate that accepts every doc */
@@ -154,7 +158,7 @@ object Wand {
     */
   def topKDisjunctive(shards: Dataset[ShardPosting], idfs: Map[String, Double],
                       avgDl: Double, k: Int): DataFrame =
-    view(shards, run(shards, idfs, k)(disjunctiveShard(_, _, avgDl, k)))
+    Search.view(shards.sparkSession, run(shards, idfs, k)(disjunctiveShard(_, _, avgDl, k)))
 
   /** one shard's disjunctive block-max WAND top-k */
   private def disjunctiveShard(blobs: Array[ShardPosting], idf: Map[String, Double],
@@ -235,7 +239,7 @@ object Wand {
     * O(postings). */
   def maxScoreTopK(shards: Dataset[ShardPosting], idfs: Map[String, Double],
                    avgDl: Double, k: Int): DataFrame =
-    view(shards, run(shards, idfs, k)(maxScoreShard(_, _, avgDl, k)))
+    Search.view(shards.sparkSession, run(shards, idfs, k)(maxScoreShard(_, _, avgDl, k)))
 
   /** one shard's MaxScore top-k */
   private def maxScoreShard(blobs: Array[ShardPosting], idf: Map[String, Double],

@@ -116,6 +116,10 @@ class SearchEngineSpec extends AnyFunSuite {
     assert(p2.data.map(_.uri) == off.data.map(_.uri),
       s"cursor ${p2.data.map(_.uri)} vs offset ${off.data.map(_.uri)}")
     assert(p2.count == p1.count)
+    // a cursor past the last match: an empty page, the count still the total
+    val last = engine.search("spark join", limit = p1.count.toInt).data.last
+    val past = engine.searchAfter("spark join", last.relevance, last.uri.stripPrefix("doc/").toLong, limit = 5)
+    assert(past.result && past.data.isEmpty && past.count == p1.count)
     // error payloads mirror search()
     assert(!engine.searchAfter("the a", 1.0, 0L).result)
     assert(!engine.searchAfter("spark warpdrive", 1.0, 0L).result)
@@ -132,6 +136,24 @@ class SearchEngineSpec extends AnyFunSuite {
     assert(r.count >= r.data.length)
     val bad = engine.searchBoolean(And(Seq(Term("spark"), Term("warpdrive"))))
     assert(!bad.result && bad.error.contains("warpdrive"))
+    // a wide tree of unknown NOT leaves excludes nothing: it is the term search
+    val wide = engine.searchBoolean(And(Term("spark") +: (0 until 150).map(i => Not(Term(s"zz$i")))))
+    assertSameResponse("And(spark, Not(zz0..zz149))", wide, engine.search("spark"))
+    // OR over the whole vocabulary ≡ a scalar recompute: every doc with a
+    // term, scored by the BM25 sum over its terms, best 20
+    val t = engine.tables
+    val vocab = engine.dictionary
+    val or = engine.searchBoolean(Or(vocab.keys.toSeq.sorted.map(Term)))
+    val dl = t.docStats.collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("dl")).toMap
+    val want = t.postings.select("doc_id", "term", "tf").collect().toSeq
+      .groupBy(_.getLong(0)).toSeq.map { case (d, rows) =>
+        d -> rows.map(r => graft.query.Bm25.scoreS(r.getLong(2), vocab(r.getString(1)), dl(d), t.nDocs, t.avgDl)).sum
+      }.sortBy { case (d, sc) => (-sc, d) }
+    assert(or.result && or.count == want.size, s"OR(vocabulary): count ${or.count} vs ${want.size}")
+    assert(or.data.map(_.uri) == want.take(20).map(w => s"doc/${w._1}"), "OR(vocabulary): ranks diverged")
+    or.data.zip(want).foreach { case (i, (_, sc)) =>
+      assert(math.abs(i.relevance - sc) < 1e-9, s"OR(vocabulary): ${i.uri} score diverged")
+    }
   }
 
   test("result cache: repeated query within TTL returns the same object") {
@@ -549,9 +571,50 @@ class SearchEngineSpec extends AnyFunSuite {
     val restored = fe.search("spark join", limit = 10)
     assert(restored.data.map(_.uri) == de.search("spark join", limit = 10).data.map(_.uri))
 
+    // a planted prior past the first candidates: the only doc with
+    // authority is "spark"'s BM25 rank 348, so it keeps its BM25 score
+    // while every other match halves. The WAND tier's first C =
+    // max(8·10, 64) = 80 candidates miss it, so their rerank does not
+    // certify; both tiers must answer what a blend of every match answers
+    import spark.implicits._
+    de.clearAuthorityPrior()
+    val bm25 = de.search("spark", limit = 1000)
+    assert(bm25.count > 348 && bm25.data.length == bm25.count)
+    val planted = bm25.data(347)
+    val one = Seq((planted.uri.stripPrefix("doc/").toLong, 1.0)).toDF("doc_id", "pr")
+    de.setAuthorityPrior(one, beta = 0.5)
+    pe.setAuthorityPrior(one, beta = 0.5)
+    val top = de.search("spark", limit = 10)
+    assertSameResponse("planted prior", pe.search("spark", limit = 10), top)
+    val want = bm25.data.map(i => i.uri -> (if (i == planted) i.relevance else 0.5 * i.relevance))
+      .sortBy { case (u, sc) => (-sc, u.stripPrefix("doc/").toLong) }.take(10)
+    assert(top.count == bm25.count && top.data.map(_.uri) == want.map(_._1) && want.head._1 == planted.uri)
+    top.data.zip(want).foreach { case (i, (_, sc)) =>
+      assert(math.abs(i.relevance - sc) < 1e-9, s"planted prior: ${i.uri} score diverged")
+    }
+    // β outside [0, 1] lets a blend exceed its BM25 score: refused
+    for (beta <- Seq(1.5, -0.1)) {
+      intercept[IllegalArgumentException](de.setAuthorityPrior(one, beta))
+      intercept[IllegalArgumentException](fe.loadAuthorityPrior(dir, beta))
+      intercept[IllegalArgumentException](new SearchEngine(spark, corpus).startIndexingPersisted(
+        Files.createTempDirectory("graft-api-beta").toString, 1L, cfg, priorEdges = Some(edges), priorBeta = beta))
+    }
+    // so does a negative pr; an all-zero prior carries no authority, so
+    // every blend is β·BM25 (not NaN) on both tiers
+    val plantedId = planted.uri.stripPrefix("doc/").toLong
+    intercept[IllegalArgumentException](de.setAuthorityPrior(Seq((plantedId, -1.0)).toDF("doc_id", "pr")))
+    val zero = Seq((plantedId, 0.0)).toDF("doc_id", "pr")
+    de.setAuthorityPrior(zero, beta = 0.5)
+    pe.setAuthorityPrior(zero, beta = 0.5)
+    val z = de.search("spark", limit = 10)
+    assertSameResponse("all-zero prior", pe.search("spark", limit = 10), z)
+    assert(z.count == bm25.count && z.data.map(_.uri) == bm25.data.take(10).map(_.uri))
+    z.data.zip(bm25.data).foreach { case (i, b) =>
+      assert(math.abs(i.relevance - 0.5 * b.relevance) < 1e-9, s"all-zero prior: ${i.uri} score diverged")
+    }
+
     // graceful staleness: an upserted page is absent from the prior (pr = 0)
     // yet stays searchable on relevance alone
-    import spark.implicits._
     val doc = Seq((0L, "src0", "doc/0", "0" * 40, "en", "priorstaleword"))
       .toDF("doc_id", "repo", "path", "commit", "lang", "content")
     assert(pe.indexPage(doc))
@@ -645,12 +708,41 @@ class SearchEngineSpec extends AnyFunSuite {
     assert(zero.result && zero.count == 0 && zero.data.isEmpty)
     assert(conjunctiveCount(pe, rare, Some(other)) == 0)
     assert(zJobs <= 1, s"zero-match site-scoped search ran $zJobs jobs")
+    // a prior-blended search is the tier's one ranking job, the rerank and
+    // the decoration (6 jobs when the first C candidates certify); a
+    // uniform prior leaves every blend at its BM25 score, so the 10th
+    // blend is above the 80th BM25 score and the first pass certifies
+    import spark.implicits._
+    val uniform = pe.corpus.select($"doc_id", org.apache.spark.sql.functions.lit(1.0).as("pr"))
+    pe.setAuthorityPrior(uniform, beta = 0.5)
+    pe.search("hash join", limit = 10)
+    val (wPrior, wNames) = jobNamesOf(pe.search("spark join", limit = 10))
+    pe.clearAuthorityPrior()
+    assert(wPrior.count > 80 && wPrior.data.length == 10)
+    assert(wNames.count(_.contains("Wand.scala")) == 1, s"prior (WAND tier) jobs: $wNames")
+    assert(wNames.size <= 6, s"prior (WAND tier) search ran ${wNames.size} jobs: $wNames")
     // LSM tier, after an upsert: the upsert advanced the generation the
     // first search pinned, so the first search after it only ranks and
     // decorates, as the next one does
-    import spark.implicits._
     val e = freshEngine()
     assert(e.search("hash join", limit = 10).result)
+    // searchAfter and searchBoolean: one ranking action plus decoration
+    // (7 and 13 jobs when each counted with a job of its own)
+    val p1 = e.search("spark join", limit = 5).data.last
+    val (after, aJobs) = jobsOf(e.searchAfter("spark join", p1.relevance, p1.uri.stripPrefix("doc/").toLong, limit = 5))
+    assert(after.result && after.data.length == 5)
+    assert(aJobs <= 4, s"searchAfter ran $aJobs jobs")
+    import graft.query.BooleanQuery.{And, Not, Term}
+    val (bool, bJobs) = jobsOf(e.searchBoolean(And(Seq(Term("spark"), Not(Term("dup")))), limit = 10))
+    assert(bool.result && bool.data.length == 10)
+    assert(bJobs <= 4, s"searchBoolean ran $bJobs jobs")
+    // prior-blended on the DataFrame tier
+    e.setAuthorityPrior(uniform, beta = 0.5)
+    e.search("hash join", limit = 10)
+    val (dPrior, dJobs) = jobsOf(e.search("spark join", limit = 10))
+    e.clearAuthorityPrior()
+    assert(dPrior.result && dPrior.data.length == 10)
+    assert(dJobs <= 10, s"prior (DataFrame tier) search ran $dJobs jobs")
     assert(e.indexPage(Seq((3L, "src0", "doc/3", "0" * 40, "en", "lsmpinword spark join"))
       .toDF("doc_id", "repo", "path", "commit", "lang", "content")))
     val (pin, pJobs) = jobsOf(e.search("lsmpinword", limit = 10))

@@ -634,12 +634,16 @@ class SearchSpec extends AnyFunSuite {
     got.foreach { case (_, id, _) => assert(!docsOf("dup").contains(id)) }
     // pure negation is rejected by construction
     intercept[IllegalArgumentException] {
-      BooleanQuery.matches(tables.postings, And(Seq(Not(Term("join")))))
+      BooleanQuery.scores(tables.postings, tables.docStats, dfs, tables.nDocs, tables.avgDl,
+        And(Seq(Not(Term("join")))))
     }
-    // single-term OR degenerates to the term's doc set
-    val orOne = BooleanQuery.matches(tables.postings, Or(Seq(Term("dup"))))
-      .collect().map(_.getLong(0)).toSet
-    assert(orOne == docsOf("dup"))
+    // single-term OR degenerates to the term's doc set, through scores and topK
+    val orOne = Or(Seq(Term("dup")))
+    val dupDf = Map("dup" -> oracle.df("dup"))
+    assert(BooleanQuery.scores(tables.postings, tables.docStats, dupDf, tables.nDocs, tables.avgDl, orOne)
+      .collect().map(_.getLong(0)).toSet == docsOf("dup"))
+    assert(BooleanQuery.topK(tables.postings, tables.docStats, dupDf, tables.nDocs, tables.avgDl, orOne,
+      docsOf("dup").size + 1).collect().map(_.getLong(1)).toSet == docsOf("dup"))
   }
 
   test("batched BM25: a repeated (query_id, term) row neither double-counts nor changes ranks") {
