@@ -1,6 +1,7 @@
 package graft.api
 
 import graft.analyze.{Analyzer, Html}
+import graft.functions.ByRef
 import graft.index.{IndexWriter, InvertedIndex}
 import graft.io.TableIO
 import graft.query.{Bm25, BooleanQuery, QueryFrontend, Search, Wand}
@@ -40,10 +41,10 @@ import scala.jdk.CollectionConverters._
   * deltas are computed on the driver (IncrementalIndex.mergePage): two
   * Spark jobs (the page's token collect and one fused point read), none
   * with a shuffle stage; the batch is written from the driver, with no
-  * job. The corpus replace is a lazy filter + local-rows union per
-  * upsert, folded into a fresh localCheckpoint every `checkpointEvery`
-  * upserts: amortized O(corpus / checkpointEvery) per call, analyzed-plan
-  * size bounded by the fold period. Reads serve a cached base of live
+  * job. The corpus is one flat patch over a root folded into a fresh
+  * localCheckpoint every `checkpointEvery` upserts (amortized O(corpus /
+  * checkpointEvery) per call). Values enter plans by reference, so each
+  * plan shape compiles once. Reads serve a cached base of live
   * tables read from the batch log plus a driver-side delta of the pages
   * merged since: an upsert advances both without a store read, and only a
   * fold, a compaction or a rebuild reads a new base. The log is compacted
@@ -89,10 +90,11 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     * mutation (the persisted snapshot is stale once the live LSM moves) */
   @volatile private var persisted: Option[SearchEngine.Persisted] = None
   /** query-independent authority prior (doc_id, pr) + blend β; when set,
-    * every search blends it into the ranking (Search.blendScores). Survives
+    * every search blends it into the ranking (Search.blendScores), with
+    * the max(pr) blends divide by. Survives
     * corpus mutations by design: docs absent from the prior take pr = 0
     * (rank on relevance alone until the next prior refresh) */
-  @volatile private var authorityPrior: Option[(DataFrame, Double)] = None
+  @volatile private var authorityPrior: Option[(DataFrame, Double, Double)] = None
 
   // ---- LSM state store backing the live tables -------------------------
   private val baseDir = stateDir.getOrElse(
@@ -116,6 +118,13 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
 
   // ---- serve state: cached base tables plus a driver-side delta --------
   import SearchEngine.{Counts, Delta}
+
+  /** one flat plan whatever the delta's age: `table` minus every key in
+    * `keys` (an `InSet`), plus the delta's live rows as a local relation */
+  private def patch(table: DataFrame, key: String, keys: Iterable[Any], schema: StructType,
+                    rows: Seq[Row]): DataFrame =
+    if (keys.isEmpty) table
+    else table.filter(!ByRef.inSet(col(key), keys)).unionByName(spark.createDataFrame(rows.asJava, schema))
 
   /** The lifetime of cached data that searches read: a search holds it, a
     * mutation replaces it, and `drop` runs once it is replaced and its last
@@ -146,22 +155,15 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
                              val corpus: DataFrame, corpusRoot: Option[Lease]) {
     def dictionary: Map[String, Long] = counts.dictionary
 
-    /** one flat plan per table whatever the delta's age: the base minus
-      * every touched key, plus the delta's live rows as a local relation */
-    private def patch(table: DataFrame, key: String, keys: Iterable[Any], ddl: String,
-                      rows: Seq[Row]): DataFrame =
-      if (keys.isEmpty) table
-      else table.filter(!col(key).isin(keys.toSeq: _*))
-        .unionByName(spark.createDataFrame(rows.asJava, StructType.fromDDL(ddl)))
     private def postings(from: DataFrame, inScope: String => Boolean): DataFrame =
-      patch(from, "doc_id", delta.docs.keys, "doc_id BIGINT, term STRING, tf BIGINT",
+      patch(from, "doc_id", delta.docs.keys, StructType.fromDDL("doc_id BIGINT, term STRING, tf BIGINT"),
         for ((d, Some((r, tf))) <- delta.docs.toSeq if inScope(r); (t, n) <- tf.toSeq) yield Row(d, t, n))
 
     lazy val tables: InvertedIndex.Tables = InvertedIndex.Tables(
       postings(base.postings, _ => true),
-      patch(base.termStats, "term", delta.terms, "term STRING, df BIGINT",
+      patch(base.termStats, "term", delta.terms, StructType.fromDDL("term STRING, df BIGINT"),
         delta.terms.toSeq.flatMap(t => dictionary.get(t).map(Row(t, _)))),
-      patch(base.docStats, "doc_id", delta.docs.keys, "doc_id BIGINT, dl BIGINT",
+      patch(base.docStats, "doc_id", delta.docs.keys, StructType.fromDDL("doc_id BIGINT, dl BIGINT"),
         delta.docs.toSeq.collect { case (d, Some((_, tf))) => Row(d, tf.values.sum) }),
       counts.nDocs, counts.avgDl)
 
@@ -211,8 +213,11 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     }
   }
   private var live: Option[Pinned] = None
-  /** the lease on the cached or checkpointed frame the corpus chain starts
-    * from; None for a corpus read back from the docs log (attach) */
+  /** the corpus patch's root; the docs replaced since (None: deleted) */
+  private var corpusBase: DataFrame = initialCorpus
+  private var corpusDelta = Map.empty[Long, Option[Row]]
+  /** the lease on a cached or checkpointed `corpusBase`; None for a corpus
+    * read back from the docs log (attach) */
   private var corpusRoot: Option[Lease] = None
   /** every site-set broadcast not yet destroyed */
   private val siteSets = java.util.concurrent.ConcurrentHashMap.newKeySet[Broadcast[Array[Long]]]()
@@ -248,10 +253,11 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     try f(pin) finally pin.release()
   }
 
-  /** `df` cached as the root a corpus chain starts from */
+  /** `df` cached as the root the corpus patch starts from */
   private def cachedRoot(df: DataFrame): DataFrame = {
     val root = df.cache()
     corpusRoot = Some(new Lease(() => root.unpersist(): Unit))
+    corpusBase = root; corpusDelta = Map.empty
     root
   }
 
@@ -404,7 +410,8 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     * driver (IncrementalIndex.mergePage) — one version per doc_id, a
     * delete for each doc whose re-fetch fails the HTTP gate, a
     * tokenize-and-merge for the rest — then replace-by-doc_id in the
-    * corpus. The full corpus is never re-tokenized; a frame of more than
+    * corpus, one flat patch over its root. The full corpus is never
+    * re-tokenized; a frame of more than
     * IncrementalIndex.isinThreshold rows is refused (bulk loads go through
     * startIndexing or IncrementalIndex.start). */
   def indexPage(doc: DataFrame): Boolean = synchronized {
@@ -432,12 +439,13 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     val page = IncrementalIndex.mergePage(store, doc3, lexicons, Html.textOf, keep)
     var folded = false
     if (page.ids.nonEmpty) {
-      // corpus replace is a LAZY chain over the last checkpoint: a filter
-      // and a union with the page's local rows per upsert, so a later
-      // corpus read runs no extra job for it. The chain is folded into a
-      // fresh checkpoint every `checkpointEvery` calls, which bounds the
-      // analyzed plan by the fold period.
-      corpus = corpus.filter(!col("doc_id").isin(page.ids: _*)).unionByName(page.docs)
+      // the corpus is ONE flat lazy patch, as the serve tables are: its
+      // root minus every doc replaced since the last fold plus their live
+      // rows (a local relation's collect: no job), folded into a fresh
+      // checkpoint every `checkpointEvery` calls
+      val rows = page.docs.select(corpusBase.schema.map(f => col(f.name).cast(f.dataType)): _*).collect()
+      corpusDelta ++= page.ids.map(_ -> Option.empty[Row]) ++ rows.map(r => r.getAs[Long]("doc_id") -> Some(r))
+      corpus = patch(corpusBase, "doc_id", corpusDelta.keys, corpusBase.schema, corpusDelta.values.flatten.toSeq)
       sinceCheckpoint += 1
       if (sinceCheckpoint >= checkpointEvery) {
         corpus = corpus.localCheckpoint(true)
@@ -446,6 +454,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
         val blocks = corpus.queryExecution.analyzed.collectFirst { case r: LogicalRDD => r.rdd }
         corpusRoot.foreach(_.replace())
         corpusRoot = Some(new Lease(() => blocks.foreach(_.unpersist(false)): Unit))
+        corpusBase = corpus; corpusDelta = Map.empty
         sinceCheckpoint = 0
         folded = true
       }
@@ -519,16 +528,17 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     * .pagerank` over the crawl graph — blended into every subsequent
     * search's ranking: blend = bm25 · (β + (1−β)·pr/max(pr)). β ∈ [0, 1]
     * and pr ≥ 0 are required, so that no blend exceeds its BM25 score (the
-    * bound the WAND tier's certified rerank rests on; one job checks pr).
-    * The response cache is invalidated (same query, different ranking). */
+    * bound the WAND tier's certified rerank rests on; one aggregate checks
+    * pr and takes max(pr)). The response cache is invalidated. */
   def setAuthorityPrior(prior: DataFrame, beta: Double = 0.5): Unit = synchronized {
     require(beta >= 0 && beta <= 1, s"beta must be in [0, 1], got $beta")
     val cached = prior.select(col("doc_id"), col("pr")).cache()
-    if (!cached.filter(col("pr") < 0).isEmpty) {
+    val (prMin, prMax) = Search.priorRange(cached)
+    if (prMin < 0) {
       cached.unpersist(); throw new IllegalArgumentException("prior pr must be >= 0")
     }
     authorityPrior.foreach(_._1.unpersist())
-    authorityPrior = Some((cached, beta))
+    authorityPrior = Some((cached, beta, prMax))
     invalidateResponses()
   }
 
@@ -653,7 +663,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
   }
 
   private def doSearch(pin: Pinned, snap: Option[SearchEngine.Persisted],
-                       prior: Option[(DataFrame, Double)], query: String,
+                       prior: Option[(DataFrame, Double, Double)], query: String,
                        site: Option[String], offset: Int, limit: Int,
                        lang: String): SearchResponse = {
     val terms = planned(pin, query, lang) match { case Left(r) => return r; case Right(ts) => ts }
@@ -693,9 +703,9 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     val n = saturatedAdd(offset, limit)
     val top = prior match {
       case None => rank(n)
-      case Some((p, beta)) =>
+      case Some((p, beta, prMax)) =>
         // the count and the best n of `scored` by blend, in one action
-        def blend(scored: DataFrame) = Search.countTopK(Search.blendScores(scored, p, beta)
+        def blend(scored: DataFrame) = Search.countTopK(Search.blendScores(scored, p, beta, prMax)
           .select(col("doc_id"), col("blend").as("score")), n)
         // the WAND tier first reranks its C best matches by BM25 (two-stage
         // ranking), kept when certified exact: every match is a candidate,

@@ -13,14 +13,16 @@ object Bm25 {
   val k1 = 1.2
   val b  = 0.75
 
-  def idf(df: Column, nDocs: Long): Column =
-    log((lit(nDocs.toDouble) - df + lit(0.5)) / (df + lit(0.5)) + lit(1.0))
+  def idf(df: Column, nDocs: Long): Column = idf(df, lit(nDocs.toDouble))
+  def idf(df: Column, nDocs: Column): Column =
+    log((nDocs - df + lit(0.5)) / (df + lit(0.5)) + lit(1.0))
 
-  def tfNorm(tf: Column, dl: Column, avgDl: Double): Column =
-    (tf * lit(k1 + 1.0)) / (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dl / lit(avgDl)))
+  def tfNorm(tf: Column, dl: Column, avgDl: Double): Column = tfNormDyn(tf, dl, lit(avgDl))
 
   def score(tf: Column, df: Column, dl: Column, nDocs: Long, avgDl: Double): Column =
-    idf(df, nDocs) * tfNorm(tf, dl, avgDl)
+    score(tf, df, dl, lit(nDocs.toDouble), lit(avgDl))
+  def score(tf: Column, df: Column, dl: Column, nDocs: Column, avgDl: Column): Column = // DOUBLE stats
+    idf(df, nDocs) * tfNormDyn(tf, dl, avgDl)
 
   /** tf normalization with a COLUMN avgdl — for scorers whose document-length
     * statistics are themselves part of the plan (BM25F's field-weighted dl)

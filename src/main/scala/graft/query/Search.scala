@@ -1,9 +1,11 @@
 package graft.query
 
+import graft.functions.ByRef
 import graft.index.InvertedIndex
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Query execution — the reference's steps 6-8 (/root/repo/SURVEY.md §3.1)
   * as ONE Catalyst plan: posting fetch ⋈ intersection ⋈ scoring ⋈ top-k,
@@ -11,10 +13,10 @@ import org.apache.spark.sql.functions._
   * round-trips per query (SearcherPage.java:95,109,118).
   *
   * Every BM25 ranker here (and in Taat, BooleanQuery, Passage, Champions)
-  * scores through one kernel: [[termScores]] (term IN filter, df literal
-  * CASE, per-term score) and [[docScores]] (Σ score + n_terms per doc key,
-  * gated n_terms = |q| for AND, >= m for min-match, ungated for OR). Every
-  * term → literal column comes from [[termLit]]: one flat CASE.
+  * scores through one kernel: [[termScores]] (term IN filter, df map
+  * lookup, per-term score) and [[docScores]] (Σ score + n_terms per doc
+  * key, gated n_terms = |q| for AND, >= m for min-match, ungated for OR).
+  * Every term → value column comes from [[termLit]]: one map literal.
   *
   * Physical shape (verified via .explain in SearchSpec):
   *   postings scan (IN-list filter on term, pushed to parquet)
@@ -43,31 +45,27 @@ object Search {
       .reduce((a, b) => a.join(b, Seq("doc_id"), "left_semi"))
   }
 
-  /** term → literal column: ONE flat CASE over the sorted terms, `default`
-    * for any other term. Every per-query literal map (df, weight, term
-    * order, synonym group, per-term constants) goes through here; a CASE
-    * nested one level per term overflows the planner's stack at a few
-    * hundred terms. */
-  private[graft] def termLit(vs: Map[String, Any], default: Any): Column = {
-    val ts = vs.keys.toSeq.sorted
-    if (ts.isEmpty) lit(default)
-    else ts.tail
-      .foldLeft(when(col("term") === ts.head, lit(vs(ts.head))))((c, t) => c.when(col("term") === t, lit(vs(t))))
-      .otherwise(lit(default))
-  }
+  /** term → value column: ONE map-typed literal looked up by `term`,
+    * `default` for any other term; every per-query term map (df, weight,
+    * term order, synonym group, constants) goes through here. Generated
+    * code holds the map by reference, so one class serves every query
+    * (`map(lit…)` would be rewritten into a CASE of inlined literals). */
+  private[graft] def termLit[V: TypeTag](vs: Map[String, V], default: V): Column =
+    if (vs.isEmpty) lit(default) else coalesce(typedLit(vs).getItem(col("term")), lit(default))
 
   /** The per-term BM25 rows every DataFrame ranker sums: the rows of
     * `rows` whose term is a key of `dfs`, plus `df` and
     * term_score = [weight ·] Bm25.score(tf, df, len). `rows` must carry
     * term, tf and the length column `len` (a postings ⋈ docStats join, or
     * a relation that stores its lengths); the term filter pushes below the
-    * join into the scan. Absent or unit `weights` emit no multiply. */
+    * join into the scan. Absent or unit `weights` emit no multiply. Terms,
+    * df, nDocs and avgDl enter the plan by reference (same scores, bit for bit). */
   private[graft] def termScores(rows: DataFrame, dfs: Map[String, Long], nDocs: Long,
                                 avgDl: Double, len: String = "dl",
                                 weights: Map[String, Int] = Map.empty): DataFrame = {
     val df = termLit(dfs, 0L)
-    val bm25 = Bm25.score(col("tf"), df, col(len), nDocs, avgDl)
-    rows.filter(col("term").isin(dfs.keys.toSeq.sorted.map(x => x: Any): _*))
+    val bm25 = Bm25.score(col("tf"), df, col(len), ByRef(nDocs.toDouble), ByRef(avgDl))
+    rows.filter(ByRef.inSet(col("term"), dfs.keys))
       .withColumn("df", df)
       .withColumn("term_score",
         if (weights.values.forall(_ == 1)) bm25 else termLit(weights, 0) * bm25)
@@ -91,7 +89,7 @@ object Search {
                         dfs: Map[String, Long], nDocs: Long,
                         avgDl: Double): DataFrame =
     docScores(termScores(postings.join(docStats, "doc_id"), dfs, nDocs, avgDl),
-        Some(col("n_terms") === dfs.size))
+        Some(col("n_terms") === ByRef(dfs.size.toLong)))
       .select(col("doc_id"), col("score"))
 
   /** distributed top-k + rank stamp: TakeOrdered limit, then row_number over
@@ -802,12 +800,11 @@ object Search {
   /** [[decorate]] for a page already ranked on the driver: ONE filtered
     * corpus scan (`doc_id IN ids`) → (doc_id, repo, path, title, snippet),
     * unordered. The caller attaches rank and score to the ≤ k rows, so no
-    * join, exchange or distributed sort runs. */
+    * join, exchange or distributed sort runs. The ids are an `InSet`. */
   def decorateIds(corpus: DataFrame, ids: Seq[Long], terms: Set[String],
                   htmlAware: Boolean = true): DataFrame =
     withTitleSnippet(
-        corpus.filter(col("doc_id").isin(ids.map(x => x: Any): _*))
-          .select("doc_id", "repo", "path", "lang", "content"),
+        corpus.filter(ByRef.inSet(col("doc_id"), ids)).select("doc_id", "repo", "path", "lang", "content"),
         terms, htmlAware)
       .select("doc_id", "repo", "path", "title", "snippet")
 
@@ -835,37 +832,37 @@ object Search {
     *
     * Scale shape: the conjunctive candidate set is computed first (count-k
     * aggregate — hot terms never reach the prior join), THEN joined with the
-    * prior on doc_id; max_pr is a 1-row scalar aggregate broadcast into the
-    * plan, never an empty-partitionBy window. At 100 TB the better layout is
-    * to fold the prior into docStats at index-build time (one wider column,
-    * zero query-time joins) — this operator is the query-time form for
-    * priors that refresh faster than the index. */
+    * prior on doc_id; max_pr is one scalar aggregate ([[priorRange]]) read
+    * by reference, never an empty-partitionBy window. At 100 TB the better
+    * layout is to fold the prior into docStats at index-build time (one
+    * wider column, zero query-time joins) — this operator is the
+    * query-time form for priors that refresh faster than the index. */
   def blendTopK(postings: DataFrame, docStats: DataFrame,
                 dfs: Map[String, Long], nDocs: Long, avgDl: Double,
                 prior: DataFrame, k: Int, beta: Double = 0.5): DataFrame = {
     val scored = conjunctiveScores(postings, docStats, dfs, nDocs, avgDl)
-    rankTopK(blendScores(scored, prior, beta), k, Seq(desc("blend"), asc("doc_id")))
+    rankTopK(blendScores(scored, prior, beta, priorRange(prior)._2), k, Seq(desc("blend"), asc("doc_id")))
       .withColumn("rank", col("rank").cast("long"))
       .select(col("rank"), col("doc_id"), col("blend"))
   }
 
+  /** (min(pr), max(pr)) of a prior in one aggregate; an empty or all-zero prior's
+    * max is 1, so [[blendScores]] degrades to β-scaled relevance, not NaN blends. */
+  def priorRange(prior: DataFrame): (Double, Double) = {
+    val r = prior.agg(min(col("pr")).cast("double"), max(col("pr")).cast("double")).head()
+    (if (r.isNullAt(0)) 0.0 else r.getDouble(0), if (r.isNullAt(1) || r.getDouble(1) <= 0) 1.0 else r.getDouble(1))
+  }
+
   /** The blend factor join shared by `blendTopK` and the facade's prior
-    * ranking: blend = score · (β + (1−β)·pr/max(pr)) over (doc_id, score)
-    * rows. Empty or all-zero prior: max(pr) is NULL or 0 — taken as 1 so
-    * every doc's prior factor is 0 and the ranking degrades to β-scaled
-    * pure relevance instead of all-NULL or NaN blends. Docs absent from
-    * the prior (left join) take pr = 0: new pages rank on relevance alone
-    * until the next prior refresh, which is the graceful-staleness
-    * semantics a periodically recomputed authority signal needs. */
-  def blendScores(scored: DataFrame, prior: DataFrame, beta: Double): DataFrame = {
-    val prMax = prior.agg(when(max(col("pr")) > 0, max(col("pr"))).otherwise(lit(1L)).cast("double").as("pr_max"))
+    * ranking: blend = score · (β + (1−β)·pr/prMax) over (doc_id, score)
+    * rows, `prMax` from [[priorRange]], read by reference. Docs absent
+    * from the prior (left join) take pr = 0: new pages rank on relevance
+    * alone until the next prior refresh (graceful staleness). */
+  def blendScores(scored: DataFrame, prior: DataFrame, beta: Double, prMax: Double): DataFrame =
     scored
       .join(prior.select(col("doc_id"), col("pr")), Seq("doc_id"), "left")
-      .crossJoin(broadcast(prMax))
       .withColumn("blend", col("score") *
-        (lit(beta) + lit(1.0 - beta) *
-          coalesce(col("pr"), lit(0L)).cast("double") / col("pr_max")))
-  }
+        (lit(beta) + lit(1.0 - beta) * coalesce(col("pr"), lit(0L)).cast("double") / ByRef(prMax)))
 
   /** BM25F — field-weighted BM25 over (title, body) fields of the same page
     * (Robertson/Zaragoza 2004, the standard web-ranking upgrade: a title hit

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.ByRef
 import graft.index.InvertedIndex
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, classic}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -234,15 +235,12 @@ object IncrementalIndex {
                before: Long = Long.MaxValue): Option[DataFrame] =
     store.readUnion(spark, "docs", before).map(lastWins(store, spark, _, before))
 
-  /** point-read the CURRENT rows of `name` for `ids` only: an isin
+  /** point-read the CURRENT rows of `name` for `ids` only: an `InSet`
     * predicate pushed to the parquet scans — per-batch work reads the
     * touched docs' row groups, not the whole state. */
   private def tableForDocs(store: ParquetStateStore, spark: SparkSession, name: String,
                            ids: Seq[Long], before: Long): Option[DataFrame] =
-    store.readUnion(spark, name, before).map { rows =>
-      val hit = rows.filter(col("doc_id").isin(ids.map(x => x: Any): _*))
-      lastWins(store, spark, hit, before)
-    }
+    store.readUnion(spark, name, before).map(rows => lastWins(store, spark, rows.filter(ByRef.inSet(col("doc_id"), ids)), before))
 
   /** point-read the CURRENT postings of `ids` only. Small id sets (the
     * normal micro-batch case) become an isin predicate pushed to the
@@ -371,9 +369,9 @@ object IncrementalIndex {
     * facade's indexPage. Same live tables as [[mergeBatch]] with `rawDocs`,
     * but page-sized work happens on the driver: one bounded collect of the
     * batch, one collect of its tokens (the same analyzer Column chain), and
-    * one collect of a `doc_id IN (…)` point read that unions the old-state
-    * tables (doc_ids, postings, docs), with the last-writer-wins mask
-    * applied here. Each table's batch is then written from the driver
+    * one collect of a `doc_id` `InSet` point read (compiled once for every
+    * page) that unions the old-state tables (doc_ids, postings, docs), with
+    * the last-writer-wins mask applied here. Each table's batch is then written from the driver
     * ([[ParquetStateStore.writeRows]]: one part file, no job). That is two
     * Spark jobs, neither with a shuffle stage; the collect of a local batch
     * folds into its local relation and runs none.
@@ -422,7 +420,7 @@ object IncrementalIndex {
     val batchId = store.nextBatch
     val old = Seq("doc_ids" -> Nil, "postings" -> Seq("term", "tf"), "docs" -> Seq("repo"))
       .flatMap { case (name, cols) =>
-        store.readUnion(spark, name, batchId).map(_.filter(col("doc_id").isin(ids: _*))
+        store.readUnion(spark, name, batchId).map(_.filter(ByRef.inSet(col("doc_id"), ids))
           .select((lit(name).as("_t") +: ("doc_id" +: cols :+ "_b").map(col)): _*))
       }.reduceOption(_.unionByName(_, allowMissingColumns = true))
       .fold(Array.empty[Row])(_.collect()).groupBy(_.getAs[String]("_t"))

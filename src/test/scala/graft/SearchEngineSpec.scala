@@ -1,6 +1,6 @@
 package graft
 
-import graft.SparkTestSession.{jobNamesOf, jobStagesOf, jobsOf}
+import graft.SparkTestSession.{compilesOf, jobNamesOf, jobStagesOf, jobsOf}
 import graft.api.SearchEngine
 import graft.corpus.Corpus
 import graft.streaming.IncrementalIndex
@@ -708,8 +708,9 @@ class SearchEngineSpec extends AnyFunSuite {
     assert(zero.result && zero.count == 0 && zero.data.isEmpty)
     assert(conjunctiveCount(pe, rare, Some(other)) == 0)
     assert(zJobs <= 1, s"zero-match site-scoped search ran $zJobs jobs")
-    // a prior-blended search is the tier's one ranking job, the rerank and
-    // the decoration (6 jobs when the first C candidates certify); a
+    // a prior-blended search is the tier's one ranking job, the rerank
+    // (its prior join's broadcast) and the decoration: 4 jobs when the
+    // first C candidates certify; a
     // uniform prior leaves every blend at its BM25 score, so the 10th
     // blend is above the 80th BM25 score and the first pass certifies
     import spark.implicits._
@@ -720,7 +721,7 @@ class SearchEngineSpec extends AnyFunSuite {
     pe.clearAuthorityPrior()
     assert(wPrior.count > 80 && wPrior.data.length == 10)
     assert(wNames.count(_.contains("Wand.scala")) == 1, s"prior (WAND tier) jobs: $wNames")
-    assert(wNames.size <= 6, s"prior (WAND tier) search ran ${wNames.size} jobs: $wNames")
+    assert(wNames.size <= 4, s"prior (WAND tier) search ran ${wNames.size} jobs: $wNames")
     // LSM tier, after an upsert: the upsert advanced the generation the
     // first search pinned, so the first search after it only ranks and
     // decorates, as the next one does
@@ -742,7 +743,7 @@ class SearchEngineSpec extends AnyFunSuite {
     val (dPrior, dJobs) = jobsOf(e.search("spark join", limit = 10))
     e.clearAuthorityPrior()
     assert(dPrior.result && dPrior.data.length == 10)
-    assert(dJobs <= 10, s"prior (DataFrame tier) search ran $dJobs jobs")
+    assert(dJobs <= 5, s"prior (DataFrame tier) search ran $dJobs jobs")
     assert(e.indexPage(Seq((3L, "src0", "doc/3", "0" * 40, "en", "lsmpinword spark join"))
       .toDF("doc_id", "repo", "path", "commit", "lang", "content")))
     val (pin, pJobs) = jobsOf(e.search("lsmpinword", limit = 10))
@@ -751,6 +752,71 @@ class SearchEngineSpec extends AnyFunSuite {
     assert(lsm.result && lsm.data.length == 10)
     assert(pJobs <= 4, s"first global (LSM tier) search after an upsert ran $pJobs jobs")
     assert(lJobs <= 4, s"global (LSM tier) search after an upsert ran $lJobs jobs")
+  }
+
+  test("a plan of a given shape compiles once: searches a generation later, indexPage, a WAND page") {
+    import spark.implicits._
+    val e = freshEngine()
+    def page(id: Long, content: String) = Seq((id, "src0", s"doc/$id", "0" * 40, "en", content))
+      .toDF("doc_id", "repo", "path", "commit", "lang", "content")
+    // warm every shape on an advanced generation: a search pins the
+    // generation the upserts advance, then a global and a site-scoped
+    // two-term search over a delta
+    assert(e.search("join").result)
+    assert(e.indexPage(page(9001L, "compilewarm spark join")))
+    assert(e.search("spark join", limit = 10).data.nonEmpty)
+    // (adaptive execution numbers a site-scoped plan's codegen stages in
+    // the order its stages complete, so a few runs warm each numbering)
+    for (q <- Seq("spark join", "join dup", "spark dup"))
+      assert(e.search(q, site = Some("src3"), limit = 10).result)
+    assert(e.indexPage(page(9002L, "compilewarm spark hash")))
+    val third = page(9003L, "compilethird spark dup")
+    val (ok, upC) = compilesOf(e.indexPage(third))
+    assert(ok && upC == 0, s"the third indexPage compiled $upC classes")
+    // other terms of the same count, one generation later
+    val (g, gC) = compilesOf(e.search("hash dup", limit = 10))
+    val (s, sC) = compilesOf(e.search("hash dup", site = Some("src3"), limit = 10))
+    assert(g.data.nonEmpty && s.result)
+    assert(gC == 0, s"a global search one generation later compiled $gC classes")
+    assert(sC == 0, s"a site-scoped search one generation later compiled $sC classes")
+    // the WAND tier ranks without codegen; its page of <= 10 docs decorates
+    // through the stage the warm search compiled
+    val pe = persistedEngine
+    assert(pe.search("spark join", limit = 10).data.nonEmpty)
+    val (w, wC) = compilesOf(pe.search("hash dup", limit = 7))
+    assert(w.data.nonEmpty && w.data.length <= 10)
+    assert(wC == 0, s"a WAND-tier search compiled $wC classes")
+  }
+
+  test("the corpus is one flat patch over its root: rows doc for doc, plan size flat across upserts") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val e = freshEngine()
+    val cols = Seq("doc_id", "repo", "path", "commit", "lang", "content", "code")
+    def page(id: Long, content: String, code: Int = 200) =
+      Seq((id, "src1", s"doc/$id", "0" * 40, "en", content, code)).toDF(cols: _*)
+    // the optimized plan's nodes and its filters' expression nodes (a
+    // per-upsert chain adds a local relation to the union and a conjunct
+    // to the root's pushed-down filter every upsert)
+    def shape = {
+      val p = e.corpus.queryExecution.optimizedPlan
+      (p.collect { case n => n.nodeName }, p.collect { case f: Filter => f.condition.collect { case x => x }.size }.sum)
+    }
+    var want = e.corpus.select(cols.map(col): _*).collect().map(r => r.getLong(0) -> r.toSeq).toMap
+    def upsert(id: Long, content: String, code: Int = 200): Unit = {
+      assert(e.indexPage(page(id, content, code)))
+      want = if (code <= 299) want.updated(id, page(id, content, code).head().toSeq) else want - id
+    }
+    upsert(8001L, "flatnew doc")         // a new doc
+    val one = shape
+    upsert(5L, "flat replacement")       // a replace
+    upsert(6L, "gated away", 500)        // an HTTP-gate delete
+    upsert(7L, "first replacement")      // one doc replaced twice
+    upsert(7L, "second replacement")
+    assert(shape == one, s"corpus plan grew: $one -> $shape")
+    val got = e.corpus.select(cols.map(col): _*).collect().map(r => r.getLong(0) -> r.toSeq)
+    assert(got.length == want.size && got.toMap == want)
   }
 
   test("a 500-term query answers on the live tier, equal to the Oracle") {

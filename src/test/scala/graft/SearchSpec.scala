@@ -1057,6 +1057,21 @@ class SearchSpec extends AnyFunSuite {
     assert(math.abs(got.head._2 - want) < 1e-9, s"score ${got.head._2} vs $want")
   }
 
+  test("termScores: by-reference df, nDocs and avgDl score bit-equal to literal columns") {
+    import spark.implicits._
+    val dfs = tables.termStats.filter(col("term").isin("spark", "join", "hash")).collect()
+      .map(r => r.getAs[String]("term") -> r.getAs[Long]("df")).toMap
+    assert(dfs.size == 3)
+    val rows = tables.postings.join(tables.docStats, "doc_id")
+    def scores(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select("doc_id", "term", c).collect().map(r => (r.getLong(0), r.getString(1)) -> r.getDouble(2)).toMap
+    val got = scores(Search.termScores(rows, dfs, tables.nDocs, tables.avgDl), "term_score")
+    val want = scores(rows.join(dfs.toSeq.toDF("term", "df"), "term")
+      .withColumn("want", Bm25.score(col("tf"), col("df"), col("dl"), tables.nDocs, tables.avgDl)), "want")
+    assert(got.nonEmpty && got.keySet == want.keySet)
+    got.foreach { case (k, v) => assert(v == want(k), s"$k: $v vs ${want(k)}") }
+  }
+
   test("segmentQuery: corpus-bigram glue yields [new york][pizza] segments") {
     import spark.implicits._
     val bw = Seq((0L, "new", "york", 5L), (1L, "new", "york", 2L),

@@ -30,6 +30,15 @@ object SparkTestSession {
     (v, names.size)
   }
 
+  /** `body`'s result and the number of classes Spark's code generator
+    * compiled while it ran (cache hits compile none) */
+  def compilesOf[T](body: => T): (T, Long) = {
+    val h = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = h.getCount
+    val v = body
+    (v, h.getCount - before)
+  }
+
   /** `body`'s result and the call site ("<action> at <File>.scala:<line>")
     * of every Spark job it started, in start order */
   def jobNamesOf[T](body: => T): (T, Seq[String]) = {
