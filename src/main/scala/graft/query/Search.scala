@@ -800,11 +800,14 @@ object Search {
   /** [[decorate]] for a page already ranked on the driver: ONE filtered
     * corpus scan (`doc_id IN ids`) → (doc_id, repo, path, title, snippet),
     * unordered. The caller attaches rank and score to the ≤ k rows, so no
-    * join, exchange or distributed sort runs. The ids are an `InSet`. */
+    * join, exchange or distributed sort runs. The ids go in by reference
+    * ([[ByRef.in]]), so a page of ≤ 10 ids compiles once per page size and
+    * the cached corpus still skips batches by their doc_id min/max. */
   def decorateIds(corpus: DataFrame, ids: Seq[Long], terms: Set[String],
                   htmlAware: Boolean = true): DataFrame =
     withTitleSnippet(
-        corpus.filter(ByRef.inSet(col("doc_id"), ids)).select("doc_id", "repo", "path", "lang", "content"),
+        corpus.filter(ByRef.in(col("doc_id"), ids))
+          .select("doc_id", "repo", "path", "lang", "content"),
         terms, htmlAware)
       .select("doc_id", "repo", "path", "title", "snippet")
 
@@ -850,7 +853,8 @@ object Search {
     * max is 1, so [[blendScores]] degrades to β-scaled relevance, not NaN blends. */
   def priorRange(prior: DataFrame): (Double, Double) = {
     val r = prior.agg(min(col("pr")).cast("double"), max(col("pr")).cast("double")).head()
-    (if (r.isNullAt(0)) 0.0 else r.getDouble(0), if (r.isNullAt(1) || r.getDouble(1) <= 0) 1.0 else r.getDouble(1))
+    (if (r.isNullAt(0)) 0.0 else r.getDouble(0),
+      if (r.isNullAt(1) || r.getDouble(1) <= 0) 1.0 else r.getDouble(1))
   }
 
   /** The blend factor join shared by `blendTopK` and the facade's prior

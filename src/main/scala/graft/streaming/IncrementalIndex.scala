@@ -240,7 +240,10 @@ object IncrementalIndex {
     * touched docs' row groups, not the whole state. */
   private def tableForDocs(store: ParquetStateStore, spark: SparkSession, name: String,
                            ids: Seq[Long], before: Long): Option[DataFrame] =
-    store.readUnion(spark, name, before).map(rows => lastWins(store, spark, rows.filter(ByRef.inSet(col("doc_id"), ids)), before))
+    store.readUnion(spark, name, before).map { rows =>
+      val hit = rows.filter(ByRef.inSet(col("doc_id"), ids))
+      lastWins(store, spark, hit, before)
+    }
 
   /** point-read the CURRENT postings of `ids` only. Small id sets (the
     * normal micro-batch case) become an isin predicate pushed to the
@@ -371,8 +374,9 @@ object IncrementalIndex {
     * batch, one collect of its tokens (the same analyzer Column chain), and
     * one collect of a `doc_id` `InSet` point read (compiled once for every
     * page) that unions the old-state tables (doc_ids, postings, docs), with
-    * the last-writer-wins mask applied here. Each table's batch is then written from the driver
-    * ([[ParquetStateStore.writeRows]]: one part file, no job). That is two
+    * the last-writer-wins mask applied here. Each table's batch is then
+    * written from the driver ([[ParquetStateStore.writeRows]]: one part
+    * file, no job). That is two
     * Spark jobs, neither with a shuffle stage; the collect of a local batch
     * folds into its local relation and runs none.
     *

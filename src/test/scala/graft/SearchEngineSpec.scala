@@ -1,6 +1,6 @@
 package graft
 
-import graft.SparkTestSession.{compilesOf, jobNamesOf, jobStagesOf, jobsOf}
+import graft.SparkTestSession.{clearCodegenCache, compiledSourcesOf, compilesOf, jobNamesOf, jobStagesOf, jobsOf}
 import graft.api.SearchEngine
 import graft.corpus.Corpus
 import graft.streaming.IncrementalIndex
@@ -759,32 +759,39 @@ class SearchEngineSpec extends AnyFunSuite {
     val e = freshEngine()
     def page(id: Long, content: String) = Seq((id, "src0", s"doc/$id", "0" * 40, "en", content))
       .toDF("doc_id", "repo", "path", "commit", "lang", "content")
+    // a page's ids are an IN of by-reference literals, one class per page
+    // size, so every warm and measured search pair returns full pages
     // warm every shape on an advanced generation: a search pins the
     // generation the upserts advance, then a global and a site-scoped
-    // two-term search over a delta
-    assert(e.search("join").result)
-    assert(e.indexPage(page(9001L, "compilewarm spark join")))
-    assert(e.search("spark join", limit = 10).data.nonEmpty)
-    // (adaptive execution numbers a site-scoped plan's codegen stages in
-    // the order its stages complete, so a few runs warm each numbering)
-    for (q <- Seq("spark join", "join dup", "spark dup"))
-      assert(e.search(q, site = Some("src3"), limit = 10).result)
+    // two-term search over a delta, a few of each (adaptive execution
+    // numbers stages in completion order; the sources compare without it).
+    // The cache starts empty, so `warm` holds every class these shapes run.
+    val (_, warm) = compiledSourcesOf {
+      clearCodegenCache()
+      assert(e.search("join").result)
+      assert(e.indexPage(page(9001L, "compilewarm spark join")))
+      for (q <- Seq("spark join", "join hash", "spark hash")) {
+        assert(e.search(q, limit = 3).data.length == 3, q)
+        assert(e.search(q, site = Some("src3"), limit = 2).data.length == 2, q)
+      }
+    }
     assert(e.indexPage(page(9002L, "compilewarm spark hash")))
     val third = page(9003L, "compilethird spark dup")
     val (ok, upC) = compilesOf(e.indexPage(third))
     assert(ok && upC == 0, s"the third indexPage compiled $upC classes")
-    // other terms of the same count, one generation later
-    val (g, gC) = compilesOf(e.search("hash dup", limit = 10))
-    val (s, sC) = compilesOf(e.search("hash dup", site = Some("src3"), limit = 10))
-    assert(g.data.nonEmpty && s.result)
-    assert(gC == 0, s"a global search one generation later compiled $gC classes")
-    assert(sC == 0, s"a site-scoped search one generation later compiled $sC classes")
-    // the WAND tier ranks without codegen; its page of <= 10 docs decorates
-    // through the stage the warm search compiled
+    // other terms of the same count, one generation later: every class
+    // compiled is a warm one under another stage id, or none
+    val ((g, s), fresh) = compiledSourcesOf(
+      (e.search("big hash", limit = 3), e.search("big hash", site = Some("src3"), limit = 2)))
+    assert(g.data.length == 3 && s.data.length == 2)
+    val stray = fresh.filterNot(warm.toSet)
+    assert(stray.isEmpty, s"searches one generation later compiled ${stray.size} new classes:\n${stray.take(1).mkString}")
+    // the WAND tier ranks without codegen; its page decorates through the
+    // stage the warm search of the same page size compiled
     val pe = persistedEngine
-    assert(pe.search("spark join", limit = 10).data.nonEmpty)
-    val (w, wC) = compilesOf(pe.search("hash dup", limit = 7))
-    assert(w.data.nonEmpty && w.data.length <= 10)
+    assert(pe.search("spark join", limit = 5).data.length == 5)
+    val (w, wC) = compilesOf(pe.search("big hash", limit = 5))
+    assert(w.data.length == 5)
     assert(wC == 0, s"a WAND-tier search compiled $wC classes")
   }
 

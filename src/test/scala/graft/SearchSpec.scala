@@ -1072,6 +1072,26 @@ class SearchSpec extends AnyFunSuite {
     got.foreach { case (k, v) => assert(v == want(k), s"$k: $v vs ${want(k)}") }
   }
 
+  test("decorateIds: a page's ids skip every cached corpus batch that holds none of them") {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, TableCacheQueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    // the corpus cached in doc_id order, in batches of 100 rows
+    val key = "spark.sql.inMemoryColumnarStorage.batchSize"
+    spark.conf.set(key, "100")
+    val c = Corpus.fromDocuments(spark, "/root/testdata/sf0.001").orderBy("doc_id").cache()
+    val total = try c.count() finally spark.conf.unset(key)
+    val ids = c.select("doc_id").collect().map(_.getLong(0)).sorted
+    val page = Seq(ids(3), ids(ids.length / 2))
+    val dec = Search.decorateIds(c, page, Set("spark"))
+    assert(dec.collect().map(_.getLong(0)).toSet == page.toSet)
+    val plan = dec.queryExecution.executedPlan match { case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan; case p => p }
+    val scanned = plan.collect { case q: TableCacheQueryStageExec => q.plan; case s: InMemoryTableScanExec => s }
+      .collect { case s: InMemoryTableScanExec => s.metrics("numOutputRows").value }
+    c.unpersist()
+    assert(total > 400 && scanned.size == 1 && scanned.head <= 200,
+      s"a decorate of 2 ids scanned $scanned of $total cached rows")
+  }
+
   test("segmentQuery: corpus-bigram glue yields [new york][pizza] segments") {
     import spark.implicits._
     val bw = Seq((0L, "new", "york", 5L), (1L, "new", "york", 2L),

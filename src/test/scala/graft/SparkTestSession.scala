@@ -39,6 +39,51 @@ object SparkTestSession {
     (v, h.getCount - before)
   }
 
+  /** empty Spark's codegen cache (private to Spark; reached by
+    * reflection), so the next body compiles every class it runs */
+  def clearCodegenCache(): Unit = {
+    val gen = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val cache = gen.getClass.getDeclaredMethod("cache")
+    cache.setAccessible(true)
+    val c = cache.invoke(gen)
+    c.getClass.getMethod("invalidateAll").invoke(c): Unit
+  }
+
+  /** `body`'s result and the source of every class Spark's code generator
+    * compiled while it ran, with its codegen stage id blanked: adaptive
+    * execution numbers a plan's stages in the order they complete, so one
+    * body can compile again under another stage id, and no per-query value
+    * differs between the two. Captured from the generator's DEBUG log. */
+  def compiledSourcesOf[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
+    val name = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
+    val sources = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("compiled-sources", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("/* 001 */")) sources.add(m.replaceAll("CodegenStage\\d+|codegenStageId=\\d+", "<stage>")): Unit
+      }
+    }
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val logger = new LoggerConfig(name, Level.DEBUG, false) // not additive: nothing reaches the console
+    logger.addAppender(appender, Level.DEBUG, null)
+    appender.start()
+    ctx.getConfiguration.addLogger(name, logger)
+    ctx.updateLoggers()
+    try {
+      val v = body
+      import scala.jdk.CollectionConverters._
+      (v, sources.asScala.toSeq)
+    } finally {
+      ctx.getConfiguration.removeLogger(name)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
+
   /** `body`'s result and the call site ("<action> at <File>.scala:<line>")
     * of every Spark job it started, in start order */
   def jobNamesOf[T](body: => T): (T, Seq[String]) = {
