@@ -53,7 +53,7 @@ import scala.jdk.CollectionConverters._
   * Ingestion runs extract-then-lemmatize (reference: Jsoup text() before
   * Lemmatizator, tools/Lemmatizator.java:1): `indexedView` normalizes HTML
   * content via Html.textOf before tokenization, keeping the index coherent
-  * with the htmlAware=true decoration in Search.search. The stored corpus
+  * with the htmlAware=true decoration of every search's page. The stored corpus
   * keeps RAW content (reference `page.content` stores the fetched HTML).
   *
   * `clock` supplies statusTime timestamps (driver-side wall clock — the
@@ -495,9 +495,6 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     cache.clear()
   }
 
-  /** `lang` picks the query-analysis branch (stoplist/normalizer — "ru"
-    * routes through the Cyrillic chain) and must match how the corpus was
-    * tokenized, exactly like Search.search's contract. */
   // ---- percolation alerts (reverse search over incoming pages) ----------
   /** stored alert queries: id → analyzed conjunctive terms (the SAME
     * analyzer chain as search, so an alert fires exactly when the search
@@ -554,6 +551,9 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
   def loadAuthorityPrior(tableDir: String, beta: Double = 0.5): Unit =
     setAuthorityPrior(IndexWriter.readAux(spark, tableDir, "prior"), beta)
 
+  /** `lang` picks the query-analysis branch (stoplist/normalizer — "ru"
+    * routes through the Cyrillic chain) and must match how the corpus was
+    * tokenized, exactly like Search.search's contract. */
   def search(query: String, site: Option[String] = None,
              offset: Int = 0, limit: Int = 20, lang: String = "en"): SearchResponse = {
     require(indexed, "index not built")
@@ -597,7 +597,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
       val (dfs, t) = (terms.toMap, pin.tables)
       val top = Search.countTopK(Search.conjunctiveScores(t.postings, t.docStats, dfs, t.nDocs, t.avgDl),
         limit, after = Some(Search.Scored(afterDoc, afterScore)))
-      respond(pin.corpus, top.count, top.ranked.toSeq, dfs.keySet)
+      respond(Search.page(pin.corpus, top, 0, limit, dfs.keySet))
     }))
   }
 
@@ -638,7 +638,7 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
       return SearchResponse(result = false, 0, Nil,
         s"No data for words: ${missing.mkString(", ")}, ")
     val top = Search.countTopK(BooleanQuery.scores(t.postings, t.docStats, dfs, t.nDocs, t.avgDl, q), limit)
-    respond(pin.corpus, top.count, top.ranked.toSeq, dfs.keySet)
+    respond(Search.page(pin.corpus, top, 0, limit, dfs.keySet))
   }
 
   /** The preamble of `search` and `searchAfter`: the query's planned
@@ -668,15 +668,23 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
                        lang: String): SearchResponse = {
     val terms = planned(pin, query, lang) match { case Left(r) => return r; case Right(ts) => ts }
     val (dfs, t) = (terms.toMap, pin.tables)
+    // the best offset + limit rows, so the clamped last row is present
+    val n = Search.saturatedAdd(offset, limit)
+    // the count and the best n of (doc_id, score) rows by blend, in one action
+    def blend(scored: DataFrame, p: (DataFrame, Double, Double)) =
+      Search.countTopK(Search.blendScores(scored, p._1, p._2, p._3).select(col("doc_id"), col("blend").as("score")), n)
     // rank tier: a committed compressed snapshot (startIndexingPersisted,
     // not yet invalidated by a mutation) serves every query through the
     // block-max WAND path with the snapshot's FROZEN stats — rank-identical
     // to the DataFrame aggregate by construction (shared formula +
     // tie-breaks; asserted in SearchEngineSpec). A site-scoped query admits
-    // only its repo's docs inside the WAND loop. `rank(k)` is ONE ranking
-    // job returning the full match count and the best k rows; `scores()`
-    // is the (doc_id, score) relation of every match.
-    val (rank, scores): (Int => Search.TopK, () => DataFrame) = snap match {
+    // only its repo's docs inside the WAND loop. Otherwise the live tables
+    // answer through Search.answer.
+    val top = snap match {
+      case None =>
+        val scoped = site.fold(t.postings)(pin.sitePostings)
+        if (prior.isEmpty) return respond(Search.answer(pin.corpus, scoped, t.docStats, t.nDocs, t.avgDl, dfs, offset, limit))
+        blend(Search.conjunctiveScores(scoped, t.docStats, dfs, t.nDocs, t.avgDl), prior.get)
       case Some(s) =>
         val admit = site match {
           case None => Wand.admitAll
@@ -688,70 +696,29 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
         }
         val idfs = dfs.map { case (tm, d) => tm -> Bm25.idfS(d, s.meta.nDocs) }
         def shards = IndexWriter.readForTerms(spark, s.dir, terms.map(_._1), s.cfg)
-        (k => Wand.countTopK(shards, idfs, s.meta.avgDl, k, admit),
-          () => Wand.scores(shards, idfs, s.meta.avgDl, admit))
-      case None =>
-        val scored = Search.conjunctiveScores(site.fold(t.postings)(pin.sitePostings),
-          t.docStats, dfs, t.nDocs, t.avgDl)
-        (k => Search.countTopK(scored, k), () => scored)
+        prior match {
+          case None => Wand.countTopK(shards, idfs, s.meta.avgDl, n, admit)
+          case Some(p) =>
+            // first rerank the C best matches by BM25 (two-stage ranking),
+            // kept when certified exact: every match is a candidate, or the
+            // n-th blend is strictly above the C-th BM25 score (β ∈ [0, 1]
+            // and pr ≥ 0 keep every blend at or below its BM25 score, so no
+            // match outside the C ranks above the n-th). Otherwise every
+            // match is blended.
+            val cands = Wand.countTopK(shards, idfs, s.meta.avgDl, math.max(math.min(8L * n, Int.MaxValue).toInt, 64), admit)
+            val c = cands.ranked
+            val top = blend(spark.createDataFrame(c.toSeq).toDF("doc_id", "score"), p)
+            top.count = cands.count
+            if (cands.count <= cands.k || top.ranked.lastOption.forall(_.score > c.last.score)) top
+            else blend(Wand.scores(shards, idfs, s.meta.avgDl, admit), p)
+        }
     }
-    // the best offset + limit rows: all of them are kept whenever the
-    // offset clamp fires, so the last row is present. `count` is the FULL
-    // result-set size before pagination — the reference's response count
-    // is resultSearch.size(), not the page length
-    // (SearchServiceImpl.java:90); a UI pager needs the total
-    val n = saturatedAdd(offset, limit)
-    val top = prior match {
-      case None => rank(n)
-      case Some((p, beta, prMax)) =>
-        // the count and the best n of `scored` by blend, in one action
-        def blend(scored: DataFrame) = Search.countTopK(Search.blendScores(scored, p, beta, prMax)
-          .select(col("doc_id"), col("blend").as("score")), n)
-        // the WAND tier first reranks its C best matches by BM25 (two-stage
-        // ranking), kept when certified exact: every match is a candidate,
-        // or the n-th blend is strictly above the C-th BM25 score (β ∈
-        // [0, 1] and pr ≥ 0 keep every blend at or below its BM25 score, so
-        // no match outside the C ranks above the n-th). Otherwise, and on
-        // the DataFrame tier, every match is blended.
-        snap.flatMap { _ =>
-          val cands = rank(math.max(math.min(8L * n, Int.MaxValue).toInt, 64))
-          val c = cands.ranked
-          val top = blend(spark.createDataFrame(c.toSeq).toDF("doc_id", "score"))
-          top.count = cands.count
-          Some(top).filter(_ => cands.count <= cands.k || top.ranked.lastOption.forall(_.score > c.last.score))
-        }.getOrElse(blend(scores()))
-    }
-    val (o, l) = clampPage(offset, limit, top.count)
-    respond(pin.corpus, top.count, top.ranked.toSeq.drop(o).take(l), dfs.keySet)
+    respond(Search.page(pin.corpus, top, offset, limit, dfs.keySet))
   }
 
-  /** the response to a ranked page (best first): the match count, and the
-    * page decorated — one filtered corpus scan computes title and snippet;
-    * rank order and score are attached here, on the driver */
-  private def respond(corpus: DataFrame, total: Long, page: Seq[Search.Scored],
-                      terms: Set[String]): SearchResponse = {
-    val rows = if (page.isEmpty) Map.empty[Long, Row]
-      else Search.decorateIds(corpus, page.map(_.docId), terms).collect().map(r => r.getLong(0) -> r).toMap
-    SearchResponse(result = true, total, page.flatMap { s =>
-      rows.get(s.docId).map { r =>
-        SearchItem(r.getAs[String]("repo"), r.getAs[String]("repo"), r.getAs[String]("path"),
-          r.getAs[String]("title"), r.getAs[String]("snippet"), s.score)
-      }
-    }, null)
-  }
-
-  /** offset + limit clamped to [0, Int.MaxValue]: the heap size a page
-    * needs, known before the match count */
-  private def saturatedAdd(offset: Int, limit: Int): Int =
-    math.max(0L, math.min(offset.toLong + limit, Int.MaxValue.toLong)).toInt
-
-  /** reference quirk (SearchServiceImpl.java:101-118): an offset at or past
-    * the end of the result list clamps to the LAST element rather than
-    * returning an empty page; the page offset stays below Int.MaxValue so
-    * a >2^31-row match count can't overflow it */
-  private def clampPage(offset: Int, limit: Int, total: Long): (Int, Int) =
-    if (offset > 0 && offset >= total) (math.min(total - 1, Int.MaxValue.toLong - 1).toInt, 1)
-    else (offset, limit)
+  private def respond(a: Search.Answer): SearchResponse =
+    SearchResponse(result = true, a.count,
+      a.page.map(h => SearchItem(h.repo, h.repo, h.path, h.title, h.snippet, h.score)), null)
 
   /** per-repo (repo, pages, lemmas) rows + the ALL total, computed from
     * STORE tables only (docs log + signed per-repo df deltas) — a status

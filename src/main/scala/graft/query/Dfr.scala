@@ -30,8 +30,8 @@ import org.apache.spark.sql.functions._
   * like the BM25/QL twins.
   *
   * Scale shape: identical to BM25's serve plan — one IN-filtered postings
-  * scan, λ_t as a literal CASE map (terms are few; cf comes from the same
-  * vocabulary-sized stats pass df does), one docStats join on the
+  * scan, λ_t as one map literal (Search.termLit; terms are few; cf comes
+  * from the same vocabulary-sized stats pass df does), one docStats join on the
   * already-aggregated candidates... except PL2's tfn depends on dl, so the
   * docStats join happens BEFORE the per-doc aggregate; the join is still
   * posting-sized on the term-pruned scan, never corpus × vocabulary. */

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: identical to BM25's — ONE IN-filtered postings scan (the
   * term filter pushes into the scan), map-side partial aggregation on
   * doc_id, then a join of the (already aggregated, candidate-sized) rows
-  * against docStats. μ·p_t enters the plan as a literal CASE map like df
+  * against docStats. μ·p_t enters the plan as one map literal like df
   * does in BM25, so there is no dictionary join. The DuckDB twin computes
   * the SAME decomposition with the same operation order, keeping the two
   * engines IEEE-aligned to the rounding tolerance.

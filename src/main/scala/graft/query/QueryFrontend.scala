@@ -65,16 +65,10 @@ object QueryFrontend {
 
   // ---- general wildcard via a k-gram index (Manning IIR §3.2.2) ---------
 
-  /** boundary-padded k-grams of dictionary term `s`: the k-windows of
-    * "$s$", distinct. '$' is safe as the boundary marker because the
-    * analyzer vocabulary is letters only (Analyzer char classes). */
-  def kgrams(s: String, k: Int = 2): Seq[String] = {
-    val p = "$" + s + "$"
-    (0 to p.length - k).map(i => p.substring(i, i + k)).distinct
-  }
-
-  /** the SAME extraction as a Column-SQL array over `term` — the
-    * dictionary side of the k-gram index. Vocabulary-bounded
+  /** boundary-padded k-grams of `term` as a Column-SQL array: the
+    * k-windows of "$term$", distinct. '$' is safe as the boundary marker
+    * because the analyzer vocabulary is letters only (Analyzer char
+    * classes). The dictionary side of the k-gram index. Vocabulary-bounded
     * (|term|+3−k gram rows per term): at scale, materialize
     * `explode(this)` once per index build beside term_stats, partitioned
     * by gram, and the per-query path below becomes a pruned point read. */

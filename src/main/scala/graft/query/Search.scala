@@ -2,7 +2,7 @@ package graft.query
 
 import graft.functions.ByRef
 import graft.index.InvertedIndex
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.reflect.runtime.universe.TypeTag
@@ -175,7 +175,7 @@ object Search {
 
   /** BM25-scored conjunctive top-k: (rank, doc_id, score).
     * dfs: term -> df (from the driver-side plan — terms are few, so df
-    * enters the plan as a literal CASE map, no dictionary join needed). */
+    * enters the plan as one map literal ([[termLit]]), no dictionary join). */
   def bm25TopK(postings: DataFrame, docStats: DataFrame,
                dfs: Map[String, Long], nDocs: Long, avgDl: Double,
                k: Int, offset: Int = 0): DataFrame = {
@@ -370,7 +370,7 @@ object Search {
     * only expansion terms can now surface (recall widens), while original-
     * term matches dominate (precision holds). The rescore is the one
     * IN-filtered postings scan + hash aggregate of every BM25 ranker, the
-    * integer weights a second literal CASE map beside the df map.
+    * integer weights a second map literal ([[termLit]]) beside the df map.
     *
     * Scale shape: two bounded driver collects (r doc ids, e terms — the
     * same ≤-dozens contract as QueryFrontend.plan's df lookup) bracketing
@@ -738,10 +738,10 @@ object Search {
       .select(col("rank"), col("doc_id"), col("repo"), col("score"))
   }
 
-  /** Full flagship search: front-end plan → BM25 top-k → decorate with
-    * repo/path/title/snippet on the final k rows only (reference
-    * SearchServiceImpl.java:101-118). repoFilter: None ≙ the `-101`
-    * all-sites sentinel (ApiController.java:42).
+  /** Full flagship search: front-end plan, then the facade's own [[answer]]
+    * as (rank, doc_id, repo, path, title, snippet, score) rows in rank order
+    * (reference SearchServiceImpl.java:86-118); empty for an empty plan.
+    * repoFilter: None ≙ the `-101` all-sites sentinel (ApiController.java:42).
     *
     * `htmlAware` must MATCH how the index was built: true (default) when
     * ingestion ran Html.textOf before tokenizing (HTML corpora — titles
@@ -765,26 +765,65 @@ object Search {
     // the SAME lexicon must have expanded the index side (reference
     // lemmatizes both sides: SearcherPage.java:39 query,
     // IndexingServiceImpl.java:144-155 index) — e.g. a query for `дома`
-    // must reach docs indexed under `дом`
+    // must reach docs indexed under `дом`. A missing word plans empty.
     val plan = QueryFrontend.plan(termStats, lang, query, lexicon)
-    def decorated(top: DataFrame, terms: Set[String]): DataFrame =
-      decorate(corpus, top, terms, htmlAware)
-    // missing-term / empty-plan short-circuits return the SAME decorated
-    // schema, just empty (callers see one stable shape)
-    if (plan.missing.nonEmpty || plan.isEmpty)
-      return decorated(
-        bm25TopK(scopedPostings.limit(0), docStats, Map("\u0000impossible" -> 1L),
-          math.max(nDocs, 1L), math.max(avgDl, 1.0), limit), Set.empty)
-    val dfs = plan.terms.map(t => t.term -> t.df).toMap
-    decorated(bm25TopK(scopedPostings, docStats, dfs, nDocs, avgDl, limit, offset),
-      dfs.keySet)
+    val hits = if (plan.isEmpty) Nil
+      else answer(corpus, scopedPostings, docStats, nDocs, avgDl,
+        plan.terms.map(t => t.term -> t.df).toMap, offset, limit, htmlAware).page
+    corpus.sparkSession.createDataFrame(hits).toDF("rank", "doc_id", "repo", "path", "title", "snippet", "score")
   }
+
+  /** one decorated row of a page, ranked in the full ranking */
+  final case class Hit(rank: Int, docId: Long, repo: String, path: String,
+                       title: String, snippet: String, score: Double)
+
+  /** A search's answer: the full match count and the decorated page, best
+    * first. `count` is the result-set size before pagination — the
+    * reference's response count is resultSearch.size(), not the page
+    * length (SearchServiceImpl.java:90); a UI pager needs the total. */
+  final case class Answer(count: Long, page: Seq[Hit])
+
+  /** The DataFrame tier's answer to a planned query (`dfs`: term → df) over
+    * site-scoped `postings`: ONE [[countTopK]] action over
+    * [[conjunctiveScores]] keeps the best offset + limit rows, then [[page]]. */
+  def answer(corpus: DataFrame, postings: DataFrame, docStats: DataFrame,
+             nDocs: Long, avgDl: Double, dfs: Map[String, Long],
+             offset: Int, limit: Int, htmlAware: Boolean = true): Answer =
+    page(corpus, countTopK(conjunctiveScores(postings, docStats, dfs, nDocs, avgDl), saturatedAdd(offset, limit)),
+      offset, limit, dfs.keySet, htmlAware)
+
+  /** The page of a ranking that kept its best offset + limit rows: the
+    * offset clamp, then ONE [[decorateIds]] scan; rank and score are
+    * attached on the driver. Every facade tier and entry point pages here. */
+  def page(corpus: DataFrame, top: TopK, offset: Int, limit: Int, terms: Set[String],
+           htmlAware: Boolean = true): Answer = {
+    val (o, l) = clampPage(offset, limit, top.count)
+    val ranked = top.ranked.toSeq.drop(o).take(l)
+    val rows = if (ranked.isEmpty) Map.empty[Long, Row]
+      else decorateIds(corpus, ranked.map(_.docId), terms, htmlAware).collect().map(r => r.getLong(0) -> r).toMap
+    Answer(top.count, ranked.zipWithIndex.flatMap { case (s, i) =>
+      rows.get(s.docId).map(r => Hit(o + i + 1, s.docId, r.getString(1), r.getString(2), r.getString(3),
+        r.getString(4), s.score))
+    })
+  }
+
+  /** offset + limit clamped to [0, Int.MaxValue]: the heap size a page
+    * needs, known before the match count */
+  private[graft] def saturatedAdd(offset: Int, limit: Int): Int =
+    math.max(0L, math.min(offset.toLong + limit, Int.MaxValue.toLong)).toInt
+
+  /** reference quirk (SearchServiceImpl.java:101-118): an offset at or past
+    * the end of the result list clamps to the LAST element rather than
+    * returning an empty page; the page offset stays below Int.MaxValue so
+    * a >2^31-row match count can't overflow it */
+  private def clampPage(offset: Int, limit: Int, total: Long): (Int, Int) =
+    if (offset > 0 && offset >= total) (math.min(total - 1, Int.MaxValue.toLong - 1).toInt, 1)
+    else (offset, limit)
 
   /** Result decoration on the final ≤ k rows only (reference
     * SearchServiceImpl.java:101-118): join repo/path, compute title +
-    * highlighted snippet. `top` carries (rank, doc_id, score). The facade's
-    * [[decorateIds]] builds title and snippet with the same columns, so
-    * the two cannot diverge in response shape.
+    * highlighted snippet. `top` carries (rank, doc_id, score). Searches
+    * decorate through [[page]]; [[decorateIds]] builds the same columns.
     *
     * HTML corpora: snippet over the extracted text, title from <title>
     * (reference SearchServiceImpl.java:284-296); code corpora fall back to
@@ -801,12 +840,13 @@ object Search {
     * corpus scan (`doc_id IN ids`) → (doc_id, repo, path, title, snippet),
     * unordered. The caller attaches rank and score to the ≤ k rows, so no
     * join, exchange or distributed sort runs. The ids go in by reference
-    * ([[ByRef.in]]), so a page of ≤ 10 ids compiles once per page size and
-    * the cached corpus still skips batches by their doc_id min/max. */
+    * as an OR of [[ByRef.in]]s of ≤ 10 ids each (Spark makes a longer `In`
+    * an `InSet`), so a page compiles once per page size and the cached
+    * corpus skips every batch whose doc_id min/max holds none of them. */
   def decorateIds(corpus: DataFrame, ids: Seq[Long], terms: Set[String],
                   htmlAware: Boolean = true): DataFrame =
     withTitleSnippet(
-        corpus.filter(ByRef.in(col("doc_id"), ids))
+        corpus.filter(ids.grouped(10).map(ByRef.in(col("doc_id"), _)).foldLeft(lit(false))(_ || _))
           .select("doc_id", "repo", "path", "lang", "content"),
         terms, htmlAware)
       .select("doc_id", "repo", "path", "title", "snippet")
@@ -992,7 +1032,7 @@ object Search {
 
   /** QUERY half: the source doc's df-pruned term vector (≤ dozens of rows —
     * one document's informative terms) is collected to the driver and pushed
-    * into the candidate scan as an `isin` term filter + literal CASE
+    * into the candidate scan as an `isin` term filter + map-literal
     * weights, so the per-query plan reads only the query terms' rows of the
     * weighted relation and aggregates candidates only (plan-asserted in
     * SearchSpec). qnorm stays a broadcast point-read of the prebuilt norms. */

@@ -128,17 +128,6 @@ private[graft] object Shared {
        |               JOIN shd b ON b.doc_id = c.b_id AND a.shingle = b.shingle
        |          GROUP BY c.a_id, c.b_id)""".stripMargin
   }
-  def jaccardPairsSql(candCte: String): String =
-    s"""sizes AS (SELECT doc_id, count(*) AS sz FROM shd GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS a_id, b.doc_id AS b_id, count(*) AS i
-       |  FROM $candCte
-       |  GROUP BY a.doc_id, b.doc_id
-       |)
-       |SELECT a_id, b_id, round(i::DOUBLE / (sa.sz + sb.sz - i), 4) AS jac_r
-       |FROM inter
-       |JOIN sizes sa ON a_id = sa.doc_id JOIN sizes sb ON b_id = sb.doc_id
-       |WHERE i::DOUBLE / (sa.sz + sb.sz - i) >= 0.8""".stripMargin
 
   /** flagship-search twin over the LEXICON-EXPANDED postings: same prune +
     * conjunctive BM25 + decoration chain as the ft_search_flagship twin, but

@@ -109,7 +109,7 @@ object Sketches {
     * kh hash functions from the cross-engine TextHash mixer family.
     *
     * probeBloom returns per probe key: (key, in_bloom, present) — a false
-    * positive is in_bloom=1, present=0; a false NEGATIVE is impossible and
+    * positive is in_bloom=1, present=0; a false NEGATIVE cannot occur, and
     * the harness oracle hash-checks that invariant on every run.
     *
     * Scale shape: the build is one explode of keys × kh mixers + distinct

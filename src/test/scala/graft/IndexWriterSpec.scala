@@ -121,6 +121,15 @@ class IndexWriterSpec extends AnyFunSuite {
     val got = IndexWriter.readForTerms(spark, dir, Seq("spark", "dup"), cfg)
     val terms = got.collect().map(_.term).toSet
     assert(terms == Set("spark", "dup"))
+    // the executed scan prunes bucket partitions and pushes the term IN
+    // filter into parquet
+    val scan = got.queryExecution.executedPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }.get
+    assert(scan.metadata("PartitionFilters").contains("bucket#"), scan.metadata)
+    assert(scan.metadata("PushedFilters").contains("In(term"), scan.metadata)
+    val buckets = Seq("spark", "dup").map(IndexWriter.bucketOf(_, cfg.nBuckets)).distinct
+    assert(scan.metrics("numPartitions").value == buckets.size)
     // and decode sanity: numDocs matches decoded length
     got.collect().foreach { s =>
       assert(new graft.index.PostingCodec.Decoded(s.bytes).numDocs == s.numDocs)

@@ -105,6 +105,30 @@ class SearchEngineSpec extends AnyFunSuite {
     assert(past.data.head.uri == all.data.last.uri)
   }
 
+  test("Search.search ≡ the facade: global, site-scoped, missing, stop-word-only, page 2, offset clamp") {
+    val t = engine.tables
+    val count = engine.search("dup spark").count
+    val cases = Seq(("spark join", None, 0), ("spark join", Some("src3"), 0), ("spark warpdrive", None, 0),
+      ("the a", None, 0), ("spark join", None, 10), ("dup spark", None, count.toInt), ("dup spark", None, 5000))
+    for ((q, site, offset) <- cases) {
+      val what = s"'$q' site=$site offset=$offset"
+      val f = engine.search(q, site, offset, limit = 10)
+      val v = graft.query.Search.search(engine.corpus, t.postings, t.docStats, t.termStats, t.nDocs, t.avgDl,
+        query = q, repoFilter = site, limit = 10, offset = offset).collect()
+      assert(v.map(r => (r.getAs[String]("path"), r.getAs[String]("title"), r.getAs[String]("snippet"))).toSeq ==
+        f.data.map(i => (i.uri, i.title, i.snippet)), what)
+      v.zip(f.data).foreach { case (r, i) => assert(math.abs(r.getAs[Double]("score") - i.relevance) < 1e-9, what) }
+      // an offset at or past the count clamps to the last row; ranks count
+      // from the page's place in the full ranking
+      val clamped = offset > 0 && offset >= f.count
+      val first = if (clamped) f.count.toInt else offset + 1
+      assert(v.map(_.getAs[Int]("rank")).toSeq == v.indices.map(_ + first), what)
+      val empty = q == "spark warpdrive" || q == "the a"
+      assert(empty || f.count > 10, what)
+      assert(v.length == (if (empty) 0 else if (clamped) 1 else (f.count - offset).min(10).toInt), what)
+    }
+  }
+
   test("searchAfter: cursor page ≡ offset page; count stays the total") {
     val p1 = engine.search("spark join", limit = 5)
     assert(p1.result && p1.data.length == 5)

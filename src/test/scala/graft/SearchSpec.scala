@@ -1073,6 +1073,8 @@ class SearchSpec extends AnyFunSuite {
   }
 
   test("decorateIds: a page's ids skip every cached corpus batch that holds none of them") {
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, TableCacheQueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     // the corpus cached in doc_id order, in batches of 100 rows
@@ -1081,15 +1083,21 @@ class SearchSpec extends AnyFunSuite {
     val c = Corpus.fromDocuments(spark, "/root/testdata/sf0.001").orderBy("doc_id").cache()
     val total = try c.count() finally spark.conf.unset(key)
     val ids = c.select("doc_id").collect().map(_.getLong(0)).sorted
-    val page = Seq(ids(3), ids(ids.length / 2))
-    val dec = Search.decorateIds(c, page, Set("spark"))
-    assert(dec.collect().map(_.getLong(0)).toSet == page.toSet)
-    val plan = dec.queryExecution.executedPlan match { case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan; case p => p }
-    val scanned = plan.collect { case q: TableCacheQueryStageExec => q.plan; case s: InMemoryTableScanExec => s }
-      .collect { case s: InMemoryTableScanExec => s.metrics("numOutputRows").value }
+    // 2 ids, and a default 20-id page from the first two batches: more than
+    // 10 ids in one `In` would be an `InSet`, which scans every batch
+    for (page <- Seq(Seq(ids(3), ids(ids.length / 2)), ids.take(10).toSeq ++ ids.slice(100, 110))) {
+      val dec = Search.decorateIds(c, page, Set("spark"))
+      assert(dec.collect().map(_.getLong(0)).toSet == page.toSet)
+      val plan = dec.queryExecution.executedPlan match { case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan; case p => p }
+      val scanned = plan.collect { case q: TableCacheQueryStageExec => q.plan; case s: InMemoryTableScanExec => s }
+        .collect { case s: InMemoryTableScanExec => s.metrics("numOutputRows").value }
+      assert(total > 400 && scanned.size == 1 && scanned.head <= 200,
+        s"a decorate of ${page.size} ids scanned $scanned of $total cached rows")
+      val conds = dec.queryExecution.optimizedPlan.collect { case f: Filter => f.condition }
+      assert(conds.flatMap(_.collect { case i: InSet => i }).isEmpty, s"a ${page.size}-id page filters with an InSet")
+      assert(conds.flatMap(_.collect { case i: In => i }).size == (page.size + 9) / 10)
+    }
     c.unpersist()
-    assert(total > 400 && scanned.size == 1 && scanned.head <= 200,
-      s"a decorate of 2 ids scanned $scanned of $total cached rows")
   }
 
   test("segmentQuery: corpus-bigram glue yields [new york][pizza] segments") {
