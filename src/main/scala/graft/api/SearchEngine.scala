@@ -672,19 +672,20 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
     val n = Search.saturatedAdd(offset, limit)
     // the count and the best n of (doc_id, score) rows by blend, in one action
     def blend(scored: DataFrame, p: (DataFrame, Double, Double)) =
-      Search.countTopK(Search.blendScores(scored, p._1, p._2, p._3).select(col("doc_id"), col("blend").as("score")), n)
+      Search.countTopK(Search.blendScores(scored, p._1, p._2, p._3)
+        .select(col("doc_id"), col("blend").as("score")), n)
     // rank tier: a committed compressed snapshot (startIndexingPersisted,
     // not yet invalidated by a mutation) serves every query through the
     // block-max WAND path with the snapshot's FROZEN stats — rank-identical
     // to the DataFrame aggregate by construction (shared formula +
     // tie-breaks; asserted in SearchEngineSpec). A site-scoped query admits
     // only its repo's docs inside the WAND loop. Otherwise the live tables
-    // answer through Search.answer.
+    // rank as Search.answer does.
     val top = snap match {
       case None =>
-        val scoped = site.fold(t.postings)(pin.sitePostings)
-        if (prior.isEmpty) return respond(Search.answer(pin.corpus, scoped, t.docStats, t.nDocs, t.avgDl, dfs, offset, limit))
-        blend(Search.conjunctiveScores(scoped, t.docStats, dfs, t.nDocs, t.avgDl), prior.get)
+        val scored = Search.conjunctiveScores(site.fold(t.postings)(pin.sitePostings),
+          t.docStats, dfs, t.nDocs, t.avgDl)
+        prior.fold(Search.countTopK(scored, n))(blend(scored, _))
       case Some(s) =>
         val admit = site match {
           case None => Wand.admitAll
@@ -705,7 +706,8 @@ class SearchEngine(spark: SparkSession, initialCorpus: DataFrame,
             // and pr ≥ 0 keep every blend at or below its BM25 score, so no
             // match outside the C ranks above the n-th). Otherwise every
             // match is blended.
-            val cands = Wand.countTopK(shards, idfs, s.meta.avgDl, math.max(math.min(8L * n, Int.MaxValue).toInt, 64), admit)
+            val cands = Wand.countTopK(shards, idfs, s.meta.avgDl,
+              math.max(math.min(8L * n, Int.MaxValue).toInt, 64), admit)
             val c = cands.ranked
             val top = blend(spark.createDataFrame(c.toSeq).toDF("doc_id", "score"), p)
             top.count = cands.count

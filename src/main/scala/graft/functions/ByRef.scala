@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{In, InSet, LeafExpression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
@@ -43,10 +44,12 @@ object ByRef {
   def inSet(c: Column, values: Iterable[Any]): Column = column(InSet(expression(c),
     scala.collection.immutable.HashSet.from(values.iterator.map { case s: String => UTF8String.fromString(s); case v => v })))
 
-  /** `c IN values` for a point lookup in a cached frame: an `In` of [[Lit]]s,
-    * which compiles once per count of values and, unlike an `InSet`, lets
-    * the cached scan skip every batch whose min/max holds none of them
-    * (Spark's OptimizeIn still makes more than 10 values an `InSet`) */
+  /** `c IN values` for a point lookup in a cached frame: an OR of `In`s of
+    * ≤ 10 [[Lit]]s each, which compiles once per count of values and,
+    * unlike the `InSet` Spark's OptimizeIn makes of a longer `In`, lets the
+    * cached scan skip every batch whose min/max holds none of them */
   def in(c: Column, values: Seq[Any]): Column =
-    column(In(expression(c), values.map { v => val l = Literal(v); new Lit(l.value, l.dataType) }))
+    values.grouped(10).map { g =>
+      column(In(expression(c), g.map { v => val l = Literal(v); new Lit(l.value, l.dataType) }))
+    }.reduceOption(_ || _).getOrElse(lit(false))
 }

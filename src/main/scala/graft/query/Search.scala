@@ -770,7 +770,8 @@ object Search {
     val hits = if (plan.isEmpty) Nil
       else answer(corpus, scopedPostings, docStats, nDocs, avgDl,
         plan.terms.map(t => t.term -> t.df).toMap, offset, limit, htmlAware).page
-    corpus.sparkSession.createDataFrame(hits).toDF("rank", "doc_id", "repo", "path", "title", "snippet", "score")
+    corpus.sparkSession.createDataFrame(hits)
+      .toDF("rank", "doc_id", "repo", "path", "title", "snippet", "score")
   }
 
   /** one decorated row of a page, ranked in the full ranking */
@@ -789,8 +790,8 @@ object Search {
   def answer(corpus: DataFrame, postings: DataFrame, docStats: DataFrame,
              nDocs: Long, avgDl: Double, dfs: Map[String, Long],
              offset: Int, limit: Int, htmlAware: Boolean = true): Answer =
-    page(corpus, countTopK(conjunctiveScores(postings, docStats, dfs, nDocs, avgDl), saturatedAdd(offset, limit)),
-      offset, limit, dfs.keySet, htmlAware)
+    page(corpus, countTopK(conjunctiveScores(postings, docStats, dfs, nDocs, avgDl),
+      saturatedAdd(offset, limit)), offset, limit, dfs.keySet, htmlAware)
 
   /** The page of a ranking that kept its best offset + limit rows: the
     * offset clamp, then ONE [[decorateIds]] scan; rank and score are
@@ -800,7 +801,8 @@ object Search {
     val (o, l) = clampPage(offset, limit, top.count)
     val ranked = top.ranked.toSeq.drop(o).take(l)
     val rows = if (ranked.isEmpty) Map.empty[Long, Row]
-      else decorateIds(corpus, ranked.map(_.docId), terms, htmlAware).collect().map(r => r.getLong(0) -> r).toMap
+      else decorateIds(corpus, ranked.map(_.docId), terms, htmlAware).collect()
+        .map(r => r.getLong(0) -> r).toMap
     Answer(top.count, ranked.zipWithIndex.flatMap { case (s, i) =>
       rows.get(s.docId).map(r => Hit(o + i + 1, s.docId, r.getString(1), r.getString(2), r.getString(3),
         r.getString(4), s.score))
@@ -840,13 +842,12 @@ object Search {
     * corpus scan (`doc_id IN ids`) → (doc_id, repo, path, title, snippet),
     * unordered. The caller attaches rank and score to the ≤ k rows, so no
     * join, exchange or distributed sort runs. The ids go in by reference
-    * as an OR of [[ByRef.in]]s of ≤ 10 ids each (Spark makes a longer `In`
-    * an `InSet`), so a page compiles once per page size and the cached
-    * corpus skips every batch whose doc_id min/max holds none of them. */
+    * through [[ByRef.in]], so a page compiles once per page size and the
+    * cached corpus skips every batch whose doc_id min/max holds none of them. */
   def decorateIds(corpus: DataFrame, ids: Seq[Long], terms: Set[String],
                   htmlAware: Boolean = true): DataFrame =
     withTitleSnippet(
-        corpus.filter(ids.grouped(10).map(ByRef.in(col("doc_id"), _)).foldLeft(lit(false))(_ || _))
+        corpus.filter(ByRef.in(col("doc_id"), ids))
           .select("doc_id", "repo", "path", "lang", "content"),
         terms, htmlAware)
       .select("doc_id", "repo", "path", "title", "snippet")
